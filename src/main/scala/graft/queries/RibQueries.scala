@@ -552,12 +552,20 @@ object RibQueries {
       re(s, dir).drop("event_id").write.mode("overwrite")
         .partitionBy("rib").parquet(tmp)
       perRib(s.read.parquet(tmp))
-    }))
+    }),
+
+    // --- enrichment (E1-E3 cache-table pattern) -------------------------
+    "q_whois_enrich" -> ((s, dir) =>
+      graft.enrich.Whois.enrichOriginAs(re(s, dir))
+        .groupBy(col("whois_org"))
+        .agg(count(lit(1)).cast("long").as("n_events"),
+          countDistinct(col("prefix_str")).cast("long").as("n_prefixes"))
+        .orderBy(col("whois_org"))))
 
   /** DuckDB mirror of RouteEventGen.fromEvents — MUST stay arithmetically
-    * identical to the generator (see graft-round1-state memory). Shared with
-    * PipelineQueries (whois enrichment oracle) so the mapping lives once. */
-  private[queries] val cte: String =
+    * identical to the generator. Every rib oracle below starts from it, so
+    * the mapping lives once. */
+  private val cte: String =
     s"""WITH reS AS (
       |  SELECT *, ((event_id>>4)+user_id)%20 AS slot FROM events
       |), re0 AS (
@@ -1478,7 +1486,13 @@ object RibQueries {
         |  CAST(SUM(CASE WHEN eid%3=0 THEN 1 ELSE 0 END) AS BIGINT) AS n_withdraws,
         |  CAST(SUM(CASE WHEN eid%2=1 THEN 65001 ELSE 200+uid%7 END) AS BIGINT) AS sum_origin_as
         |FROM m WHERE sess%3<>0
-        |GROUP BY sess ORDER BY peer_as""".stripMargin)
+        |GROUP BY sess ORDER BY peer_as""".stripMargin,
+    "q_whois_enrich" -> (cte +
+      """SELECT 'AS'||(CASE WHEN eid%2=1 THEN 65001 ELSE a2 END)
+        |    ||'-ORG-'||((CASE WHEN eid%2=1 THEN 65001 ELSE a2 END)%2) AS whois_org,
+        |  COUNT(*) AS n_events,
+        |  COUNT(DISTINCT prefix_str) AS n_prefixes
+        |FROM re GROUP BY 1 ORDER BY 1""".stripMargin))
 
   private val decomposeOracle: String =
       """WITH m AS (

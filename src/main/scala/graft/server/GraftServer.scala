@@ -174,12 +174,19 @@ final class GraftServer(routes: ServerRoutes, host: String = "127.0.0.1",
   // ------------------------------------------------------------- routes
 
   /** `/api/statistics|sessions|state|json/<rib>` plus the round-17
-    * security reports (`moas|rpki|leaks|bogons`) → [[Api.handle]]. */
+    * security reports (`moas|rpki|leaks|bogons`) → [[Api.handle]]. A
+    * failure inside the route (the events supplier, a Spark job) answers
+    * 500 with the `whoisRoute` error shape instead of dropping the socket. */
   private def ribRoute(path: String): Array[Byte] =
-    Api.handle(routes.events(), path, routes.state(), routes.roas()) match {
-      case Some(doc) =>
-        HttpWire.response(200, doc.getBytes(UTF_8), Some("text/json"))
-      case None => HttpWire.response(404, NotFound)
+    try {
+      Api.handle(routes.events(), path, routes.state(), routes.roas()) match {
+        case Some(doc) =>
+          HttpWire.response(200, doc.getBytes(UTF_8), Some("text/json"))
+        case None => HttpWire.response(404, NotFound)
+      }
+    } catch {
+      case e: Exception =>
+        HttpWire.response(500, s"Error: $e".getBytes(UTF_8), Some("text/plain"))
     }
 
   /** `/api/whois/<kind>?query=..` and `/api/dns/<target>` — the routing,

@@ -19,10 +19,9 @@ import org.apache.spark.sql.types._
   * `spark.readStream` exactly as SURVEY §2.1 prescribes.
   *
   * Spark-first shape: decode runs in `mapPartitions` — iterator in,
-  * iterator out, schema-typed rows, partitioning preserved — the same
-  * batch-decode shape as the multimodal pipeline (the one place imperative
-  * byte code beats Column expressions). No driver involvement, no shuffle:
-  * cost scales with input bytes.
+  * iterator out, schema-typed rows, partitioning preserved (the one place
+  * imperative byte code beats Column expressions). No driver involvement,
+  * no shuffle: cost scales with input bytes.
   *
   * The ENCODER exists so the whole wire path is falsifiable: the
   * `q_wire_decompose` oracle query round-trips the deterministic message

@@ -14,7 +14,7 @@ import graft.queries.Tables
   * v4/v6/multicast prefixes and the full attribute record.
   *
   * Every derived value is integer arithmetic on (event_id, user_id) so the
-  * DuckDB oracle (RibQueries.OracleCte) can mirror it exactly — the oracle
+  * DuckDB oracle (RibQueries.cte) can mirror it exactly — the oracle
   * computes filter results directly from the arithmetic while the engine
   * goes through parse → compile → tri-state evaluation, which is exactly
   * what makes the hash compare a real semantics check.

@@ -276,164 +276,6 @@ object Feed {
       .agg(count(lit(1)).as("n_events"),
         approx_count_distinct(col("prefix_str")).as("n_prefixes"))
 
-  /** ST8: streaming exact dedup — admit a document only on the first
-    * arrival of its content fingerprint within the watermark horizon
-    * (`dropDuplicatesWithinWatermark`): the streaming face of the
-    * pipeline's exact dedup (Dedup.exact). The watermark bounds the state
-    * store — fingerprints older than the horizon are evicted, which is
-    * what makes indefinite ingest feasible; re-arrivals beyond the horizon
-    * are the documented residual (the production pattern: streaming dedup
-    * bounds state, the periodic batch dedup pass sweeps the tail). */
-  def dedupStream(docStream: DataFrame, textCol: String,
-      tsCol: String = "ts", watermark: String = "10 minutes"): DataFrame =
-    docStream
-      .withColumn("__fp", graft.pipeline.TextAnalysis.fingerprint(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp")
-
-  /** ST11 (round 10): streaming EMBEDDING near-duplicate gate — the
-    * vector analogue of [[dedupStream]]. Keys the watermarked dedup on
-    * the full random-hyperplane signature
-    * (Similarity.rhpSignature): two vectors share the key only when all
-    * `planes` sign bits agree, so the gate drops re-arrivals of the same
-    * embedding direction (re-encodes, exact re-embeds, direction-
-    * preserving rescales that survive quantization) while state stays one
-    * long per admitted signature, bounded by the watermark horizon.
-    *
-    * Recall split, stated honestly: a boundary near-duplicate (cosine
-    * just above a batch threshold, expected `planes`·θ/π flipped bits)
-    * usually does NOT share the full signature and passes the gate —
-    * by design. Corpus-level near-dup semantics (cosineNearDup banding,
-    * semanticDedup) need candidate JOINS, which have no bounded-state
-    * streaming form; they run in the periodic batch sweep over the
-    * already-thinned log — the same lambda split as ST10. False drops
-    * (distinct directions colliding on all bits) are ~Π(θᵢ/π-complements)
-    * ≈ 2^-planes for unrelated vectors — and this rate is REAL only
-    * because the plane mixer is decorrelated (SCALE.md round 10: the old
-    * weights had identical planes at lag 52, an effective ceiling of
-    * ~52 independent bits).
-    *
-    * Rows WITHOUT a usable embedding (null vector, null element, empty
-    * array) have no signature key and PASS the gate un-deduped: the
-    * signature maps every such row to the same constant, so keying the
-    * dedup on it would silently collapse all embedder-failure rows into
-    * one — data loss the batch sweep could never recover (the batch
-    * near-dup passes never pair unembeddable rows either, so the
-    * lambda-split parity holds). */
-  def nearDupGateStream(docStream: DataFrame, vecCol: String,
-      planes: Int = 64, tsCol: String = "ts",
-      watermark: String = "10 minutes"): DataFrame = {
-    val usable = col(vecCol).isNotNull && size(col(vecCol)) > 0 &&
-      !exists(col(vecCol), x => x.isNull)
-    val gated = docStream.where(usable)
-      .withColumn("__vsig",
-        graft.pipeline.Similarity.rhpSignature(col(vecCol), planes))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__vsig")
-      .drop("__vsig")
-    gated.unionByName(docStream.where(!coalesce(usable, lit(false))))
-  }
-
-  /** ST19 (round 17): streaming URL-keyed dedup gate — the live face of
-    * [[graft.pipeline.Dedup.urlDedup]] (Dolma's url-dedup stage AHEAD of
-    * content dedup): the first arrival per NORMALIZED URL inside the
-    * watermark horizon passes, later fetches of the same page drop at
-    * the ingest edge before any text work reaches [[dedupStream]] /
-    * [[nearDupGateStream]] downstream — the cheapest gate a crawl feed
-    * can run, and the natural FIRST stage of the streaming gate chain.
-    *
-    * Normalization is the batch operator's own column
-    * ([[graft.pipeline.Dedup.urlNorm]] — the two faces cannot drift).
-    * Docs with a NULL/blank URL carry no provenance key and PASS the
-    * gate un-deduped (the nearDupGateStream posture: keying them on a
-    * shared constant would silently collapse every URL-less doc into
-    * one). State = one entry per distinct normalized URL inside the
-    * watermark horizon.
-    *
-    * Election split, stated honestly: the stream keeps FIRST-ARRIVAL
-    * where the batch pass keeps min-id — under the ST12 in-order
-    * arrival discipline (ids ascend with arrival) the two agree
-    * exactly, and the periodic batch sweep owns the global canonical
-    * election regardless (the ST10 lambda split). */
-  def urlDedupStream(docStream: DataFrame, urlCol: String,
-      tsCol: String = "ts", watermark: String = "10 minutes"): DataFrame = {
-    val usable = col(urlCol).isNotNull && trim(col(urlCol)) =!= ""
-    val gated = docStream.where(usable)
-      .withColumn("__unorm", graft.pipeline.Dedup.urlNorm(col(urlCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__unorm")
-      .drop("__unorm")
-    gated.unionByName(docStream.where(!coalesce(usable, lit(false))))
-  }
-
-  /** ST13 (round 12): streaming trending-template detection — the live
-    * face of [[graft.pipeline.TextAnalysis.frequentPhrases]]: per
-    * event-time window, count each document n-gram and emit
-    * (window, phrase, n) for phrases reaching `minCount` inside the
-    * window — the "a template just started flooding the feed" alarm
-    * (spam bursts, scraped-mirror ingest, a misbehaving upstream).
-    *
-    * A plain watermarked windowed aggregation: per-window phrase
-    * cardinality is bounded by that window's arrival volume, and the
-    * watermark evicts closed windows, so state stays finite on an
-    * unbounded stream — no Misra–Gries needed HERE (the sketch earns its
-    * keep in the batch sweep where the key space is the whole corpus).
-    * `minCount` is an absolute per-window threshold: a φ-fraction
-    * threshold needs the window's total in the same emission, which a
-    * single streaming aggregation cannot see before the window closes —
-    * relative thresholds stay in the batch pass (the ST10 lambda split). */
-  def hotPhrasesStream(docStream: DataFrame, textCol: String,
-      minCount: Long, n: Int = 3, windowDur: String = "1 minute",
-      watermark: String = "2 minutes", tsCol: String = "ts"): DataFrame = {
-    val words = graft.pipeline.TextAnalysis.splitWords(col(textCol))
-    docStream
-      .select(col(tsCol),
-        explode(graft.pipeline.TextAnalysis.phrasesFromWords(words, n))
-          .as("phrase"))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur).as("w"), col("phrase"))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") >= minCount)
-  }
-
-  /** ST10: the curation chain as a STREAM — the per-record gates of
-    * `Curate.curate` applied at ingest time: markup strip → heuristic
-    * quality gate → hashed-linear classifier gate → watermarked exact
-    * dedup → PII redaction → deterministic sampling. Every stage except
-    * the dedup is a stateless scan-level Column (they apply to a stream
-    * unchanged); the dedup is `dropDuplicatesWithinWatermark` on the
-    * content fingerprint, so its state store stays bounded by the
-    * watermark horizon.
-    *
-    * Deliberately NOT in the stream: the within-doc repetition cap and
-    * every corpus-global signal (boilerplate, line dedup, clustering) —
-    * the standard lambda split: per-record gates run at ingest, while
-    * quadratic/corpus-wide passes run in the periodic batch sweep
-    * ([[compact]] is the scheduling hook) over the already-thinned log.
-    * Streaming dedup admits the FIRST ARRIVAL of a fingerprint (batch
-    * canon elects min-id); re-arrivals beyond the horizon are the ST8
-    * residual the batch sweep collects. */
-  def curateStream(docStream: DataFrame, idCol: String, textCol: String,
-      classifier: Option[(Seq[Int], Long)] = None,
-      samplePermille: Int = 1000, salt: String = "cur",
-      tsCol: String = "ts", watermark: String = "10 minutes"): DataFrame = {
-    import graft.pipeline.{Sampling, TextAnalysis}
-    val stripped = docStream.withColumn(textCol,
-      TextAnalysis.strippedText(col(textCol)))
-    val gated = stripped.where(TextAnalysis.qualityKeep(col(textCol)))
-    val qualified = classifier match {
-      case Some((w, thr)) =>
-        gated.where(TextAnalysis.classifierKeep(col(textCol), w, thr))
-      case None => gated
-    }
-    val deduped = dedupStream(qualified, textCol, tsCol, watermark)
-    val redacted = deduped
-      .withColumn("redacted", TextAnalysis.redactPii(col(textCol)))
-      .withColumn("n_red", TextAnalysis.redactionCount(col(textCol)))
-    Sampling.sample(redacted, idCol, samplePermille, salt)
-  }
-
   /** ST9: the BMP per-peer dispatch as STREAMING custom state — the live
     * form of `BgpSession.dispatchUpdates`. The reference keeps a `sessids`
     * map per BMP connection (src/bmppeer.rs:12): a PeerUp registers the

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract guards: the flagship query smoke-checks, every oracle
-  * key has a matching query, and query names stay stable. */
+  * key has a matching query, and the query names stay exactly as listed. */
 class SparkEntrySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -17,9 +17,41 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("query inventory size") {
-    // 71 oracle-checked + 4 rows-only entries (round 3); a drop means a
-    // silently lost operator registration
-    assert(SparkEntry.oracleSql.size >= 74)
-    assert(SparkEntry.queries.size >= 78)
+    // the exact registry: a lost or stray registration fails here by name
+    val expected = Set(
+      "q1_agg", "q_events_anomalies", "q_events_daily", "q_events_sessions",
+      "q_filter_pushdown", "q_ingest_decompose", "q_join_parts_topn",
+      "q_join_revenue", "q_pagination", "q_rib_aggregatable",
+      "q_rib_aggregate", "q_rib_as_adjacency", "q_rib_as_cone",
+      "q_rib_as_rels", "q_rib_asof", "q_rib_asof_join",
+      "q_rib_bogon_nexthops", "q_rib_bogons", "q_rib_communities",
+      "q_rib_convergence", "q_rib_current", "q_rib_diff",
+      "q_rib_evpn_fields", "q_rib_exists", "q_rib_filter_aspath",
+      "q_rib_filter_aspath_ends", "q_rib_filter_community",
+      "q_rib_filter_conj", "q_rib_filter_evpn_rd", "q_rib_filter_mdt_group",
+      "q_rib_filter_mdt_rd", "q_rib_filter_multicast",
+      "q_rib_filter_mvpn_group", "q_rib_filter_mvpn_rp", "q_rib_filter_nh",
+      "q_rib_filter_num", "q_rib_filter_polarity", "q_rib_filter_rd",
+      "q_rib_filter_rd_exotic", "q_rib_filter_regex",
+      "q_rib_filter_regex_attr", "q_rib_filter_regex_v6", "q_rib_filter_rt",
+      "q_rib_filter_rt_num", "q_rib_filter_spmsi_rd", "q_rib_filter_subnet",
+      "q_rib_filter_v6", "q_rib_filter_v6_multicast", "q_rib_filter_vpn6_rd",
+      "q_rib_flap_damp", "q_rib_flaps", "q_rib_found", "q_rib_hegemony",
+      "q_rib_json_page", "q_rib_lpm", "q_rib_moas", "q_rib_onlydiffer",
+      "q_rib_origin_as", "q_rib_origin_changes", "q_rib_pagination",
+      "q_rib_prepending", "q_rib_rels_drift", "q_rib_response_filter",
+      "q_rib_retention", "q_rib_route_leaks", "q_rib_rpki", "q_rib_scopes",
+      "q_rib_sessions", "q_rib_snapshot", "q_rib_sql_accept",
+      "q_rib_statistics", "q_rib_stores", "q_rib_supernet",
+      "q_rib_supernet_topk", "q_rib_visibility", "q_semi_anti",
+      "q_whois_enrich", "q_window_toporder", "q_wire_attrs",
+      "q_wire_decompose", "q_wire_sessions")
+    assert(expected.size == 81)
+    assert(SparkEntry.queries.keySet == expected,
+      s"missing ${expected -- SparkEntry.queries.keySet}, " +
+        s"extra ${SparkEntry.queries.keySet -- expected}")
+    assert(SparkEntry.oracleSql.keySet == expected,
+      s"missing ${expected -- SparkEntry.oracleSql.keySet}, " +
+        s"extra ${SparkEntry.oracleSql.keySet -- expected}")
   }
 }

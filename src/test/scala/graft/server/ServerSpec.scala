@@ -133,6 +133,33 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a failing rib route answers 500 text/plain; a malformed head drops") {
+    // raw socket: the whole reply up to EOF, so a dropped socket reads ""
+    def exchange(port: Int, request: String): String = {
+      val sock = new Socket("127.0.0.1", port)
+      sock.setSoTimeout(30000)
+      try {
+        sock.getOutputStream.write(request.getBytes(UTF_8))
+        sock.getOutputStream.flush()
+        new String(sock.getInputStream.readAllBytes(), UTF_8)
+      } finally sock.close()
+    }
+    val routes = ServerRoutes(
+      events = () => throw new IllegalStateException("log unavailable"))
+    withServer(routes) { port =>
+      val reply = exchange(port,
+        "GET /api/json/ipv4u?limit=5 HTTP/1.1\r\nHost: x\r\n\r\n")
+      assert(reply.startsWith("HTTP/1.1 500 "), reply)
+      assert(reply.contains("Content-type: text/plain\r\n"), reply)
+      assert(reply.endsWith(
+        "\r\n\r\nError: java.lang.IllegalStateException: log unavailable"),
+        reply)
+      // routes that never touch the log are unaffected
+      assert(get(port, "/api/ping") == (200, "pong"))
+      assert(exchange(port, "NOT-HTTP\r\n\r\n") == "")
+    }
+  }
+
   test("static files: / → index.html, nested paths, traversal stays inside") {
     val root = Files.createTempDirectory("graft_www")
     Files.writeString(root.resolve("index.html"), "<html>graft</html>")

@@ -237,364 +237,6 @@ class FeedSpec extends AnyFunSuite {
     assert(streamed.toSeq == batch.toSeq)
   }
 
-  test("ST8 streaming dedup admits exactly one doc per fingerprint") {
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val docs = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // plant exact duplicates under fresh ids so the stream must drop them
-    val dups = docs.limit(40)
-      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-    val all = docs.unionByName(dups)
-      .withColumn("ts",
-        timestamp_millis(lit(1700000000000L) + col("doc_id") % 1000))
-    all.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.dedupStream(stream, "text")
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val fp = graft.pipeline.TextAnalysis.fingerprint(col("text"))
-    val streamed = spark.sql("SELECT text FROM dedup_stream")
-      .select(fp).as[Long].collect()
-    val batch = all.select(fp).distinct().as[Long].collect()
-    assert(streamed.nonEmpty)
-    assert(streamed.length == streamed.toSet.size) // no fingerprint twice
-    assert(streamed.toSet == batch.toSet) // nothing lost vs batch dedup
-  }
-
-  test("ST19 streaming URL dedup keeps one doc per normalized URL; URL-less pass") {
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val id = col("doc_id")
-    // the q_dedup_url construction: 20 URL classes × scheme/www/slash/
-    // fragment variants, every 7th doc URL-less (every 13th of those
-    // BLANK, not null — both spellings of "no provenance key")
-    val url = when(id % 7 === 0,
-        when(id % 13 === 0, lit("  ")).otherwise(lit(null).cast("string")))
-      .otherwise(concat(
-        when(id % 3 === 0, lit("http://")).otherwise(lit("https://")),
-        when(id % 2 === 0, lit("www.")).otherwise(lit("")),
-        lit("ex"), (id % 4).cast("string"), lit(".com/p/"),
-        (id % 5).cast("string"),
-        when(id % 4 === 0, lit("/")).otherwise(lit("")),
-        when(id % 6 === 0, lit("#s")).otherwise(lit(""))))
-    val docs = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"), url.as("url"))
-      .withColumn("ts",
-        timestamp_millis(lit(1700000000000L) + col("doc_id") % 1000))
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.urlDedupStream(stream, "url")
-      .writeStream.format("memory").queryName("url_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.sql("SELECT doc_id, url FROM url_stream")
-    val hasUrl = col("url").isNotNull && trim(col("url")) =!= ""
-    val streamedNorms = out.where(hasUrl)
-      .select(graft.pipeline.Dedup.urlNorm(col("url")))
-      .as[String].collect()
-    assert(streamedNorms.nonEmpty)
-    assert(streamedNorms.length == streamedNorms.toSet.size,
-      "one admission per normalized URL")
-    // the admitted URL-class SET equals the batch operator's keep set
-    // (first-arrival vs min-id elect the same classes; members may
-    // differ, the classes cannot)
-    val batchNorms = graft.pipeline.Dedup.urlDedup(docs, "doc_id", "url")
-      .where(col("keep") && col("url_norm").isNotNull)
-      .select("url_norm").as[String].collect().toSet
-    assert(streamedNorms.toSet == batchNorms)
-    // every URL-less doc (null AND blank) passes un-deduped
-    val streamedNoUrl = out.where(!hasUrl).select("doc_id")
-      .as[Long].collect().toSet
-    val batchNoUrl = docs.where(!hasUrl).select("doc_id")
-      .as[Long].collect().toSet
-    assert(streamedNoUrl == batchNoUrl && batchNoUrl.nonEmpty)
-  }
-
-  test("ST11 streaming embedding near-dup gate admits one doc per signature") {
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val vecs = spark.read.parquet(s"$srcSf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    // re-arrivals of the same embedding under fresh ids: the gate must
-    // drop them; distinct directions must all pass; rows WITHOUT a usable
-    // embedding (null vector / empty array) must ALL pass un-deduped —
-    // the signature maps every such row to one constant, and keying the
-    // dedup on it would collapse unrelated embedder-failure rows
-    val dups = vecs.limit(25)
-      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-    val unusable = vecs.limit(7)
-      .select((col("vec_id") + 200000L).as("vec_id"),
-        when(col("vec_id") % 2 === 0, lit(null))
-          .otherwise(array().cast("array<float>")).as("embedding"))
-    val all = vecs.unionByName(dups).unionByName(unusable)
-      .withColumn("ts",
-        timestamp_millis(lit(1700000000000L) + col("vec_id") % 1000))
-    all.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.nearDupGateStream(stream, "embedding")
-      .writeStream.format("memory").queryName("neardup_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val sig = graft.pipeline.Similarity.rhpSignature(col("embedding"), 64)
-    val out = spark.table("neardup_stream")
-    // usable rows: one admitted per signature, none lost vs batch distinct
-    val streamed = out.where(col("vec_id") < 200000L)
-      .select(sig).as[Long].collect()
-    val batch = all.where(col("vec_id") < 200000L)
-      .select(sig).distinct().as[Long].collect()
-    assert(streamed.nonEmpty)
-    assert(streamed.length == streamed.toSet.size) // no signature admitted twice
-    assert(streamed.toSet == batch.toSet) // nothing lost vs batch distinct
-    // the planted re-arrivals were actually dropped (gate did real work)
-    assert(streamed.length < all.where(col("vec_id") < 200000L).count())
-    // unusable rows (null / empty embedding) ALL pass un-deduped
-    val passed = out.where(col("vec_id") >= 200000L)
-      .select(col("vec_id")).as[Long].collect().sorted
-    val planted = unusable.select(col("vec_id")).as[Long].collect().sorted
-    assert(passed.toSeq == planted.toSeq,
-      s"unusable rows collapsed: ${passed.length} of ${planted.length} passed")
-  }
-
-  test("ST13 windowed hot-phrase alarm equals the batch windowed counts") {
-    val stage = tmp()
-    val docs = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // minute 0 docs all carry a template burst; minutes 1-2 stay clean
-    val stamped = docs
-      .withColumn("ts", timestamp_millis(
-        lit(1700000000000L) + (col("doc_id") % 3) * 60000L))
-      .withColumn("text", when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit(" act now save big")))
-        .otherwise(col("text")))
-    stamped.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(stamped.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.hotPhrasesStream(stream, "text", minCount = 12L)
-      .writeStream.format("memory").queryName("hot_phrases")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      "SELECT w.start AS ws, phrase, n FROM hot_phrases")
-      .collect().map(_.toString).sorted.toSeq
-    // independent batch model of the same windowed count + threshold
-    // (split bound once as a column so the model can't drift on re-eval)
-    val batchRows = stamped
-      .withColumn("__w", split(trim(col("text")), "\\s+"))
-      .select(col("ts"), explode(when(size(col("__w")) >= 3,
-        transform(sequence(lit(1), size(col("__w")) - 2),
-          i => concat_ws(" ", element_at(col("__w"), i),
-            element_at(col("__w"), i + 1), element_at(col("__w"), i + 2))))
-        .otherwise(array().cast("array<string>"))).as("phrase"))
-      .groupBy(window(col("ts"), "1 minute").as("w"), col("phrase"))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") >= 12L)
-      .select(col("w.start").as("ws"), col("phrase"), col("n"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed.nonEmpty)
-    assert(streamed == batchRows)
-    // the burst phrases alarm in the burst window only
-    val hot = spark.sql("SELECT DISTINCT phrase FROM hot_phrases")
-      .collect().map(_.getString(0)).toSet
-    assert(hot.contains("act now save") && hot.contains("now save big"))
-    val wins = spark.sql(
-      "SELECT DISTINCT w.start FROM hot_phrases WHERE phrase = 'act now save'")
-      .collect()
-    assert(wins.length == 1)
-  }
-
-  test("ST10 streamed curation chain matches the batch gate set") {
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val w = (0 until 64).map(b => (b * 37 + 11) % 7)
-    // plant markup + an exact duplicate set so every stream stage has work
-    val docs = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"),
-        concat(when(col("doc_id") % 4 === 0, lit("<p>")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 4 === 0, lit("</p>")).otherwise(lit("")))
-          .as("text"))
-    val dups = docs.limit(30)
-      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-    val all = docs.unionByName(dups)
-      .withColumn("ts",
-        timestamp_millis(lit(1700000000000L) + col("doc_id") % 1000))
-    all.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.curateStream(stream, "doc_id", "text",
-        classifier = Some((w, 3000L)), samplePermille = 800)
-      .writeStream.format("memory").queryName("curate_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.sql("SELECT doc_id, text, redacted, n_red FROM curate_stream")
-    // batch reference over the SAME per-record gates: strip → quality →
-    // classifier → exact dedup (fingerprint set equality — arrival order
-    // vs min-id canon may elect different members) → sample
-    val strippedB = all.withColumn("text",
-      graft.pipeline.TextAnalysis.strippedText(col("text")))
-    val batchGated = strippedB
-      .where(graft.pipeline.TextAnalysis.qualityKeep(col("text")))
-      .where(graft.pipeline.TextAnalysis.classifierKeep(col("text"), w, 3000L))
-    val fp = graft.pipeline.TextAnalysis.fingerprint(col("text"))
-    // sampling keys on doc_id, and duplicate PAIRS straddle the sample
-    // predicate — compare the fingerprint sets of the sample-surviving
-    // equivalence classes: a class survives iff its streamed
-    // representative passed, so restrict both sides to classes whose
-    // BOTH members sample in (planted pairs: id and id+100000)
-    val sampleOk = graft.pipeline.Sampling
-      .samplePermille(col("doc_id"), "cur") < 800
-    val streamedFps = out.select(fp).as[Long].collect().toSet
-    val batchKeptFps = batchGated.where(sampleOk).select(fp)
-      .as[Long].collect().toSet
-    val batchAllFps = batchGated.select(fp).as[Long].collect().toSet
-    // every streamed row passed every gate: its fp is in the batch gate set
-    assert(streamedFps.nonEmpty && streamedFps.subsetOf(batchAllFps))
-    // no fingerprint admitted twice
-    val streamedAll = out.select(fp).as[Long].collect()
-    assert(streamedAll.length == streamedAll.toSet.size)
-    // classes where sampling cannot disagree (both members in): present
-    val bothIn = batchGated.where(sampleOk)
-      .groupBy(fp.as("f")).agg(count(lit(1)).as("n"))
-      .join(batchGated.groupBy(fp.as("f")).agg(count(lit(1)).as("m")),
-        "f")
-      .where(col("n") === col("m")).select(col("f")).as[Long].collect().toSet
-    assert(bothIn.subsetOf(streamedFps))
-    // redaction columns materialized on the stream
-    assert(out.columns.contains("redacted") && out.columns.contains("n_red"))
-    assert(batchKeptFps.nonEmpty)
-  }
-
-  test("ST10 whole-chain parity: stream + batch sweep equals batch curate") {
-    // The lambda-split contract, end to end: the streamed chain admits
-    // per-record survivors at ingest (repetition cap and corpus-global
-    // passes deliberately deferred), a WATERMARK RESIDUAL re-admits late
-    // re-arrivals whose fingerprint state was evicted, and the periodic
-    // batch sweep (re-dedup + the deferred repetition cap) collects both.
-    // Assert: sweep(stream output) ≡ Curate.curate over the same corpus,
-    // as fingerprint sets (min-id vs first-arrival canon may elect
-    // different members of a class; content classes must agree exactly).
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val w = (0 until 64).map(b => (b * 37 + 11) % 7)
-    val t0 = 1700000000000L
-    val hour2 = 7200000L
-    val base = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // wave 1: the corpus at t0
-    val wave1 = base.withColumn("ts",
-      timestamp_millis(lit(t0) + col("doc_id") % 1000))
-    // wave 2: distinct content two hours later — advances the watermark
-    // past wave 1's event times so their dedup state evicts at batch end
-    val wave2 = base.limit(20)
-      .select((col("doc_id") + 200000L).as("doc_id"),
-        concat(col("text"), lit(" wavetwo marker")).as("text"))
-      .withColumn("ts", timestamp_millis(lit(t0 + hour2)))
-    // wave 2b: more distinct content one batch later — the watermark
-    // advance from wave 2 is only VISIBLE to the next micro-batch, and
-    // state eviction runs at batch maintenance, so an intermediate batch
-    // guarantees wave 1's dedup state is gone before the re-arrivals
-    val wave2b = base.limit(20)
-      .select((col("doc_id") + 300000L).as("doc_id"),
-        concat(col("text"), lit(" wavetwob marker")).as("text"))
-      .withColumn("ts", timestamp_millis(lit(t0 + hour2 + 1000L)))
-    // wave 3: exact duplicates of wave-1 docs arriving AFTER eviction —
-    // the engineered late re-arrivals the sweep must collect
-    val wave3 = base.limit(40)
-      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
-      .withColumn("ts", timestamp_millis(lit(t0 + hour2 + 2000L)))
-    // appends with strictly increasing mtimes: FileStreamSource
-    // processes oldest-first, and maxFilesPerTrigger=1 keeps the waves in
-    // separate micro-batches (watermark updates/evictions are batch-edge)
-    wave1.repartition(2).write.mode("overwrite").parquet(stage)
-    Thread.sleep(1100)
-    wave2.repartition(1).write.mode("append").parquet(stage)
-    Thread.sleep(1100)
-    wave2b.repartition(1).write.mode("append").parquet(stage)
-    Thread.sleep(1100)
-    wave3.repartition(1).write.mode("append").parquet(stage)
-    val all = wave1.unionByName(wave2).unionByName(wave2b).unionByName(wave3)
-    val stream = spark.readStream.schema(all.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = Feed.curateStream(stream, "doc_id", "text",
-        classifier = Some((w, 3000L)), samplePermille = 1000,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("chain_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val fp = graft.pipeline.TextAnalysis.fingerprint(col("text"))
-    val streamOut = spark.sql("SELECT doc_id, text FROM chain_stream")
-    // the residual is REAL in this arrangement: at least one wave-1
-    // fingerprint was admitted again from wave 3 after state eviction
-    val streamedAll = streamOut.select(fp).as[Long].collect()
-    assert(streamedAll.length > streamedAll.toSet.size,
-      "expected a watermark residual (late re-arrival re-admitted)")
-    // batch sweep over the streamed log: min-id re-dedup + the deferred
-    // repetition cap — exactly what compact() schedules over the thinned
-    // corpus
-    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(fp)
-    val reDeduped = streamOut
-      .withColumn("__keep", min(col("doc_id")).over(byFp))
-      .where(col("__keep") === col("doc_id")).drop("__keep")
-    val rep = graft.pipeline.TextAnalysis.repetitionByDoc(
-      reDeduped, "doc_id", "text")
-      .where(col("repetition_x1000") <= 300)
-    val swept = reDeduped.join(rep, col("doc_id") === rep("id")).drop("id")
-    // batch reference: strip (the stream's stage 1), then the full chain
-    val strippedB = all.withColumn("text",
-      graft.pipeline.TextAnalysis.strippedText(col("text")))
-    val batchOut = graft.pipeline.Curate.curate(strippedB, "doc_id", "text",
-      classifier = Some((w, 3000L)), samplePermille = 1000)
-    val sweptFps = swept.select(fp).as[Long].collect().toSet
-    val batchFps = batchOut.select(fp).as[Long].collect().toSet
-    assert(sweptFps.nonEmpty)
-    assert(sweptFps == batchFps,
-      s"stream∪sweep=${sweptFps.size} vs batch=${batchFps.size}; " +
-        s"onlyStream=${(sweptFps -- batchFps).size} onlyBatch=${(batchFps -- sweptFps).size}")
-  }
-
-  test("ST: streamed classifier gate admits exactly the batch keep set") {
-    val s = spark
-    import s.implicits._
-    val stage = tmp()
-    val w = (0 until 64).map(b => (b * 37 + 11) % 7)
-    val docs = spark.read.parquet(s"$srcSf/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    // the gate is stateless (model is an array literal), so it applies to
-    // a stream unchanged — same Column, no watermark, no state store
-    val q = stream
-      .where(graft.pipeline.TextAnalysis.classifierKeep(col("text"), w, 3000L))
-      .writeStream.format("memory").queryName("clf_gate")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql("SELECT doc_id FROM clf_gate")
-      .as[Long].collect().toSet
-    val batch = docs
-      .where(graft.pipeline.TextAnalysis.classifierKeep(col("text"), w, 3000L))
-      .select("doc_id").as[Long].collect().toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty && streamed.size < docs.count())
-  }
-
   test("event frames match the reference's two WS shapes; client cmd parses") {
     val events = graft.queries.Tables(spark, srcSf, "events")
     val re = graft.sources.RouteEventGen.fromEvents(events)
