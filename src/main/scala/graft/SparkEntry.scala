@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see SURVEY.md §7 and FIXTURES.md.
   *
   * `queries` is the operator registry: one entry per implemented operator
-  * from SURVEY.md §2; `oracleSql` holds the DuckDB-equivalent SQL for
-  * every hash-checkable entry. Column names and row order are aligned on
-  * both sides (see RelationalQueries scaladoc for the output discipline).
+  * from SURVEY.md §2 (plus the training-data pipeline operators); `oracleSql`
+  * holds the DuckDB-equivalent SQL for every hash-checkable entry. Column
+  * names and row order are aligned on both sides (see RelationalQueries
+  * scaladoc for the output discipline).
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -16,9 +17,11 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.RelationalQueries.queries ++
-      graft.queries.RibQueries.queries
+      graft.queries.RibQueries.queries ++
+      graft.queries.PipelineQueries.queries
 
   def oracleSql: Map[String, String] =
     graft.queries.RelationalQueries.oracleSql ++
-      graft.queries.RibQueries.oracleSql
+      graft.queries.RibQueries.oracleSql ++
+      graft.queries.PipelineQueries.oracleSql
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query subset (fast iteration on
-    // one oracle without paying the full dump)
+    // one oracle without paying the full 100+-query dump)
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
@@ -22,6 +22,9 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // let data-dependent oracle generators (IVF centroid literals) train on
+    // the same fixture the queries run against
+    graft.queries.PipelineQueries.oracleContext = Some((spark, sfDir))
     new java.io.File(outDir).mkdirs()
     // Error rows are an artifact, not just stderr (VERDICT r8 item 3): a
     // query that fails to dump must leave a machine-readable trace next to

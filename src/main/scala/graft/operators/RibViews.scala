@@ -292,8 +292,9 @@ object RibViews {
   /** Valley-free route-leak audit — the classic looking-glass analytic:
     * with relationships from [[asRelationships]] (or a caller-pinned
     * `rels` table — production refreshes the inference periodically and
-    * audits each day's paths against the frozen table), every path edge
-    * maps to a direction — `down` when traversed provider→customer, `up` for
+    * audits each day's paths against the frozen table, the same frozen-
+    * index discipline as Dedup.dedupAgainstIndex), every path edge maps
+    * to a direction — `down` when traversed provider→customer, `up` for
     * customer→provider, `flat` for siblings — and a LEAK is any `up`
     * strictly after a `down` (a route learned from a provider re-exported
     * to another provider; siblings never break the valley). Returns one
@@ -358,7 +359,8 @@ object RibViews {
   }
 
   /** Relationship drift between a FROZEN [[asRelationships]] inference
-    * (epoch N — the standing table production audits against) and a fresh
+    * (epoch N — the standing table production audits against, the same
+    * frozen-index discipline as Dedup.dedupAgainstIndex) and a fresh
     * re-inference (epoch N+1): one row per unordered adjacency present
     * in either table, with `status`:
     *

@@ -175,11 +175,9 @@ object Dedup {
     * exchange is the min-window on `url_norm` — hash-partitioned by URL,
     * no global sort, no join. URL keys are near-unique by construction
     * so skew needs no salting. */
-  /** The [[urlDedup]] normalization as a standalone column — shared with
-    * the streaming gate ([[graft.streaming.Feed.urlDedupStream]]) so the
-    * two faces can never drift. NULL/blank input → NULL (no provenance
-    * key). */
-  def urlNorm(url: Column): Column = {
+  /** The [[urlDedup]] normalization as a standalone column. NULL/blank
+    * input → NULL (no provenance key). */
+  private def urlNorm(url: Column): Column = {
     val norm = regexp_replace(
       regexp_replace(
         regexp_replace(
@@ -195,7 +193,7 @@ object Dedup {
     // null by contract), so route them AROUND the url_norm exchange:
     // on a crawl corpus where URL-less docs are common, hashing them
     // all to the single NULL partition is exactly the skew the keyed
-    // path is designed to avoid (mirrors urlDedupStream's NULL gate).
+    // path is designed to avoid.
     val normed = df.select(col(idCol).as("id"),
       urlNorm(col(urlCol)).as("url_norm"))
     val keyed = normed.where(col("url_norm").isNotNull)
@@ -1349,9 +1347,8 @@ object Dedup {
     * the consumers out from the materialized frame, instead of letting
     * each consumer re-run the LSH join + label propagation. The engine's
     * independent bench queries deliberately re-run the chain (each is a
-    * self-contained oracle); a production pipeline should not —
-    * [[graft.tools.PipelineDemo]] step "clusters-materialized" shows the
-    * pattern. */
+    * self-contained oracle); a production pipeline should not
+    * ([[keepBestFromClusters]] is the seam for that pattern). */
   def duplicateClusters(pairs: DataFrame, aCol: String = "a",
       bCol: String = "b", maxIters: Int = 25,
       algorithm: String = "label"): DataFrame = {
@@ -1480,8 +1477,8 @@ object Dedup {
     * feed every consumer (this election, [[clusterSizeHistogram]], a
     * curation chain) from the materialized frame instead of re-running
     * the candidate join + label loop per consumer (see
-    * [[duplicateClusters]]' scaladoc and the PipelineDemo
-    * "clusters-materialized" step). Same output contract as [[keepBest]]. */
+    * [[duplicateClusters]]' scaladoc). Same output contract as
+    * [[keepBest]]. */
   def keepBestFromClusters(df: DataFrame, idCol: String, scoreCol: String,
       clusters: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1780,7 +1777,7 @@ object Dedup {
   /** Candidate stage of the LSH path of [[cosineNearDup]], exposed so the
     * candidate-pair count — the structural scale measure: it IS the
     * downstream shuffle/score volume — can be observed directly
-    * (tools.LshScaleProbe; SCALE.md "Measured scaling").
+    * (SCALE.md "Measured scaling").
     *
     * LSH banding: explode signature chunks, equi-join per band — the same
     * shuffle-safe shape as simhashCandidates/lshTopK. Only (id, chunk,

@@ -525,7 +525,7 @@ object TextAnalysis {
     * phrases. */
   /** Whitespace word-split with the empty edge tokens removed — the ONE
     * tokenization shared by every word-level operator (repetition
-    * signals, phrase mining, the streaming hot-phrase twin). `split` on
+    * signals, phrase mining). `split` on
     * `\s+` keeps a leading "" when the text starts with whitespace, and
     * engines disagree on the trailing edge (Java drops it, DuckDB's
     * string_split keeps it), so filtering empties HERE is what lets the
@@ -559,11 +559,9 @@ object TextAnalysis {
   }
 
   /** The word n-grams of an already-split word array, as strings — the
-    * one phrase construction shared by [[frequentPhrases]] and the
-    * streaming [[graft.streaming.Feed.hotPhrasesStream]], so the two
-    * faces can never drift on tokenization. Arrays shorter than n yield
-    * the empty array. */
-  def phrasesFromWords(w: Column, n: Int): Column =
+    * phrase construction of [[frequentPhrases]]. Arrays shorter than n
+    * yield the empty array. */
+  private def phrasesFromWords(w: Column, n: Int): Column =
     when(size(w) >= n,
       transform(sequence(lit(1), size(w) - (n - 1)),
         i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j)): _*)))

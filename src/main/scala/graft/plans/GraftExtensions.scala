@@ -2,13 +2,18 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{IpContains, PfxDisplay}
+import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Expression, ExpressionInfo, LambdaFunction, Literal, Multiply, NamedLambdaVariable, ZipWith}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import graft.functions.{IpContains, PfxDisplay, VecDot}
 
 /** Engine extensions, registered the Spark-idiomatic way
-  * (`SparkSessionExtensions`): the native IP expressions become
-  * SQL-callable functions (`ip_contains`, `pfx_str`, `addr_str`) and the
-  * filter language becomes the `rib_accept` predicate.
+  * (`SparkSessionExtensions`): the native expressions become SQL-callable
+  * functions (`ip_contains`, `vec_dot`) and the optimizer learns to rewrite
+  * the declarative dot-product fold into the native kernel — users write
+  * `aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)`
+  * in plain Spark and still get the codegen'd loop.
   *
   * Activate with `.withExtensions(new GraftExtensions)` on the session
   * builder or `spark.sql.extensions=graft.plans.GraftExtensions`.
@@ -19,6 +24,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("ip_contains"),
       new ExpressionInfo(classOf[IpContains].getName, "ip_contains"),
       (children: Seq[Expression]) => IpContains(children(0), children(1))))
+    ext.injectFunction((
+      FunctionIdentifier("vec_dot"),
+      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
+      (children: Seq[Expression]) => VecDot(children(0), children(1))))
     ext.injectFunction((
       FunctionIdentifier("pfx_str"),
       new ExpressionInfo(classOf[PfxDisplay].getName, "pfx_str"),
@@ -42,5 +51,42 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException(
           "rib_accept expects one literal filter string")
       }))
+    ext.injectOptimizerRule(_ => VecDotRewrite)
+  }
+}
+
+/** Rewrites `aggregate(zip_with(a, b, (x, y) -> x * y), 0.0, (s, x) -> s + x)`
+  * (any argument order inside the commutative lambdas, identity finish)
+  * into [[VecDot]]. Substitution-safe: VecDot replicates the fold's null
+  * semantics exactly — null element or unequal lengths (zip_with null
+  * padding) null the sum, and accumulation stays sequential in index order,
+  * so results are bit-identical. Only fires on float/double arrays. */
+object VecDotRewrite extends Rule[LogicalPlan] {
+
+  private def vecType(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+
+  /** The lambda's body combines exactly its two bound variables (either
+    * order — both ops are bitwise-commutative on doubles). */
+  private def combinesArgs(x: Expression, y: Expression,
+      args: Seq[NamedLambdaVariable]): Boolean = (x, y) match {
+    case (a: NamedLambdaVariable, b: NamedLambdaVariable) =>
+      Set(a.exprId, b.exprId) == args.map(_.exprId).toSet
+    case _ => false
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case ArrayAggregate(
+        ZipWith(l, r,
+          LambdaFunction(m: Multiply, Seq(a1: NamedLambdaVariable, a2: NamedLambdaVariable), _)),
+        Literal(0.0d, DoubleType),
+        LambdaFunction(ad: Add, Seq(b1: NamedLambdaVariable, b2: NamedLambdaVariable), _),
+        LambdaFunction(fin: NamedLambdaVariable, Seq(fa: NamedLambdaVariable), _))
+      if combinesArgs(m.left, m.right, Seq(a1, a2)) &&
+        combinesArgs(ad.left, ad.right, Seq(b1, b2)) &&
+        fin.exprId == fa.exprId && vecType(l) && vecType(r) =>
+      VecDot(l, r)
   }
 }

@@ -2,12 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Curate, Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis, Tokenizer}
+import graft.pipeline.{Curate, Dedup, Packing, Sampling, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators over `documents`/`embeddings`:
   * deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding
-  * cosine), ANN similarity search, text analysis, multimodal plumbing, and
-  * whois-style enrichment. Hash-checkable ops carry DuckDB oracles; the
+  * cosine), ANN similarity search, text analysis, sampling, curation and
+  * packing. Hash-checkable ops carry DuckDB oracles; the
   * LSH/float ops are rows-only here and pinned by ScalaTest recall checks
   * against their exact counterparts (PipelineSpec).
   */
@@ -1093,72 +1093,6 @@ object PipelineQueries {
             .as("n_keep"))
         .orderBy(col("source"))
     }),
-    // BPE tokenizer induction, round 1: corpus-weighted adjacent char-pair
-    // counts over the distinct-word table, top-20 merge candidates with the
-    // deterministic (count desc, pair asc) tie-break
-    "q_text_bpe" -> ((s, dir) => {
-      val d = docs(s, dir).select(
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      Tokenizer.topPairs(Tokenizer.wordSymbols(d, "text"), 20)
-        .orderBy(col("n").desc, col("pair"))
-    }),
-    // BPE round 2: the argmax round-1 pair is merged into the symbol table
-    // (greedy left-to-right, exactly reference BPE) and pairs re-counted.
-    // The oracle replays the merge INDEPENDENTLY as a string replace —
-    // while symbols are single chars the two are provably the same
-    // operation — so applyMerge is checked end-to-end, not round-tripped
-    "q_text_bpe2" -> ((s, dir) => {
-      val d = docs(s, dir).select(
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      // the word table feeds both the argmax pass and the re-count:
-      // checkpoint it once (the bpeTrain discipline) instead of rebuilding
-      // it from the corpus per pass
-      val syms0 = Tokenizer.wordSymbols(d, "text").localCheckpoint()
-      val top = Tokenizer.topPairs(syms0, 1).collect()
-      val Array(a, b) = top(0).getString(0).split(" ", 2)
-      Tokenizer.topPairs(Tokenizer.applyMerge(syms0, a, b), 20)
-        .orderBy(col("n").desc, col("pair"))
-    }),
-    // BPE encode: per-doc token counts under a 2-merge model trained on
-    // the corpus itself; the oracle re-derives BOTH merges and the encoded
-    // word lengths independently in SQL (string-replace replay)
-    "q_text_bpe_encode" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      // bpeTrainTable's final checkpointed table IS the encoded vocabulary:
-      // encode joins against it instead of re-scanning the corpus
-      val (_, encoded) = Tokenizer.bpeTrainTable(d, "text", 2)
-      Tokenizer.tokenCountsFor(d, "doc_id", "text", encoded)
-        .join(d.select(col("doc_id"), col("source")),
-          col("id") === col("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_words")).cast("long").as("sum_words"),
-          sum(col("n_bpe_tokens")).cast("long").as("sum_bpe"))
-        .orderBy(col("source"))
-    }),
-    // Tokenizer fertility by language (round 18): BPE tokens per word per
-    // langId bucket — the multilingual tokenizer-audit readout that drives
-    // mixture/budget decisions (a language with high fertility consumes
-    // disproportionate context window per word). Composes the trained BPE
-    // encode with the n-gram language id; fertility is integer permille
-    // via the exact `div`. The oracle splices both established chains.
-    "q_text_fertility" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      val lang = docs(s, dir).select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred"))
-      val (_, encoded) = Tokenizer.bpeTrainTable(d, "text", 2)
-      Tokenizer.tokenCountsFor(d, "doc_id", "text", encoded)
-        .join(lang, col("id") === col("doc_id"))
-        .groupBy(col("lang_pred"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_words")).cast("long").as("sum_words"),
-          sum(col("n_bpe_tokens")).cast("long").as("sum_bpe"),
-          call_function("div", sum(col("n_bpe_tokens")) * 1000L,
-            greatest(sum(col("n_words")), lit(1L))).as("fertility_x1000"))
-        .orderBy(col("lang_pred"))
-    }),
     // Zipf-law head fit (round 18): per-source slope of ln(freq) over
     // ln(rank) for the 256 most frequent words — integer milli-nat least
     // squares (zipfSlope doc), output the slope MAGNITUDE so the integer
@@ -1535,121 +1469,7 @@ object PipelineQueries {
         samplePermille = 600, salt = "cur",
         classifier = Some((classifierWeights, 3000L)))
         .orderBy(col("stage_idx"))
-    }),
-
-    // --- multimodal -----------------------------------------------------
-    "q_multimodal_meta" -> ((s, dir) =>
-      Multimodal.blobsFromDocuments(docs(s, dir))
-        .groupBy(col("modality"))
-        .agg(count(lit(1)).cast("long").as("n_assets"),
-          sum(octet_length(col("payload"))).cast("long").as("total_bytes"),
-          countDistinct(md5(col("payload"))).cast("long").as("n_distinct_payloads"),
-          min(col("meta.width")).cast("long").as("min_width"),
-          max(col("meta.duration_ms")).cast("long").as("max_duration_ms"))
-        .orderBy(col("modality"))),
-    "q_multimodal_frames" -> ((s, dir) =>
-      Multimodal.frameSample(Multimodal.blobsFromDocuments(docs(s, dir)))
-        .select(col("asset_id"), col("frame_idx"), col("off"),
-          octet_length(col("frame")).cast("long").as("frame_bytes"),
-          md5(col("frame")).as("frame_md5"))
-        .orderBy(col("asset_id"), col("frame_idx"))),
-    // frame-level dedup rollup: planted duplicate documents make identical
-    // byte slices recur across assets; the oracle replays the slice + md5
-    // arithmetic and the same rollup
-    "q_multimodal_frame_dedup" -> ((s, dir) =>
-      Multimodal.duplicateFrames(Multimodal.blobsFromDocuments(docs(s, dir)))
-        .agg(sum(col("n_occurrences")).cast("long").as("n_frames"),
-          count(lit(1)).cast("long").as("n_distinct_frames"),
-          sum(when(col("n_assets") >= 2, 1L).otherwise(0L)).cast("long")
-            .as("n_shared_frames"),
-          sum(when(col("n_assets") >= 2, col("n_occurrences")).otherwise(0L))
-            .cast("long").as("dup_frame_rows"))),
-
-    // decode runs over CONTAINERIZED payloads: the 12-byte GFT0 header is
-    // parsed for real (magic + big-endian u16/u16/u32) inside the decoder;
-    // the sum_parsed_* columns are derived from those parsed bytes, so a
-    // byte-offset or endianness bug in the parser flips the hash
-    "q_multimodal_features" -> ((s, dir) =>
-      Multimodal.decodeStub(Multimodal.containerize(
-        Multimodal.blobsFromDocuments(docs(s, dir))))
-        .groupBy(col("modality"))
-        .agg(count(lit(1)).cast("long").as("n_assets"),
-          sum(col("n_bytes")).cast("long").as("total_bytes"),
-          sum(size(filter(col("feature"), f => f > 0))).cast("long").as("nonzero_dims"),
-          sum(col("parsed_width")).cast("long").as("sum_parsed_w"),
-          sum(col("parsed_height")).cast("long").as("sum_parsed_h"),
-          sum(col("parsed_duration_ms")).cast("long").as("sum_parsed_dur"))
-        .orderBy(col("modality"))),
-
-    // REAL javax.imageio pixel decode: deterministic solid-colour BMPs are
-    // planted column-side (bmpPayload hex arithmetic), ImageIO decodes the
-    // raster in mapPartitions, and the decoded dimensions + integer channel
-    // means must reproduce the planted doc_id arithmetic exactly — a wrong
-    // stride, header field, or channel order flips the hash
-    "q_multimodal_decode" -> ((s, dir) =>
-      Multimodal.decodeImages(Multimodal.imageBlobs(docs(s, dir)))
-        .orderBy(col("asset_id"))),
-
-    // REAL nearest-neighbour resize over two-tone planted BMPs: the floor
-    // mapping (src = dst*srcDim div outDim) picks source columns {0,2} of
-    // the 4x2 fixture, so every resized mean and edge probe is doc_id
-    // arithmetic the oracle replays exactly
-    "q_multimodal_resize" -> ((s, dir) =>
-      Multimodal.resizeImages(Multimodal.imageBlobs2(docs(s, dir)), 2, 2)
-        .orderBy(col("asset_id"))),
-
-    // energy-delta audio fingerprint over the REAL WAV decode of the
-    // ramping fixture: frame energies are closed-form arithmetic sums
-    // (mod-256 wraps included), so the oracle predicts every bit
-    "q_multimodal_audio_fp" -> ((s, dir) =>
-      Multimodal.audioFingerprint(Multimodal.audioBlobs2(docs(s, dir)))
-        .orderBy(col("asset_id"))),
-    // scene-change detection over the REAL video-frame decode: the
-    // planted +17-per-frame channel shift stays under the gray threshold
-    // except where a channel WRAPS mod 256 — the oracle derives exactly
-    // which transitions wrap from doc-id arithmetic
-    "q_multimodal_scenes" -> ((s, dir) =>
-      Multimodal.sceneChanges(
-        Multimodal.decodeVideoFrames(Multimodal.videoBlobs(docs(s, dir))))
-        .orderBy(col("asset_id"))),
-    // perceptual dHash over the REAL ImageIO decode of the two-tone
-    // fixture: the 4x2 raster has exactly one tone transition under the
-    // 9x8 floor-mapped sample grid (bit x=4 per row), so the hash is a
-    // CLOSED FORM of the left/right gray comparison — the oracle derives
-    // it from doc-id arithmetic alone and this query aggregates the
-    // signature groups (the perceptual-dedup key)
-    "q_multimodal_dhash" -> ((s, dir) =>
-      Multimodal.imageDhash(Multimodal.imageBlobs2(docs(s, dir)))
-        .groupBy(col("dhash"))
-        .agg(count(lit(1)).cast("long").as("n_assets"),
-          min(col("asset_id")).cast("long").as("min_asset"),
-          max(col("asset_id")).cast("long").as("max_asset"))
-        .orderBy(col("dhash"))),
-
-    // REAL javax.sound.sampled audio decode: deterministic 8-bit PCM WAVs
-    // planted column-side (wavPayload hex arithmetic, length varies by
-    // parity), AudioSystem decodes the stream in mapPartitions, and the
-    // decoded frame counts + mean amplitude must reproduce the planted
-    // arithmetic exactly
-    "q_multimodal_audio" -> ((s, dir) =>
-      Multimodal.decodeAudio(Multimodal.audioBlobs(docs(s, dir)))
-        .orderBy(col("asset_id"))),
-
-    // REAL video-frame decode: 3-frame concatenated-BMP clips walked by
-    // each frame's own header size field, every frame ImageIO-decoded;
-    // per-frame channel means must reproduce the planted i*17 shift
-    "q_multimodal_video" -> ((s, dir) =>
-      Multimodal.decodeVideoFrames(Multimodal.videoBlobs(docs(s, dir)))
-        .orderBy(col("asset_id"), col("frame_idx"))),
-
-    // --- enrichment (E1-E3 cache-table pattern) -------------------------
-    "q_whois_enrich" -> ((s, dir) =>
-      graft.enrich.Whois.enrichOriginAs(
-        graft.sources.RouteEventGen.routeEvents(s, dir))
-        .groupBy(col("whois_org"))
-        .agg(count(lit(1)).cast("long").as("n_events"),
-          countDistinct(col("prefix_str")).cast("long").as("n_prefixes"))
-        .orderBy(col("whois_org"))))
+    }))
 
   /** Planted 64-bucket weight vector for the classifier query (values
     * 0..6, neutral 3 → natural keep gate at margin 3000). A real trained
@@ -2837,56 +2657,6 @@ object PipelineQueries {
        |  FROM w${e - 1} LEFT JOIN u$e USING (b)
        |)""".stripMargin
 
-  /** Shared BPE-encode oracle chain (two trained merges, word table,
-    * per-doc word/token counts) — the replica of Tokenizer.bpeTrainTable +
-    * tokenCountsFor spliced by q_text_bpe_encode and q_text_fertility,
-    * ending at the per-doc `per(doc_id, n_words, n_bpe)` CTE. */
-  private val bpePerCte: String =
-    s"""WITH w0 AS (
-       |  SELECT doc_id, lower(w) AS w
-       |  FROM (SELECT doc_id, unnest(string_split($docNorm, ' ')) AS w
-       |        FROM documents) t
-       |  WHERE regexp_matches(lower(w), '^[a-z]+$$') AND length(w) >= 2
-       |), wc AS (
-       |  SELECT w, COUNT(*) AS freq FROM w0 GROUP BY 1
-       |), p1 AS (
-       |  SELECT substr(w, CAST(i AS INTEGER), 1) || ' ' ||
-       |    substr(w, CAST(i + 1 AS INTEGER), 1) AS pair, freq
-       |  FROM (SELECT w, freq, unnest(range(1, length(w))) AS i FROM wc)
-       |), top1 AS (
-       |  SELECT replace(pair, ' ', '') AS m FROM (
-       |    SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
-       |    FROM p1 GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)
-       |), tw AS (
-       |  SELECT w, replace(w, (SELECT m FROM top1), chr(1)) AS w2, freq
-       |  FROM wc
-       |), p2 AS (
-       |  SELECT replace(substr(w2, CAST(i AS INTEGER), 1), chr(1),
-       |      (SELECT m FROM top1)) || ' ' ||
-       |    replace(substr(w2, CAST(i + 1 AS INTEGER), 1), chr(1),
-       |      (SELECT m FROM top1)) AS pair, freq
-       |  FROM (SELECT w2, freq, unnest(range(1, length(w2))) AS i
-       |        FROM tw WHERE length(w2) >= 2)
-       |), top2 AS (
-       |  SELECT pair FROM (
-       |    SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
-       |    FROM p2 GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)
-       |), pat2 AS (
-       |  SELECT replace(string_split(pair, ' ')[1], (SELECT m FROM top1),
-       |      chr(1)) ||
-       |    replace(string_split(pair, ' ')[2], (SELECT m FROM top1),
-       |      chr(1)) AS p
-       |  FROM top2
-       |), enc AS (
-       |  SELECT w, CAST(length(replace(w2, (SELECT p FROM pat2), chr(2)))
-       |    AS BIGINT) AS n_tok
-       |  FROM tw
-       |), per AS (
-       |  SELECT w0.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-       |    CAST(SUM(enc.n_tok) AS BIGINT) AS n_bpe
-       |  FROM w0 JOIN enc USING (w) GROUP BY 1
-       |)""".stripMargin
-
   /** Shared bigram-LM oracle chain (add-k smoothing, micro-nat floor) —
     * the replica of TextAnalysis.bigramLmScore spliced by q_text_lm and
     * q_text_ccnet, ending at the per-doc `agg(doc_id, nb, mn)` CTE. */
@@ -4012,63 +3782,6 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN margin >= 3000 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_keep
          |FROM margins GROUP BY source ORDER BY source""".stripMargin,
-    "q_text_bpe" ->
-      s"""WITH words AS (
-         |  SELECT lower(w) AS w
-         |  FROM (SELECT unnest(string_split($docNorm, ' ')) AS w
-         |        FROM documents) t
-         |  WHERE regexp_matches(lower(w), '^[a-z]+$$') AND length(w) >= 2
-         |), wc AS (
-         |  SELECT w, COUNT(*) AS freq FROM words GROUP BY 1
-         |), pairs AS (
-         |  SELECT substr(w, CAST(i AS INTEGER), 1) || ' ' ||
-         |    substr(w, CAST(i + 1 AS INTEGER), 1) AS pair, freq
-         |  FROM (SELECT w, freq, unnest(range(1, length(w))) AS i FROM wc)
-         |)
-         |SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
-         |FROM pairs GROUP BY 1 ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    // merge replay by string replace: left-to-right non-overlapping, the
-    // same greedy semantics as applyMerge's fold while symbols are single
-    // chars; chr(1) marks the merged symbol, mapped back in the pair name
-    "q_text_bpe2" ->
-      s"""WITH words AS (
-         |  SELECT lower(w) AS w
-         |  FROM (SELECT unnest(string_split($docNorm, ' ')) AS w
-         |        FROM documents) t
-         |  WHERE regexp_matches(lower(w), '^[a-z]+$$') AND length(w) >= 2
-         |), wc AS (
-         |  SELECT w, COUNT(*) AS freq FROM words GROUP BY 1
-         |), p1 AS (
-         |  SELECT substr(w, CAST(i AS INTEGER), 1) || ' ' ||
-         |    substr(w, CAST(i + 1 AS INTEGER), 1) AS pair, freq
-         |  FROM (SELECT w, freq, unnest(range(1, length(w))) AS i FROM wc)
-         |), top1 AS (
-         |  SELECT replace(pair, ' ', '') AS m FROM (
-         |    SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
-         |    FROM p1 GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)
-         |), tw AS (
-         |  SELECT replace(w, (SELECT m FROM top1), chr(1)) AS w2, freq
-         |  FROM wc
-         |), p2 AS (
-         |  SELECT replace(substr(w2, CAST(i AS INTEGER), 1), chr(1),
-         |      (SELECT m FROM top1)) || ' ' ||
-         |    replace(substr(w2, CAST(i + 1 AS INTEGER), 1), chr(1),
-         |      (SELECT m FROM top1)) AS pair, freq
-         |  FROM (SELECT w2, freq, unnest(range(1, length(w2))) AS i
-         |        FROM tw WHERE length(w2) >= 2)
-         |)
-         |SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
-         |FROM p2 GROUP BY 1 ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    // both merges re-derived in SQL; encoded length via chained replaces:
-    // round-1 merge chars -> chr(1), then the round-2 pattern (components
-    // mapped into w2-space) -> chr(2); length(w3) IS the token count
-    "q_text_bpe_encode" ->
-      (bpePerCte + """
-         |SELECT d.source, COUNT(*) AS n_docs,
-         |  CAST(SUM(per.n_words) AS BIGINT) AS sum_words,
-         |  CAST(SUM(per.n_bpe) AS BIGINT) AS sum_bpe
-         |FROM per JOIN documents d USING (doc_id)
-         |GROUP BY d.source ORDER BY d.source""".stripMargin),
     // Zipf head fit replica: rank table (freq desc, word asc), milli-nat
     // floor quantization, the four integer power sums and the OLS division
     // — numerator written (ΣxΣy − n·Σxy) so it is the non-negative slope
@@ -4144,41 +3857,6 @@ object PipelineQueries {
          |  CAST(n_neg AS BIGINT) AS n_neg,
          |  CAST((u2 * 1000000) // (n_pos * n_neg * 2) AS BIGINT) AS auc_x1e6
          |FROM agg WHERE n_pos > 0 AND n_neg > 0 ORDER BY source""".stripMargin,
-    // Same encode chain, rolled up by the langId bucket instead of the
-    // source column; fertility_x1000 = tokens-per-word permille by exact
-    // integer division (both operands non-negative)
-    "q_text_fertility" ->
-      (bpePerCte + """, lang AS (
-         |  SELECT doc_id, CASE
-         |    WHEN s_en=0 AND s_de=0 AND s_fr=0 AND s_es=0 THEN 'und'
-         |    WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es THEN 'fr'
-         |    WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-         |    WHEN s_en >= s_de THEN 'en'
-         |    ELSE 'de' END AS lang_pred
-         |  FROM (
-         |    SELECT doc_id,
-         |      len(regexp_extract_all(text,'\bthe\b'))+len(regexp_extract_all(text,'\band\b'))
-         |        +len(regexp_extract_all(text,'\bof\b'))+len(regexp_extract_all(text,'\bto\b'))
-         |        +len(regexp_extract_all(text,'\bin\b')) AS s_en,
-         |      len(regexp_extract_all(text,'\bder\b'))+len(regexp_extract_all(text,'\bdie\b'))
-         |        +len(regexp_extract_all(text,'\bund\b'))+len(regexp_extract_all(text,'\bdas\b'))
-         |        +len(regexp_extract_all(text,'\bist\b')) AS s_de,
-         |      len(regexp_extract_all(text,'\ble\b'))+len(regexp_extract_all(text,'\bla\b'))
-         |        +len(regexp_extract_all(text,'\bet\b'))+len(regexp_extract_all(text,'\bles\b'))
-         |        +len(regexp_extract_all(text,'\bdes\b')) AS s_fr,
-         |      len(regexp_extract_all(text,'\bel\b'))+len(regexp_extract_all(text,'\bla\b'))
-         |        +len(regexp_extract_all(text,'\blos\b'))+len(regexp_extract_all(text,'\bque\b'))
-         |        +len(regexp_extract_all(text,'\bde\b')) AS s_es
-         |    FROM documents) t
-         |)
-         |SELECT l.lang_pred, COUNT(*) AS n_docs,
-         |  CAST(SUM(per.n_words) AS BIGINT) AS sum_words,
-         |  CAST(SUM(per.n_bpe) AS BIGINT) AS sum_bpe,
-         |  CAST(CAST(SUM(per.n_bpe) AS BIGINT) * 1000
-         |    // greatest(CAST(SUM(per.n_words) AS BIGINT), 1) AS BIGINT)
-         |    AS fertility_x1000
-         |FROM per JOIN lang l USING (doc_id)
-         |GROUP BY l.lang_pred ORDER BY l.lang_pred""".stripMargin),
     // grams fold through the same portable 31-bit hash; coverage is the
     // distinct-token union of repeated spans, permille by integer division
     "q_dedup_spans" ->
@@ -5457,161 +5135,5 @@ object PipelineQueries {
     // same chain with the model gate between heuristics and the
     // repetition cap (mirrors Curate.curate stage order)
     "q_pipeline_curate2" -> curateOracleSql(Some(3000L)),
-    "q_pipeline_attrition" -> attritionOracleSql(3000L),
-    "q_multimodal_meta" ->
-      """SELECT CASE doc_id%3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-        |  COUNT(*) AS n_assets,
-        |  CAST(SUM(length(text)) AS BIGINT) AS total_bytes,
-        |  COUNT(DISTINCT md5(text)) AS n_distinct_payloads,
-        |  CAST(MIN(CASE WHEN doc_id%3=0 THEN doc_id%640+64 END) AS BIGINT) AS min_width,
-        |  CAST(MAX(CASE WHEN doc_id%3<>0 THEN doc_id%60000+1000 END) AS BIGINT) AS max_duration_ms
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Frame slices are byte ranges of the payload; payload is the UTF-8
-    // text and the corpus is ASCII, so DuckDB's char-indexed substring
-    // reproduces the byte-indexed slice (and md5-of-string == md5-of-bytes)
-    "q_multimodal_frames" ->
-      """SELECT doc_id AS asset_id, CAST(f AS BIGINT) AS frame_idx,
-        |  CAST((f * length(text)) // 4 AS BIGINT) AS off,
-        |  CAST(length(substring(text, CAST((f * length(text)) // 4 AS BIGINT) + 1, 16)) AS BIGINT) AS frame_bytes,
-        |  md5(substring(text, CAST((f * length(text)) // 4 AS BIGINT) + 1, 16)) AS frame_md5
-        |FROM documents, (SELECT unnest(range(4)) AS f) ff
-        |WHERE doc_id % 3 <> 0
-        |ORDER BY asset_id, frame_idx""".stripMargin,
-    "q_multimodal_frame_dedup" ->
-      """WITH fr AS (
-        |  SELECT doc_id AS asset_id,
-        |    md5(substring(text, CAST((f * length(text)) // 4 AS BIGINT) + 1, 16)) AS fh
-        |  FROM documents, (SELECT unnest(range(4)) AS f) ff
-        |  WHERE doc_id % 3 <> 0
-        |), per AS (
-        |  SELECT fh, COUNT(DISTINCT asset_id) AS na, COUNT(*) AS cnt
-        |  FROM fr GROUP BY fh
-        |)
-        |SELECT CAST(SUM(cnt) AS BIGINT) AS n_frames,
-        |  COUNT(*) AS n_distinct_frames,
-        |  CAST(SUM(CASE WHEN na >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_frames,
-        |  CAST(SUM(CASE WHEN na >= 2 THEN cnt ELSE 0 END) AS BIGINT) AS dup_frame_rows
-        |FROM per""".stripMargin,
-    // Byte-bucket replica of Multimodal.decodeStub: feature dim j > 0 iff
-    // the BODY (payload minus the 12-byte GFT0 header) has a byte in
-    // [32j, 32j+32). The corpus is ASCII (checked: 0 rows match [^\x00-\x7F]
-    // at every sf), so chars ≡ bytes and buckets 4-7 are structurally zero;
-    // a non-ASCII fixture would fail loudly here. The sum_parsed_* columns
-    // replay the header-field arithmetic the engine must recover by parsing
-    // big-endian bytes (containerize writes 0 where a modality has no
-    // width/height/duration).
-    "q_multimodal_features" ->
-      """SELECT CASE doc_id%3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-        |  COUNT(*) AS n_assets,
-        |  CAST(SUM(length(text)) AS BIGINT) AS total_bytes,
-        |  CAST(SUM(
-        |    CASE WHEN regexp_matches(text, '[\x01-\x1f]') THEN 1 ELSE 0 END
-        |    + CASE WHEN regexp_matches(text, '[\x20-\x3f]') THEN 1 ELSE 0 END
-        |    + CASE WHEN regexp_matches(text, '[\x40-\x5f]') THEN 1 ELSE 0 END
-        |    + CASE WHEN regexp_matches(text, '[\x60-\x7f]') THEN 1 ELSE 0 END
-        |  ) AS BIGINT) AS nonzero_dims,
-        |  CAST(SUM(CASE WHEN doc_id%3=0 THEN doc_id%640+64 ELSE 0 END) AS BIGINT) AS sum_parsed_w,
-        |  CAST(SUM(CASE WHEN doc_id%3=0 THEN doc_id%480+48 ELSE 0 END) AS BIGINT) AS sum_parsed_h,
-        |  CAST(SUM(CASE WHEN doc_id%3<>0 THEN doc_id%60000+1000 ELSE 0 END) AS BIGINT) AS sum_parsed_dur
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the engine decodes real BMP bytes; the oracle predicts what the
-    // decoder must recover from the planted solid-colour fixtures
-    "q_multimodal_decode" ->
-      """SELECT doc_id AS asset_id, CAST(4 AS BIGINT) AS img_w,
-        |  CAST(2 AS BIGINT) AS img_h,
-        |  CAST(doc_id % 256 AS BIGINT) AS mean_r,
-        |  CAST((doc_id * 7) % 256 AS BIGINT) AS mean_g,
-        |  CAST((doc_id * 13) % 256 AS BIGINT) AS mean_b
-        |FROM documents ORDER BY asset_id""".stripMargin,
-    // the engine really decodes and resamples pixels; the oracle replays
-    // the two-tone arithmetic through the floor mapping
-    "q_multimodal_resize" ->
-      """SELECT doc_id AS asset_id, CAST(2 AS BIGINT) AS out_w,
-        |  CAST(2 AS BIGINT) AS out_h,
-        |  CAST((doc_id % 256 + (doc_id * 3) % 256) // 2 AS BIGINT) AS mean_r,
-        |  CAST(((doc_id * 7) % 256 + (doc_id * 5) % 256) // 2 AS BIGINT) AS mean_g,
-        |  CAST(((doc_id * 13) % 256 + (doc_id * 11) % 256) // 2 AS BIGINT) AS mean_b,
-        |  CAST(doc_id % 256 AS BIGINT) AS left_r,
-        |  CAST((doc_id * 3) % 256 AS BIGINT) AS right_r
-        |FROM documents ORDER BY asset_id""".stripMargin,
-    // audio-fp replay: ramp samples (base + i*step) mod 256, 4-sample
-    // frame sums, lead compare -> fingerprint bits
-    "q_multimodal_audio_fp" ->
-      """WITH sa AS (
-        |  SELECT doc_id, i,
-        |    (doc_id % 256 + i * (1 + doc_id % 5)) % 256 AS v
-        |  FROM documents, (SELECT range AS i FROM range(0, 32))
-        |), fr AS (
-        |  SELECT doc_id, i // 4 AS f, SUM(v) AS e FROM sa GROUP BY 1, 2
-        |), bl AS (
-        |  SELECT doc_id, f, e,
-        |    LEAD(e) OVER (PARTITION BY doc_id ORDER BY f) AS ne
-        |  FROM fr
-        |)
-        |SELECT doc_id AS asset_id, CAST(8 AS BIGINT) AS n_frames,
-        |  CAST(SUM(CASE WHEN ne > e THEN 1 << f ELSE 0 END) AS BIGINT) AS fp
-        |FROM bl WHERE ne IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
-    // scene replay: per-frame gray means from the planted shift
-    // arithmetic (wraps included), lag window, threshold count
-    "q_multimodal_scenes" ->
-      """WITH f AS (
-        |  SELECT doc_id, i,
-        |    ((doc_id + i*17) % 256 + (doc_id*7 + i*17) % 256
-        |      + (doc_id*13 + i*17) % 256) // 3 AS gray
-        |  FROM documents, (SELECT range AS i FROM range(0, 3))
-        |), dl AS (
-        |  SELECT doc_id, gray,
-        |    LAG(gray) OVER (PARTITION BY doc_id ORDER BY i) AS pg
-        |  FROM f
-        |)
-        |SELECT doc_id AS asset_id, COUNT(*) AS n_frames,
-        |  CAST(SUM(CASE WHEN pg IS NOT NULL AND ABS(gray - pg) > 50
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_changes
-        |FROM dl GROUP BY 1 ORDER BY 1""".stripMargin,
-    // dHash replay: the 9x8 grid over the 4x2 two-tone raster sets only
-    // bit x=4 of each of the 8 rows (the single tone transition), so the
-    // hash is 0x1010101010101010 when gray_left > gray_right, else 0 —
-    // derived here purely from the planted channel arithmetic
-    "q_multimodal_dhash" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    (doc_id % 256 + (doc_id * 7) % 256 + (doc_id * 13) % 256) // 3 AS gl,
-        |    ((doc_id * 3) % 256 + (doc_id * 5) % 256 + (doc_id * 11) % 256) // 3 AS gr
-        |  FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    CASE WHEN gl > gr THEN 1157442765409226768 ELSE 0 END AS dhash
-        |  FROM g
-        |)
-        |SELECT CAST(dhash AS BIGINT) AS dhash, COUNT(*) AS n_assets,
-        |  CAST(MIN(doc_id) AS BIGINT) AS min_asset,
-        |  CAST(MAX(doc_id) AS BIGINT) AS max_asset
-        |FROM hs GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the engine decodes real WAV bytes; the oracle predicts what the
-    // decoder must recover from the planted constant-amplitude fixtures
-    "q_multimodal_audio" ->
-      """SELECT doc_id AS asset_id,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 16 ELSE 32 END AS BIGINT) AS n_frames,
-        |  CAST(8000 AS BIGINT) AS sample_rate,
-        |  CAST(1 AS BIGINT) AS channels,
-        |  CAST(8 AS BIGINT) AS bits,
-        |  CAST((doc_id * 11) % 256 AS BIGINT) AS mean_amp
-        |FROM documents ORDER BY asset_id""".stripMargin,
-    // the engine walks the real frame container; the oracle replays the
-    // planted per-frame channel arithmetic
-    "q_multimodal_video" ->
-      """SELECT f.i AS frame_idx, d.doc_id AS asset_id,
-        |  CAST(4 AS BIGINT) AS img_w, CAST(2 AS BIGINT) AS img_h,
-        |  CAST((d.doc_id + f.i * 17) % 256 AS BIGINT) AS mean_r,
-        |  CAST((d.doc_id * 7 + f.i * 17) % 256 AS BIGINT) AS mean_g,
-        |  CAST((d.doc_id * 13 + f.i * 17) % 256 AS BIGINT) AS mean_b
-        |FROM documents d
-        |CROSS JOIN (SELECT CAST(UNNEST([0,1,2]) AS BIGINT) AS i) f
-        |ORDER BY asset_id, frame_idx""".stripMargin,
-    "q_whois_enrich" -> (RibQueries.cte +
-      """SELECT 'AS'||(CASE WHEN eid%2=1 THEN 65001 ELSE a2 END)
-        |    ||'-ORG-'||((CASE WHEN eid%2=1 THEN 65001 ELSE a2 END)%2) AS whois_org,
-        |  COUNT(*) AS n_events,
-        |  COUNT(DISTINCT prefix_str) AS n_prefixes
-        |FROM re GROUP BY 1 ORDER BY 1""".stripMargin))
+    "q_pipeline_attrition" -> attritionOracleSql(3000L))
 }

@@ -21,12 +21,16 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
     // No table is spread blanket-style at this seam (r18 opt round,
-    // measured per table): relational tables' scans are cheap columnar
-    // decode + partial aggregates (+0.7-1.5 s each when spread), and
-    // blanket events spread taxed the light events queries (~+0.3 s
-    // each). The spread is applied surgically at the expression-heavy
-    // seams instead: UpdateDecompose.messages / RouteEventGen.fromEvents
-    // (ahead of the wire codec and event-derivation expression work).
+    // measured three ways): relational tables' scans are cheap columnar
+    // decode + partial aggregates (+0.7-1.5 s each when spread);
+    // embeddings netted +2.2 s across its family; documents netted ~zero
+    // (single-heavy-job queries won what many-job chains lost re-paying
+    // the exchange per scan); and blanket events spread taxed the light
+    // events queries (~+0.3 s each). The spread is applied surgically at
+    // the expression-heavy seams instead: Dedup.explodedShingleCols /
+    // winnowFingerprints (where it REPLACES the per-doc window exchange)
+    // and UpdateDecompose.messages / RouteEventGen.fromEvents (ahead of
+    // the wire codec and event-derivation expression work).
     df
   }
 
@@ -37,12 +41,16 @@ object Tables {
     * skew: one huge unsplittable file … repartition immediately after the
     * read"): each fixture table is ONE small parquet file with one row
     * group, so every scan-stage computation — codec `mapPartitions`,
-    * event derivation, display rendering — otherwise runs in a SINGLE
+    * shingle explodes, display rendering — otherwise runs in a SINGLE
     * task regardless of core count. The callers are
+    * `Dedup.explodedShingleCols` / `winnowFingerprints`,
     * `RouteEventGen.fromEvents` and `UpdateDecompose.messages`. When the
     * scan is too small to fill the cores at row-group granularity,
-    * repartition KEYED ON `key` (the round-robin form was A/B'd in r18
-    * and measured worse); at production scale the scan already has
+    * repartition KEYED ON `key` (not
+    * round-robin — the callers' per-doc windows/aggregates need
+    * hashpartitioning(key), so the keyed exchange REPLACES their window
+    * exchange instead of adding one; the round-robin form was A/B'd in
+    * r18 and measured worse); at production scale the scan already has
     * more splits than cores and this is a no-op (the condition, not a
     * tuned constant, is what adapts — nothing here is local[32]-specific).
     * Predicate pushdown and column pruning pass through Repartition, so
@@ -59,18 +67,22 @@ object Tables {
     // constant — nothing here is local[32]-specific). ANALYZED-plan stats,
     // not optimized: the decision only needs the source-relation size
     // estimate, and running the optimizer on a deep chain's prefix per
-    // spread call measurably taxed plan-build time.
+    // spread call measurably taxed plan-build time on the composed
+    // curation chains.
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
     if (bytes >= BigInt(want) * (4L << 20)) df
     else {
       // Size-capped partition count (r18 verdict ask #3): always jumping
       // to defaultParallelism gives a tiny frame `cores` near-empty
       // partitions, and the per-task overhead then EXCEEDS the parallel
-      // gain at high core counts. Derive the count from the frame's size
-      // instead, at an EXPRESSION-HEAVY quantum: these seams sit ahead of
-      // wire codecs and event derivation, where compute per compressed
-      // input byte is orders above a columnar scan's, so the per-task
-      // byte quantum is far below the 128 MB scan default. The count
+      // gain at high core counts (the r18 scaling block's sub-1 ratios).
+      // Derive the count from the frame's size instead, at an
+      // EXPRESSION-HEAVY quantum: these seams sit ahead of shingle
+      // explodes / wire codecs where compute per compressed input byte is
+      // 2-3 orders above a columnar scan's, so the per-task byte quantum
+      // must be far below the 128 MB scan default — 64 KB/task measured
+      // best on the dedup family at both 8 and 32 cores (A/B'd against
+      // 16/256 KB and the uncapped form, OPTIMIZATION_r19.md). The count
       // still caps at defaultParallelism, so production scans are
       // unaffected.
       val n = ((bytes + SpreadQuantumBytes - 1) / SpreadQuantumBytes)

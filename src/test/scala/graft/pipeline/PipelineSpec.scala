@@ -979,350 +979,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(fps(0) == fps(1) && fps(0) != fps(2))
   }
 
-  test("frame sampling expands each audio/video asset to n byte slices") {
-    // doc_id 1 → audio; 32-byte payload → offsets 0,8,16,24
-    val d = Seq((1L, "0123456789abcdef0123456789abcdef"))
-      .toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", lit(32L))
-    val frames = Multimodal.frameSample(Multimodal.blobsFromDocuments(d))
-      .orderBy(col("frame_idx"))
-      .select(col("frame_idx"), col("off"), col("frame").cast("string"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(frames.toSeq == Seq(
-      (0L, 0L, "0123456789abcdef"), (1L, 8L, "89abcdef01234567"),
-      (2L, 16L, "0123456789abcdef"), (3L, 24L, "89abcdef")))
-  }
-
-  test("multimodal decode stub: schema, bytes, normalized features") {
-    val d = Seq((7L, "abcdefgh")).toDF("doc_id", "text")
-    val blobs = Multimodal.blobsFromDocuments(
-      d.withColumn("lang", lit("en")).withColumn("source", lit("s"))
-        .withColumn("n_chars", lit(8L)))
-    val feat = Multimodal.decodeStub(blobs).collect()(0)
-    assert(feat.getLong(0) == 7L)
-    assert(feat.getString(1) == "audio") // 7 % 3 == 1
-    assert(feat.getLong(2) == 8L)
-    val f = feat.getSeq[Float](3)
-    assert(f.length == 8)
-    assert(math.abs(f.sum - 1.0f) < 1e-5)
-  }
-
-  test("multimodal container header round-trips through the byte parser") {
-    val d = Seq((6L, "imagebodybytes"), (7L, "audiobodybytes"))
-      .toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", lit(14L))
-    val feats = Multimodal.decodeStub(Multimodal.containerize(
-      Multimodal.blobsFromDocuments(d))).orderBy("asset_id").collect()
-    // doc 6 → image: width 6%640+64=70, height 6%480+48=54, duration absent→0
-    val img = feats(0)
-    assert(img.getString(1) == "image")
-    assert(img.getLong(2) == 14L) // body length excludes the 12-byte header
-    assert(img.getInt(4) == 70 && img.getInt(5) == 54 && img.getLong(6) == 0L)
-    // doc 7 → audio: duration 7%60000+1000=1007, dims absent→0
-    val aud = feats(1)
-    assert(aud.getString(1) == "audio")
-    assert(aud.getInt(4) == 0 && aud.getInt(5) == 0 && aud.getLong(6) == 1007L)
-    // the feature covers the BODY only: identical to the headerless path
-    val raw = Multimodal.decodeStub(Multimodal.blobsFromDocuments(d))
-      .orderBy("asset_id").collect()
-    assert(img.getSeq[Float](3) == raw(0).getSeq[Float](3))
-    // headerless payload → null parsed fields (defensive path)
-    assert(raw(0).isNullAt(4) && raw(0).isNullAt(5) && raw(0).isNullAt(6))
-  }
-
-  test("real image decode recovers planted BMP dimensions and channel means") {
-    val d = Seq((10L, "x"), (300L, "y")).toDF("doc_id", "text")
-    val stats = Multimodal.decodeImages(Multimodal.imageBlobs(d))
-      .orderBy("asset_id").collect()
-    assert(stats.length == 2)
-    // solid colour → mean == planted channel value; 300 wraps mod 256
-    assert(stats(0).toSeq == Seq(10L, 4L, 2L, 10L, 70L, 130L))
-    assert(stats(1).toSeq == Seq(300L, 4L, 2L, 300L % 256, (300L * 7) % 256, (300L * 13) % 256))
-  }
-
-  test("image decode handles an independently ImageIO-encoded PNG") {
-    // encode with ImageIO directly (not our BMP builder) so decoder and
-    // fixture can't share a hidden convention
-    val img = new java.awt.image.BufferedImage(3, 5, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 3; y <- 0 until 5) img.setRGB(x, y, (20 << 16) | (40 << 8) | 60)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val blobs = Seq((1L, "image", bos.toByteArray))
-      .toDF("asset_id", "modality", "payload")
-    val row = Multimodal.decodeImages(blobs).collect()(0)
-    assert(row.toSeq == Seq(1L, 3L, 5L, 20L, 40L, 60L))
-  }
-
-  test("real resize: two-tone BMP down- and up-samples to predictable rasters") {
-    val d = Seq((10L, "x"), (77L, "y")).toDF("doc_id", "text")
-    val blobs = Multimodal.imageBlobs2(d) // 4x2, left/right tone per doc_id
-    // 4x2 -> 2x2: floor mapping picks source columns {0, 2} = {left, right}
-    val down = Multimodal.resizeImages(blobs, 2, 2).orderBy("asset_id").collect()
-    def tones(id: Long) = (id % 256, (id * 7) % 256, (id * 13) % 256,
-      (id * 3) % 256, (id * 5) % 256, (id * 11) % 256)
-    for ((row, id) <- down.zip(Seq(10L, 77L))) {
-      val (rl, gl, bl, rr, gr, br) = tones(id)
-      assert(row.toSeq == Seq(id, 2L, 2L,
-        (rl + rr) / 2, (gl + gr) / 2, (bl + br) / 2, rl, rr))
-    }
-    // 4x2 -> 8x4: each source column doubles; means unchanged, edges pinned
-    val up = Multimodal.resizeImages(blobs, 8, 4).orderBy("asset_id").collect()
-    for ((row, id) <- up.zip(Seq(10L, 77L))) {
-      val (rl, gl, bl, rr, gr, br) = tones(id)
-      assert(row.toSeq == Seq(id, 8L, 4L,
-        (rl + rr) / 2, (gl + gr) / 2, (bl + br) / 2, rl, rr))
-    }
-  }
-
-  test("resize handles an independently ImageIO-encoded image") {
-    // 4x1 PNG with red channel 10,20,30,40 encoded by ImageIO itself:
-    // 4->2 must select columns {0,2}; mean over {10,30} is 20
-    val img = new java.awt.image.BufferedImage(4, 1, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4) img.setRGB(x, 0, ((10 * (x + 1)) << 16) | (5 << 8) | 7)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val blobs = Seq((1L, "image", bos.toByteArray))
-      .toDF("asset_id", "modality", "payload")
-    val row = Multimodal.resizeImages(blobs, 2, 1).collect()(0)
-    assert(row.toSeq == Seq(1L, 2L, 1L, 20L, 5L, 7L, 10L, 30L))
-  }
-
-  test("dHash: independent raster model on an ImageIO-encoded PNG; two-tone closed form") {
-    // 9x8 gradient PNG encoded by ImageIO itself (no shared convention):
-    // the independent model recomputes the hash from the raw raster with
-    // the same floor mapping + integer gray
-    val img = new java.awt.image.BufferedImage(9, 8,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 9; y <- 0 until 8)
-      img.setRGB(x, y, (((x * 29 + y * 13) % 256) << 16) |
-        (((x * 7) % 256) << 8) | ((y * 11) % 256))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val blobs = Seq((1L, "image", bos.toByteArray))
-      .toDF("asset_id", "modality", "payload")
-    def gray(x: Int, y: Int): Long = {
-      val rgb = img.getRGB(x, y)
-      (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3L
-    }
-    var want = 0L
-    for (y <- 0 until 8; x <- 0 until 8) {
-      // grid == raster here (9x8 source, 9x8 samples): sx = x, sy = y
-      if (gray(x, y) > gray(x + 1, y)) want |= 1L << (y * 8 + x)
-    }
-    val got = Multimodal.imageDhash(blobs).collect()(0)
-    assert(got.toSeq == Seq(1L, want))
-    assert(want != 0L && want != -1L) // the gradient actually exercises bits
-    // two-tone fixture: closed-form constant, sign of the gray compare
-    val d = Seq((10L, "x"), (77L, "y")).toDF("doc_id", "text")
-    val hs = Multimodal.imageDhash(Multimodal.imageBlobs2(d))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def side(id: Long) = (
-      (id % 256 + (id * 7) % 256 + (id * 13) % 256) / 3,
-      ((id * 3) % 256 + (id * 5) % 256 + (id * 11) % 256) / 3)
-    Seq(10L, 77L).foreach { id =>
-      val (gl, gr) = side(id)
-      val expect = if (gl > gr) 0x1010101010101010L else 0L
-      assert(hs(id) == expect, s"doc $id")
-    }
-  }
-
-  test("sceneChanges: threshold is strict, single-frame clips never flag") {
-    val frames = Seq(
-      (1L, 0L, 100L, 100L, 100L), // gray 100
-      (1L, 1L, 120L, 120L, 120L), // delta 20: under threshold
-      (1L, 2L, 200L, 200L, 200L), // delta 80: change
-      (2L, 0L, 10L, 10L, 10L),    // single frame
-      (3L, 0L, 0L, 0L, 0L),
-      (3L, 1L, 50L, 50L, 50L))    // delta exactly 50: strict > spares it
-      .toDF("asset_id", "frame_idx", "mean_r", "mean_g", "mean_b")
-    val got = Multimodal.sceneChanges(frames, threshold = 50L)
-      .orderBy("asset_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got == Seq((1L, 3L, 1L), (2L, 1L, 0L), (3L, 2L, 0L)))
-  }
-
-  test("property: dHash equals the raster model on random PNG rasters") {
-    // r17 ANSI-hazard sweep: random raster dimensions (incl. sizes
-    // smaller than the sample grid, where the floor mapping re-samples
-    // pixels) and random RGB content, each PNG-encoded by ImageIO (
-    // lossless) and recomputed by an independent Scala model of the
-    // floor mapping + integer gray + bit order
-    val rnd = new scala.util.Random(9090)
-    val rasters = (0 until 6).map { i =>
-      val w = 3 + rnd.nextInt(22)
-      val h = 3 + rnd.nextInt(18)
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h)
-        img.setRGB(x, y, rnd.nextInt(1 << 24))
-      (i.toLong, img)
-    }
-    val blobs = rasters.map { case (id, img) =>
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      (id, "image", bos.toByteArray)
-    }.toDF("asset_id", "modality", "payload")
-    def model(img: java.awt.image.BufferedImage, gridW: Int, gridH: Int): Long = {
-      val (w, h) = (img.getWidth, img.getHeight)
-      def gray(gx: Int, gy: Int): Long = {
-        val rgb = img.getRGB(gx * w / (gridW + 1), gy * h / gridH)
-        (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3L
-      }
-      (for (y <- 0 until gridH; x <- 0 until gridW
-        if gray(x, y) > gray(x + 1, y)) yield 1L << (y * gridW + x))
-        .foldLeft(0L)(_ | _)
-    }
-    for ((gw, gh) <- Seq((8, 8), (5, 3))) {
-      val got = Multimodal.imageDhash(blobs, gridW = gw, gridH = gh)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      rasters.foreach { case (id, img) =>
-        assert(got(id) == model(img, gw, gh), s"asset $id grid ${gw}x$gh")
-      }
-    }
-  }
-
-  test("property: sceneChanges equals the fold model on random frame stats") {
-    // random per-frame means (full 0-255 range, clip lengths 1..12,
-    // threshold crossings both directions) vs an independent fold; the
-    // `div 3` gray and the strict > are restated, not shared
-    val rnd = new scala.util.Random(3131)
-    val frames = (0 until 8).flatMap { a =>
-      (0 until (1 + rnd.nextInt(12))).map { f =>
-        (a.toLong, f.toLong, rnd.nextInt(256).toLong,
-          rnd.nextInt(256).toLong, rnd.nextInt(256).toLong)
-      }
-    }
-    val thr = 40L
-    val got = Multimodal.sceneChanges(
-        frames.toDF("asset_id", "frame_idx", "mean_r", "mean_g", "mean_b"),
-        threshold = thr)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
-    val model = frames.groupBy(_._1).map { case (a, fs) =>
-      val grays = fs.sortBy(_._2).map(t => (t._3 + t._4 + t._5) / 3)
-      val changes = grays.zip(grays.drop(1))
-        .count { case (p, g) => math.abs(g - p) > thr }
-      a -> ((fs.size.toLong, changes.toLong))
-    }
-    assert(got == model)
-  }
-
-  test("image decode drops undecodable payloads instead of failing") {
-    val blobs = Seq(
-      (1L, "image", "not an image at all".getBytes("UTF-8")),
-      (2L, "image", Array.emptyByteArray),
-      (3L, "image", null)
-    ).toDF("asset_id", "modality", "payload")
-    assert(Multimodal.decodeImages(blobs).count() == 0L)
-    // a decodable row among garbage still comes through
-    val mixed = Multimodal.imageBlobs(Seq((5L, "t")).toDF("doc_id", "text"))
-      .unionByName(blobs)
-    assert(Multimodal.decodeImages(mixed).select("asset_id").as[Long].collect().toSeq == Seq(5L))
-  }
-
-  test("real video decode walks frames by their own header size, per-frame stats") {
-    val d = Seq((9L, "x")).toDF("doc_id", "text")
-    val frames = Multimodal.decodeVideoFrames(Multimodal.videoBlobs(d))
-      .orderBy("frame_idx").collect()
-    assert(frames.length == 3)
-    frames.zipWithIndex.foreach { case (r, i) =>
-      assert(r.toSeq == Seq(i.toLong, 9L, 4L, 2L,
-        (9L + i * 17) % 256, (9L * 7 + i * 17) % 256, (9L * 13 + i * 17) % 256))
-    }
-  }
-
-  test("video decode keeps decoded frames when the container tail is malformed") {
-    val d = Seq((9L, "x")).toDF("doc_id", "text")
-    // truncate the 3-frame clip mid-frame-3: frames 0 and 1 must survive
-    val clipped = Multimodal.videoBlobs(d)
-      .withColumn("payload", expr("substring(payload, 1, 78*2 + 30)"))
-    assert(Multimodal.decodeVideoFrames(clipped).count() == 2L)
-    // garbage payload → no frames, no failure
-    val junk = Seq((1L, "video", "no frames here".getBytes("UTF-8")))
-      .toDF("asset_id", "modality", "payload")
-    assert(Multimodal.decodeVideoFrames(junk).count() == 0L)
-  }
-
-  test("real audio decode recovers planted WAV format and amplitude") {
-    val d = Seq((10L, "x"), (25L, "y")).toDF("doc_id", "text")
-    val stats = Multimodal.decodeAudio(Multimodal.audioBlobs(d))
-      .orderBy("asset_id").collect()
-    assert(stats.length == 2)
-    // even doc → 16 frames, odd → 32; constant amplitude → mean == planted
-    assert(stats(0).toSeq == Seq(10L, 16L, 8000L, 1L, 8L, (10L * 11) % 256))
-    assert(stats(1).toSeq == Seq(25L, 32L, 8000L, 1L, 8L, (25L * 11) % 256))
-  }
-
-  test("audio decode handles an independently AudioSystem-encoded WAV") {
-    // encode with javax.sound.sampled directly (not our wavPayload builder)
-    // so decoder and fixture can't share a hidden convention
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_UNSIGNED, 11025f, 8, 1, 1, 11025f, false)
-    val samples = Array.fill[Byte](40)(200.toByte) // unsigned 200
-    val ais = new AudioInputStream(new java.io.ByteArrayInputStream(samples), fmt, 40)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    val blobs = Seq((1L, "audio", bos.toByteArray))
-      .toDF("asset_id", "modality", "payload")
-    val row = Multimodal.decodeAudio(blobs).collect()(0)
-    assert(row.toSeq == Seq(1L, 40L, 11025L, 1L, 8L, 200L))
-  }
-
-  test("audio fingerprint: independent-WAV model, ramp closed form, constant tone is zero") {
-    import javax.sound.sampled._
-    // independently AudioSystem-encoded samples (no wavPayloadRamp
-    // convention): hand pattern with rises, falls and a flat frame pair
-    val samples = Array[Int](
-      10, 10, 10, 10, // frame 0: e=40
-      50, 50, 50, 50, // frame 1: e=200 > 40 -> bit 0
-      20, 20, 20, 20, // frame 2: e=80 < 200 -> no bit 1
-      20, 20, 20, 20, // frame 3: e=80 == 80 -> strict: no bit 2
-      90, 90, 90, 90) // frame 4: e=360 -> bit 3
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_UNSIGNED,
-      8000f, 8, 1, 1, 8000f, false)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(samples.map(_.toByte)),
-      fmt, samples.length)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    val blobs = Seq((1L, "audio", bos.toByteArray))
-      .toDF("asset_id", "modality", "payload")
-    val row = Multimodal.audioFingerprint(blobs, frameLen = 4).collect()(0)
-    assert(row.toSeq == Seq(1L, 5L, (1L << 0) | (1L << 3)))
-    // ramp fixture: engine fp equals the closed-form arithmetic model
-    val d = Seq((10L, "x"), (253L, "y")).toDF("doc_id", "text")
-    val got = Multimodal.audioFingerprint(Multimodal.audioBlobs2(d))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
-    def model(id: Long): Long = {
-      val s = (0 until 32).map(i => (id % 256 + i * (1 + id % 5)) % 256)
-      val e = (0 until 8).map(f => s.slice(f * 4, f * 4 + 4).sum)
-      (0 until 7).map(f => if (e(f + 1) > e(f)) 1L << f else 0L).sum
-    }
-    Seq(10L, 253L).foreach { id =>
-      assert(got(id) == ((8L, model(id))), s"doc $id")
-    }
-    // the constant-tone fixture fingerprints to zero (every delta 0)
-    val const = Multimodal.audioFingerprint(
-      Multimodal.audioBlobs(Seq((6L, "t")).toDF("doc_id", "text")))
-      .collect()(0)
-    assert(const.getLong(2) == 0L)
-  }
-
-  test("audio decode drops undecodable payloads instead of failing") {
-    val blobs = Seq(
-      (1L, "audio", "definitely not a wav".getBytes("UTF-8")),
-      (2L, "audio", Array.emptyByteArray),
-      (3L, "audio", null)
-    ).toDF("asset_id", "modality", "payload")
-    assert(Multimodal.decodeAudio(blobs).count() == 0L)
-    val mixed = Multimodal.audioBlobs(Seq((5L, "t")).toDF("doc_id", "text"))
-      .unionByName(blobs)
-    assert(Multimodal.decodeAudio(mixed).select("asset_id").as[Long].collect().toSeq == Seq(5L))
-  }
-
   test("arithHash64 one-pass dual fold is bit-identical to the two-fold form") {
     val d = Seq("", "a", "hello world", "the quick brown fox jumps", "ünïcödé")
       .toDF("s")
@@ -2248,47 +1904,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(k(0) && k(1))
   }
 
-  test("BPE induction: canonical merge sequence with deterministic ties") {
-    // low*5 lower*2 newest*6 widest*3: round-1 max is the 9-9 tie
-    // (e s)/(s t) -> pair-asc admits (e s); then (es t)=9; then the 7-7
-    // (l o)/(o w) tie -> (l o)
-    val d = Seq(
-      Seq.fill(5)("low").mkString(" ") + " lower lower",
-      Seq.fill(6)("newest").mkString(" "),
-      "widest widest widest").toDF("text")
-    val merges = Tokenizer.bpeTrain(d, "text", 3)
-    assert(merges == Seq(("e s", 9L), ("es t", 9L), ("l o", 7L)))
-  }
-
-  test("BPE merge fold is greedy left-to-right non-overlapping") {
-    val d = Seq("aaa aaa aaaa").toDF("text")
-    val syms = Tokenizer.wordSymbols(d, "text")
-    val merged = Tokenizer.applyMerge(syms, "a", "a")
-      .select(col("w"), col("syms")).as[(String, Seq[String])].collect().toMap
-    assert(merged("aaa") == Seq("aa", "a"))
-    assert(merged("aaaa") == Seq("aa", "aa"))
-    // a fully-merged 2-char word leaves the pair stream (1 symbol left)
-    val d2 = Seq("ab ab abc").toDF("text")
-    val s2 = Tokenizer.applyMerge(Tokenizer.wordSymbols(d2, "text"), "a", "b")
-    val pairs = Tokenizer.pairCounts(s2).as[(String, Long)].collect().toMap
-    assert(pairs == Map("ab c" -> 1L))
-  }
-
-  test("BPE encode: per-doc token counts under a trained model") {
-    val d = Seq(
-      (1L, Seq.fill(5)("low").mkString(" ") + " lower lower"),
-      (2L, Seq.fill(6)("newest").mkString(" ")),
-      (3L, "widest widest widest")).toDF("doc_id", "text")
-    val merges = Tokenizer.bpeTrain(d, "text", 2).map { case (p, _) =>
-      val Array(a, b) = p.split(" ", 2); (a, b)
-    }
-    assert(merges == Seq(("e", "s"), ("es", "t")))
-    // low: 3 syms (untouched); lower: 5; newest: n,e,w,est = 4; widest: 4
-    val r = Tokenizer.tokenCounts(d, "doc_id", "text", merges)
-      .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-    assert(r == Seq((1L, 7L, 25L), (2L, 6L, 24L), (3L, 3L, 12L)))
-  }
-
   test("token-budget mix: under-budget strata whole, over-budget rated down") {
     // A: 2 docs x 5 words = 10, budget 20 -> rate min(1000, 20000/10) = 1000
     // B: 8 docs x 5 words = 40, budget 20 -> rate 20*1000/40 = 500
@@ -2839,40 +2454,6 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(x =>
         x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getString(3)))).toMap
     assert(got == expect)
-  }
-
-  test("property: greedy merge preserves content and eliminates the pair") {
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    def samples[A](g: Gen[A], n: Int): Seq[A] =
-      (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(97L + i)))
-    def model(xs: Seq[String]): Seq[String] =
-      xs.foldLeft(Vector.empty[String]) { (acc, x) =>
-        if (acc.nonEmpty && acc.last == "a" && x == "b")
-          acc.init :+ "ab"
-        else acc :+ x
-      }
-    val genSyms = Gen.choose(0, 10)
-      .flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "c")).map(_.toVector))
-    val arrays = samples(genSyms, 60).zipWithIndex
-      .map { case (a, i) => (i.toLong, a) }
-    val d = arrays.toDF("id", "syms")
-    val got = Tokenizer.applyMerge(d, "a", "b")
-      .select("id", "syms").as[(Long, Seq[String])].collect().toMap
-    arrays.foreach { case (i, a) =>
-      val m = model(a)
-      assert(got(i) == m, a)
-      assert(got(i).mkString == a.mkString, a)  // content preserved
-      // the merged pair never survives adjacent in the output
-      assert(!got(i).zip(got(i).drop(1)).contains(("a", "b")), a)
-    }
-  }
-
-  test("BPE word table case-folds and keeps only [a-z]{2,} words") {
-    val d = Seq("Hello WORLD ab3 ok x").toDF("text")
-    val ws = Tokenizer.wordSymbols(d, "text")
-      .select("w").as[String].collect().toSet
-    assert(ws == Set("hello", "world", "ok"))
   }
 
   test("decontaminatePairs: per-pair attribution, rollup equals decontaminate") {

@@ -1,13 +1,14 @@
-package graft.plans
+package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-/** AQE skew-join splitting is the runtime guard for hot join keys. This
-  * pins that the engine's join shapes actually inherit it: a deliberately
-  * skewed join, with the thresholds scaled to test data, must execute with
-  * AQE marking and splitting the skewed partition. */
+/** SCALE.md names AQE skew-join splitting as the runtime guard for hot
+  * keys that slip past the static bucket caps (LSH buckets, shingle df).
+  * This pins that the engine's join shapes actually inherit it: a
+  * deliberately skewed join, with the thresholds scaled to test data,
+  * must execute with AQE marking and splitting the skewed partition. */
 class SkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -30,7 +31,8 @@ class SkewSpec extends AnyFunSuite {
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
       conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      // one hot key (key 0: 50k rows) among uniform cold keys
+      // one hot bucket (key 0: 50k rows) among uniform cold keys — the
+      // adversarial LSH-bucket shape the static caps guard against
       // xxhash payloads: incompressible, so partition BYTE sizes track row
       // counts (constant/sequential longs lz4-compress to almost nothing
       // and stay under any skew threshold)
