@@ -299,7 +299,8 @@ object FilterCompiler {
     * The family groups here mix v4 and v6 tables, so this polymorphic form
     * MUST use the runtime version gate — the statically-folded
     * [[matchItemFor]] is only sound when the rib (hence key family) is
-    * known. Used by the window paths (historyExists, entryMatchFlag). */
+    * known. Used by RibViews.historyExists, whose frame may hold several
+    * ribs; one-rib frames use [[acceptFor]]. */
   def matchItem(item: FilterItem): Column = {
     val rib = col("rib")
     val pfx = col("prefix")
@@ -489,7 +490,8 @@ object FilterCompiler {
   /** [[accept]] specialized to a statically-known rib kind: the key-match
     * side folds to that rib's algebra alone. Used by the per-rib-partition
     * union scan (RibViews.scan), where each branch's predicate must fit in
-    * one whole-stage-codegen method. */
+    * one whole-stage-codegen method, and by the one-rib JSON page match
+    * (RibViews.entryMatchFlag). */
   def acceptFor(ribName: String, f: RouteFilter): Column =
     if (f.isEmpty) lit(true)
     else f.terms.map { t =>

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.filter.{FilterCompiler, FilterParser, RouteFilter}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.filter.{FilterParser, RouteFilter}
 import graft.functions.IpFns
 
 /** P6 JSON tree projection + the `/api/json` response lifecycle
@@ -13,9 +14,10 @@ import graft.functions.IpFns
   * Output per route key: {session_id → {path_id → {ts_millis →
   * {Active, Attrs, Labels}}}}, history newest-first capped at `maxdepth`
   * (take-after-filter from the newest side, src/bgpsvc.rs:519-531), empty
-  * subtrees pruned. The whole rollup is one chain of keyed aggregations —
-  * shuffle-partitioned by route key, no driver-side loops until the final
-  * bounded page collect. */
+  * subtrees pruned. The key set is one keyed aggregation over the rib's
+  * slice of the log, shuffle-partitioned by the route key; the page's
+  * entry rows — bounded by limit × rings × history — are collected once
+  * and the tree is rendered on the driver. */
 object RibJson {
 
   final case class RibParams(
@@ -29,10 +31,22 @@ object RibJson {
       // `skip` when set.
       pageAfterId: Option[Long] = None)
 
-  /** Route-key columns WITHOUT session/path — the top-level map key of the
-    * response (the reference's per-SAFI BTreeMap key). */
-  val routeKeyCols: Seq[String] =
-    Seq("rib", "prefix", "prefix_str", "rd", "labels", "l2", "mvpn", "evpn", "mdt_group")
+  /** One rendered route of a page: its keyset-continuation token
+    * (`route_id`), display key and history tree. */
+  final case class PageItem(routeId: Long, itemKey: String, itemsJson: String)
+
+  /** The page order over entry rows: the NLRI order, then the `route_id`
+    * surrogate. The tuple does not cover the exotic key structs (evpn and
+    * mvpn keys have null prefix, rd and labels; l2vpls keys share a few
+    * rds), so many keys tie on it alone; the surrogate makes skip pages
+    * over them well defined and lets a keyset walk step past a tie. */
+  private def pageOrder: Seq[Column] = nlriOrder :+ col("route_id")
+
+  private def nlriOrder: Seq[Column] = RibViews.nlriOrderFor(includeRing = false)
+
+  /** [[pageOrder]] over the key-flag aggregate, which carries the NLRI
+    * order tuple as the columns `k0`, `k1`, …. */
+  private def keyOrder: Seq[Column] = nlriOrder.indices.map(i => col(s"k$i")) :+ col("route_id")
 
   /** Engine-canonical display key for a route (reference uses the NLRI
     * Display impls as JSON keys, src/bgpsvc.rs:635). Prefix-shaped ribs
@@ -43,7 +57,8 @@ object RibJson {
     * (null fields omitted, schema field order — deterministic). Without
     * the suffix, distinct exotic routes sharing an RD would collide in
     * JSON pages and in the text-key snapshot export. The input frame must
-    * carry the [[routeKeyCols]].
+    * carry the route-key columns (rib, prefix, prefix_str, rd, labels, l2,
+    * mvpn, evpn, mdt_group).
     *
     * Oracle note (r13 stretch ask): `to_json` serializes struct fields in
     * SCHEMA DECLARATION order (Model.scala's L2Key/MvpnKey/EvpnKey field
@@ -77,18 +92,6 @@ object RibJson {
     c
   }
 
-  /** One JSON-object level from collected (numeric key, value-json string)
-    * pairs: sort by key, join as {"k":v,...}. Values are already JSON text,
-    * so the collected structs stay orderable and the generated code small
-    * (a nested-map rollup exceeded Janino's method limits and fell out of
-    * codegen). */
-  private def jsonLevel(pairs: Column, asc: Boolean, depth: Option[Int]): Column = {
-    val sorted = sort_array(pairs, asc = asc)
-    val capped = depth.map(d => slice(sorted, 1, d)).getOrElse(sorted)
-    concat(lit("{"), concat_ws(",", transform(capped,
-      x => concat(lit("\""), x("k").cast("string"), lit("\":"), x("v")))), lit("}"))
-  }
-
   /** Entries with the route-key surrogate: the stored `route_id` when
     * present (event-log frames), else synthesized with the SAME hash
     * (RouteEventGen stores xxhash64 over these columns in this order), so
@@ -103,46 +106,43 @@ object RibJson {
       xxhash64(col("rib"), col("prefix"), col("rd"), col("labels"),
         col("l2"), col("mvpn"), col("evpn"), col("mdt_group")))
 
-  /** The nested items tree for a set of route-key rows:
-    * one row per route key with (item_key, items_json). */
-  def itemsTree(entries: DataFrame, p: RibParams): DataFrame = {
-    val filtered = withRouteId(entries).where(passes(p))
-    val depth = if (p.maxDepth > 0) Some(p.maxDepth) else None
-    def rk = first(col("__rk")).as("__rk")
-    // history level: newest-first, take maxdepth AFTER the filter; the
-    // display columns ride along as one first()-elected struct per group
-    val lvl1 = filtered
-      .withColumn("__rk", struct(routeKeyCols.map(col): _*))
-      .groupBy(col("route_id"), col("session_id"), col("path_id"))
-      .agg(jsonLevel(collect_list(struct(
-        unix_millis(col("ts")).as("k"), to_json(entryStruct).as("v"))),
-        asc = false, depth).as("hist"), rk)
-    // path level
-    val lvl2 = lvl1.groupBy(col("route_id"), col("session_id"))
-      .agg(jsonLevel(collect_list(struct(col("path_id").as("k"), col("hist").as("v"))),
-        asc = true, None).as("paths"), rk)
-    // session level
-    lvl2.groupBy(col("route_id"))
-      .agg(jsonLevel(collect_list(struct(
-        col("session_id").cast("long").as("k"), col("paths").as("v"))),
-        asc = true, None).as("sessions"), rk)
-      .select(col("route_id") +: col("sessions") +:
-        routeKeyCols.map(c => col(s"__rk.$c").as(c)): _*)
-      // route_id rides along as the keyset-continuation token for the NEXT
-      // page (RibParams.pageAfterId); response() does not serialize it
-      .select(col("route_id") +: routeKeyCols.map(col) :+
-        itemKey.as("item_key") :+ col("sessions").as("items_json"): _*)
-  }
-
   /** Full `/api/json` page: filter → existential match → deterministic
     * pagination → items tree; empty page falls back to the supernet scan
-    * sorted most-specific-first (Q5, src/bgpsvc.rs:638-658). Returns
-    * (item_key, items_json) rows in page order plus the found/length counts. */
+    * sorted most-specific-first (Q5, src/bgpsvc.rs:638-658). Returns the
+    * rendered items in page order plus the found/length counts. */
   def jsonPage(events: DataFrame, ribName: String, filterStr: String,
-      p: RibParams): (DataFrame, Long, Long) = {
-    val (entries, found, length) = pagedEntries(events, ribName, filterStr, p)
-    (itemsTree(entries, p)
-      .orderBy(RibViews.nlriOrderFor(includeRing = false): _*), found, length)
+      p: RibParams): (Seq[PageItem], Long, Long) = {
+    val (entries, order, found, length) = pagedEntries(events, ribName, filterStr, p)
+    (render(entries, order, p), found, length)
+  }
+
+  /** Renders the page's entries, collected in one job, into items in page
+    * order (`order`: the page's route ids). The orders are those of a
+    * Spark `sort_array` over (key, json) structs: history by ts
+    * descending, ties by the entry JSON descending in UTF-8 byte order,
+    * capped at `maxDepth` (0 = uncapped) after the response filter; paths
+    * and sessions by id ascending. A route with no entry left after the
+    * filter is left out. */
+  private def render(entries: DataFrame, order: Seq[Long], p: RibParams): Seq[PageItem] = {
+    val rows = entries.where(passes(p))
+      .select(col("route_id"), itemKey, col("session_id").cast("long"),
+        col("path_id").cast("long"), unix_millis(col("ts")), to_json(entryStruct))
+      .collect()
+    def obj(kvs: Seq[(Long, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def byId(rs: Seq[Row], i: Int)(level: Seq[Row] => String): String =
+      obj(rs.groupBy(_.getLong(i)).toSeq.sortBy(_._1).map { case (k, g) => (k, level(g)) })
+    val newestFirst: Ordering[(Long, UTF8String)] =
+      Ordering.Tuple2(Ordering.Long, Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)).reverse
+    def history(rs: Seq[Row]): String = {
+      val hist = rs.map(r => (r.getLong(4), UTF8String.fromString(r.getString(5))))
+        .sorted(newestFirst)
+      obj((if (p.maxDepth > 0) hist.take(p.maxDepth) else hist)
+        .map { case (ts, v) => (ts, v.toString) })
+    }
+    val byRoute = rows.toSeq.groupBy(_.getLong(0))
+    order.flatMap(id => byRoute.get(id).map(rs =>
+      PageItem(id, rs.head.getString(1), byId(rs, 2)(byId(_, 3)(history)))))
   }
 
   /** The page's entry rows PRE-stringification: (item_key, session_id,
@@ -156,8 +156,8 @@ object RibJson {
     * without event_id: ts only). */
   def structuralPage(events: DataFrame, ribName: String, filterStr: String,
       p: RibParams): DataFrame = {
-    val (entries, _, _) = pagedEntries(events, ribName, filterStr, p)
-    val filtered = withRouteId(entries).where(passes(p))
+    val (entries, _, _, _) = pagedEntries(events, ribName, filterStr, p)
+    val filtered = entries.where(passes(p))
     val ord =
       if (filtered.columns.contains("event_id")) Seq(col("ts").desc, col("event_id").desc)
       else Seq(col("ts").desc)
@@ -177,37 +177,47 @@ object RibJson {
         col("ts_ms"), col("active"), col("attrs_hash"))
   }
 
+  /** The rib's slice of the log, with the route-key surrogate. */
+  private def ribSlice(events: DataFrame, ribName: String): DataFrame =
+    withRouteId(events.where(col("rib") === ribName))
+
+  /** The key-flag aggregate of a page: one row per route key of the rib,
+    * `__m` = 1 when an in-depth entry matches the filter (found), every
+    * key counting toward length — the reference's second full scan for
+    * `found` (src/bgpsvc.rs:604-613) folded into the same aggregation.
+    * Grouping on the route_id surrogate keeps the aggregate key one long;
+    * the NLRI order tuple rides along as first() primitives `k0`, `k1`, …,
+    * which keeps the aggregation a hash aggregate. */
+  private[operators] def keyFlags(events: DataFrame, ribName: String,
+      filter: RouteFilter, p: RibParams): DataFrame = {
+    val d = ribSlice(events, ribName)
+    val flag = RibViews.entryMatchFlag(d, ribName, filter, p.maxDepth,
+      p.onlyActive, p.changedAfterMs, p.changedBeforeMs)
+    d.withColumn("__em", flag)
+      .groupBy(col("route_id"))
+      .agg(max(when(col("__em"), 1).otherwise(0)).as("__m"),
+        nlriOrder.zipWithIndex.map { case (c, i) => first(c).as(s"k$i") }: _*)
+  }
+
   /** Shared page machinery: counts + page-key selection + the bounded
-    * broadcast semi-join back into the log. Returns (pageEntries, found,
-    * length) where pageEntries holds ALL history rows of the page's route
-    * keys. */
+    * broadcast semi-join back into the log. Returns (pageEntries, page
+    * route ids in item order, found, length) where pageEntries holds ALL
+    * history rows of the page's route keys. */
   private def pagedEntries(events: DataFrame, ribName: String,
-      filterStr: String, p: RibParams): (DataFrame, Long, Long) = {
-    val d = withRouteId(events.where(col("rib") === ribName))
-    val filter = FilterParser.parse(filterStr)
-    // one keyed pass: per route key, did any in-depth entry match (found)
-    // — and every key counts toward length (reference's second full scan
-    // for `found`, src/bgpsvc.rs:604-613, folded into the same aggregation)
-    val flag = RibViews.entryMatchFlag(d, filter, p.maxDepth, p.onlyActive,
-      p.changedAfterMs, p.changedBeforeMs)
+      filterStr: String, p: RibParams): (DataFrame, Seq[Long], Long, Long) = {
+    val d = ribSlice(events, ribName)
     // the aggregated key set feeds BOTH the counts job and the page job:
     // cache it so the match evaluation runs once. The key set is orders of
     // magnitude smaller than the event log (one row per route key), so
     // MEMORY_AND_DISK is safe at scale; unpersisted below once the bounded
-    // page keys are collected. Grouping on the route_id surrogate keeps the
-    // aggregate key one long; display columns ride along as a first() struct.
-    val keyFlags = d.withColumn("__em", flag)
-      .withColumn("__rk", struct(routeKeyCols.map(col): _*))
-      .groupBy(col("route_id"))
-      .agg(max(when(col("__em"), 1).otherwise(0)).as("__m"),
-        first(col("__rk")).as("__rk"))
+    // page keys are collected.
+    val flags = keyFlags(events, ribName, FilterParser.parse(filterStr), p)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = keyFlags.agg(
+    val counts = flags.agg(
       sum(col("__m")).as("found"), count(lit(1)).as("length")).collect()(0)
     val found = if (counts.isNullAt(0)) 0L else counts.getLong(0)
     val length = counts.getLong(1)
-    val keys = keyFlags.where(col("__m") === 1)
-      .select(col("route_id") +: routeKeyCols.map(c => col(s"__rk.$c").as(c)): _*)
+    val keys = flags.where(col("__m") === 1)
     val pageKeyDf =
       if (found > 0) p.pageAfterId match {
         case Some(aid) =>
@@ -217,8 +227,7 @@ object RibJson {
           // skip-scan at any page depth. An unknown route_id yields no
           // token → first page (the reference's tolerant-params behavior).
           val tokDf = keys.where(col("route_id") === aid)
-            .select(RibViews.nlriOrderFor(includeRing = false)
-              .zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+            .select(keyOrder.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
           val schema = tokDf.schema
           val token = tokDf.collect().headOption.map { r =>
             struct(schema.fields.zipWithIndex.map { case (f, i) =>
@@ -226,26 +235,28 @@ object RibJson {
                 .cast(f.dataType).as(f.name)
             }: _*)
           }
-          RibViews.pageAfter(keys, token, p.limit).select(col("route_id"))
+          RibViews.pageAfter(keys, token, p.limit, keyOrder)
         case None =>
-          RibViews.page(keys, p.skip, p.limit).select(col("route_id"))
+          RibViews.page(keys, p.skip, p.limit, keyOrder)
       }
-      else // supernet fallback, most-specific first
+      else // supernet fallback: the most-specific `limit` keys, listed in page order
         RibViews.scanSuper(d, filterStr)
           .dropDuplicates("route_id")
-          .orderBy(RibViews.keyLen.desc +: RibViews.nlriOrderFor(includeRing = false): _*)
-          .limit(p.limit).select(col("route_id"))
+          .orderBy(RibViews.keyLen.desc +: pageOrder: _*)
+          .limit(p.limit)
+          .orderBy(pageOrder: _*)
     // the page is bounded by `limit` (reference contract, default 1000):
     // collect it, release the cached key set, and broadcast the keys into
     // the entry semi-join — at scale this is a broadcast of ≤ limit longs
     // against the log scan, the plan a keyed point-page wants
-    val collected = pageKeyDf.collect()
-    keyFlags.unpersist(false)
-    val pageKeys = d.sparkSession.createDataFrame(
-      java.util.Arrays.asList(collected: _*), pageKeyDf.schema)
+    val order = pageKeyDf.select(col("route_id")).collect().map(_.getLong(0)).toSeq
+    flags.unpersist(false)
+    val s = d.sparkSession
+    import s.implicits._
+    val pageKeys = order.toDF("route_id")
     val pageEntries = d.join(broadcast(pageKeys),
       d("route_id") === pageKeys("route_id"), "left_semi")
-    (pageEntries, found, length)
+    (pageEntries, order, found, length)
   }
 
   /** The complete reference-shaped response document
@@ -257,12 +268,11 @@ object RibJson {
   def response(events: DataFrame, ribName: String, filterStr: String,
       p: RibParams): String = {
     val (items, found, length) = jsonPage(events, ribName, filterStr, p)
-    val rows = items.select(col("route_id"), col("item_key"), col("items_json")).collect()
-    val kv = rows
-      .map(r => "\"" + r.getString(1).replace("\"", "\\\"") + "\":" + r.getString(2))
+    val kv = items
+      .map(i => "\"" + i.itemKey.replace("\"", "\\\"") + "\":" + i.itemsJson)
     val nextAfter =
-      if (found > 0 && rows.length >= p.limit && rows.nonEmpty)
-        rows.last.getLong(0).toString
+      if (found > 0 && items.length >= p.limit && items.nonEmpty)
+        items.last.routeId.toString
       else "null"
     s"""{"ribtype":"$ribName","length":$length,"skip":${p.skip},""" +
       s""""limit":${p.limit},"maxdepth":${p.maxDepth},"onlyactive":${p.onlyActive},""" +

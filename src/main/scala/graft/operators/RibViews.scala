@@ -952,10 +952,14 @@ object RibViews {
     df.withColumn("__m", keyMatch).where(col("__m") === 1).drop("__m")
   }
 
-  /** Per-entry match flag without the existence window — building block for
-    * single-pass found/length aggregations (see RibJson.jsonPage). */
-  def entryMatchFlag(df: DataFrame, filter: RouteFilter, maxDepth: Int,
-      onlyActive: Boolean, changedAfterMs: Option[Long],
+  /** Per-entry match flag without the existence window, for a frame that
+    * holds ONE rib — the building block of RibJson's key-flag aggregate.
+    * The match is [[FilterCompiler.acceptFor]] specialized to that rib (≡
+    * `matchRoute(f) <=> true` on its rows, the equivalence [[scan]] also
+    * relies on), so the depth-window stage compiles one rib's key algebra
+    * instead of the 15-way dispatch. */
+  def entryMatchFlag(df: DataFrame, ribName: String, filter: RouteFilter,
+      maxDepth: Int, onlyActive: Boolean, changedAfterMs: Option[Long],
       changedBeforeMs: Option[Long]): Column = {
     val wAll = keyWindowAsc(df)
     var passes: Column = lit(true)
@@ -965,8 +969,7 @@ object RibViews {
     val nAll = count(lit(1)).over(Window.partitionBy(ringPart(df): _*))
     val rnPass = sum(when(passes, 1).otherwise(0)).over(
       wAll.rowsBetween(Window.unboundedPreceding, 0))
-    passes && (rnPass > nAll - maxDepth) &&
-      (FilterCompiler.matchRoute(filter) <=> lit(true))
+    passes && (rnPass > nAll - maxDepth) && FilterCompiler.acceptFor(ribName, filter)
   }
 
   /** SURVEY O2: the reference's BTreeMap range prune (most-specific
@@ -1113,26 +1116,34 @@ object RibViews {
     * driver merge of page-sized slices — so the full matched key set never
     * funnels through one task (round-1's global row_number window did
     * exactly that; VERDICT r1 item 2). For deep scans use [[pageAfter]]. */
-  def page(df: DataFrame, skip: Int, limit: Int): DataFrame = {
-    val ring = df.columns.contains("session_id")
-    val ord = nlriOrderFor(ring)
+  def page(df: DataFrame, skip: Int, limit: Int): DataFrame =
+    page(df, skip, limit, nlriOrderFor(df.columns.contains("session_id")))
+
+  /** [[page]] over an explicit order. */
+  def page(df: DataFrame, skip: Int, limit: Int, ord: Seq[Column]): DataFrame =
     df.orderBy(ord: _*).offset(skip).limit(limit)
-  }
 
   /** Keyset continuation (the production path for deep pagination named in
     * SCALE.md): resume strictly after `token`, the [[pageToken]] of the last
     * row of the previous page. O(limit) result work per call regardless of
     * page depth — no skip-scan. */
-  def pageAfter(df: DataFrame, token: Option[Column], limit: Int): DataFrame = {
-    val ring = df.columns.contains("session_id")
-    val ord = nlriOrderFor(ring)
-    val cont = token.map(t => pageToken(ring) > t).getOrElse(lit(true))
+  def pageAfter(df: DataFrame, token: Option[Column], limit: Int): DataFrame =
+    pageAfter(df, token, limit, nlriOrderFor(df.columns.contains("session_id")))
+
+  /** [[pageAfter]] over an explicit order; `token` is that order's
+    * [[orderToken]]. */
+  def pageAfter(df: DataFrame, token: Option[Column], limit: Int,
+      ord: Seq[Column]): DataFrame = {
+    val cont = token.map(t => orderToken(ord) > t).getOrElse(lit(true))
     df.where(cont).orderBy(ord: _*).limit(limit)
   }
 
   /** Continuation token: the NLRI order tuple as a comparable struct
     * (Spark orders structs field-by-field, nulls first — same as the
     * column-wise sort order used by [[page]]). */
-  def pageToken(ring: Boolean = true): Column =
-    struct(nlriOrderFor(ring).zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+  def pageToken(ring: Boolean = true): Column = orderToken(nlriOrderFor(ring))
+
+  /** An order tuple as a comparable struct with fields `k0`, `k1`, …. */
+  def orderToken(ord: Seq[Column]): Column =
+    struct(ord.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
 }

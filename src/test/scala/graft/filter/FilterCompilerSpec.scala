@@ -2,6 +2,7 @@ package graft.filter
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import graft.SparkTestBase
 import graft.model._
 
@@ -330,5 +331,43 @@ class FilterCompilerSpec extends AnyFunSuite {
       ev("ipv4u", Model.v4("10.0.0.1", 32), attrs = c),
       ev("ipv4u", Model.v4("10.0.0.2", 32), attrs = Model.emptyAttrs)))
     assert(count(d2, "-community:100:2345") == 1) // attr Yes flipped to No
+  }
+
+  // acceptFor(r, f) is the one-rib match of RibViews.scan and of the JSON
+  // page's key-flag aggregate; both rely on it equalling the polymorphic
+  // `matchRoute(f) <=> true` on rib r's rows
+  test("property: acceptFor(rib, f) equals matchRoute(f) <=> true on every rib's rows") {
+    val s = spark
+    import s.implicits._
+    // the generator derives every key and attribute from (event_id,
+    // user_id); 4800 events with seeded user ids reach all 15 ribs
+    val rnd = new scala.util.Random(7)
+    val log = graft.sources.RouteEventGen.fromEvents((0L until 4800L).map(i =>
+      (i, rnd.nextInt(1500).toLong, new java.sql.Timestamp(1700000000000L + i * 1000L)))
+      .toDF("event_id", "user_id", "ts"))
+    val filters = Seq(
+      "10.0.0.0/8", "-10.0.0.0/8", "10.4.0.0/14", "10.4.1.7",
+      "2001::/16", "-2001::/16", "2001:0:4:100::/56", "2001:0:4:100::1",
+      "224.0.0.0/4", "ff05::/16", "24", "-28", "64",
+      "re:^10\\.4", "re:^1[0-9]*:", "-re:100",
+      "rd:100:1000", "-rd:300:501", "rd:130:1031 10.0.0.0/8",
+      "as:174", "as:^65001", "as:100$", "-as:", "community:10:25",
+      "-community:10:25", "nh:10.0.0.0/8", "nh:2001::/16",
+      "rt:100:1000", "10.0.0.0/8 -community:10:25")
+    val parsed = filters.map(FilterParser.parse)
+    parsed.zip(filters).foreach { case (f, text) => assert(f.terms.nonEmpty, text) }
+    var accepted, rejected = 0L
+    FilterCompiler.ribValues.foreach { r =>
+      val rows = log.where(col("rib") === r).select(parsed.flatMap(f =>
+        Seq(FilterCompiler.acceptFor(r, f), FilterCompiler.matchRoute(f) <=> lit(true))): _*)
+        .collect()
+      assert(rows.nonEmpty, s"no $r rows in the fixture")
+      rows.foreach(row => filters.indices.foreach { i =>
+        val a = row.getBoolean(2 * i)
+        assert(a == row.getBoolean(2 * i + 1), s"$r: ${filters(i)}")
+        if (a) accepted += 1 else rejected += 1
+      })
+    }
+    assert(accepted > 0 && rejected > 0, s"accepted $accepted, rejected $rejected")
   }
 }

@@ -48,14 +48,12 @@ class ApiSpec extends AnyFunSuite {
     }
     val d = s.createDataset(evs).toDF()
     val params = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 10)
-    def keysOf(items: org.apache.spark.sql.DataFrame): Seq[String] =
-      items.select("item_key").collect().map(_.getString(0)).toSeq
+    def keysOf(items: Seq[RibJson.PageItem]): Seq[String] = items.map(_.itemKey)
     val (page1, found, length) = RibJson.jsonPage(d, "ipv4u", "10.1.0.0/16", params)
     assert(found == 12 && length == 12)
-    val p1 = page1.select("route_id", "item_key").collect()
-    assert(p1.map(_.getString(1)).toSeq == (0 until 5).map(i => s"10.1.$i.0/24"))
+    assert(keysOf(page1) == (0 until 5).map(i => s"10.1.$i.0/24"))
     // page 2 via keyset (after = last route_id of page 1) ≡ page 2 via skip
-    val afterId = p1.last.getLong(0)
+    val afterId = page1.last.routeId
     val (pk2, _, _) = RibJson.jsonPage(d, "ipv4u", "10.1.0.0/16",
       params.copy(pageAfterId = Some(afterId)))
     val (ps2, _, _) = RibJson.jsonPage(d, "ipv4u", "10.1.0.0/16",
@@ -63,7 +61,7 @@ class ApiSpec extends AnyFunSuite {
     assert(keysOf(pk2) == (5 until 10).map(i => s"10.1.$i.0/24"))
     assert(keysOf(pk2) == keysOf(ps2))
     // walk page 3 the same way — the deep-pagination path terminates
-    val afterId2 = pk2.select("route_id", "item_key").collect().last.getLong(0)
+    val afterId2 = pk2.last.routeId
     val (pk3, _, _) = RibJson.jsonPage(d, "ipv4u", "10.1.0.0/16",
       params.copy(pageAfterId = Some(afterId2)))
     assert(keysOf(pk3) == (10 until 12).map(i => s"10.1.$i.0/24"))
@@ -87,6 +85,48 @@ class ApiSpec extends AnyFunSuite {
     assert(itemKeys(r3) == (10 until 12).map(i => s"10.1.$i.0/24"))
     // short final page → no continuation token
     assert(mapper.readTree(r3).get("next_after").isNull)
+  }
+
+  test("keyset walk over tied NLRI keys (evpn, mvpn) visits every key once") {
+    val s = spark
+    import s.implicits._
+    // evpn and mvpn keys have null prefix, rd and labels: every key ties on
+    // the NLRI order tuple, and only route_id orders them. 7 matching keys
+    // per rib, one more outside the filter.
+    def host(i: Int) = Some(Model.v4(s"10.2.0.$i", 32))
+    def route(rib: String, i: Int) = {
+      val (mvpn, evpn) =
+        if (rib == "evpn") (None, Some(EvpnKey(2, Rd(400, i), host(i), None)))
+        else (Some(MvpnKey(1, Rd(300, i), host(i), None, None, None, None, None,
+          None, None)), None)
+      RouteEvent(new java.sql.Timestamp(base + i), rib, 0, 0L, active = true,
+        None, None, None, None, None, mvpn, evpn, None, Model.emptyAttrs, i.toLong)
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    for (rib <- Seq("evpn", "mvpn")) {
+      val d = s.createDataset((1 to 7).map(route(rib, _)) :+ {
+          val r = route(rib, 8)
+          r.copy(evpn = r.evpn.map(_.copy(ip = Some(Model.v4("10.9.0.8", 32)))),
+            mvpn = r.mvpn.map(_.copy(originator = Some(Model.v4("10.9.0.8", 32)))))
+        }).toDF()
+      def page(qs: String) =
+        mapper.readTree(Api.handle(d, s"/api/json/$rib?filter=10.2.0.0%2F16&limit=3$qs").get)
+      val walked = scala.collection.mutable.Buffer[String]()
+      var doc = page("")
+      assert(doc.get("found").asLong == 7, doc)
+      var guard = 0
+      while ({ walked ++= doc.get("items").fieldNames.asScala; !doc.get("next_after").isNull }) {
+        guard += 1; assert(guard < 10, "runaway walk")
+        doc = page("&after=" + doc.get("next_after").asText)
+      }
+      assert(walked.size == 7 && walked.distinct.size == 7, walked)
+      assert(!walked.exists(_.contains("\"rdl\":8}")), walked) // key 8 does not match
+      // skip pages over the tied keys list the same keys in the same order
+      val skipped = (0 until 7 by 3).flatMap(k =>
+        page(s"&skip=$k").get("items").fieldNames.asScala)
+      assert(skipped == walked.toSeq, s"$rib: $skipped vs $walked")
+    }
   }
 
   test("params: unparseable values are ignored, keeping defaults") {

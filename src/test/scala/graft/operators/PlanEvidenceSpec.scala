@@ -82,16 +82,17 @@ class PlanEvidenceSpec extends AnyFunSuite {
   }
 
   test("json page rollup groups on surrogate longs and compiles its codegen") {
-    // all three rollup levels and the key-flag aggregate must key on the
-    // route_id surrogate (one long), never the wide 9-column route-key
-    // struct — the struct key blew Janino's method limit and fell back to
-    // interpreted eval (SCALE.md P6 wart). SparkTestBase runs with
+    // the key-flag aggregate — the only aggregate the page runs — must key
+    // on the route_id surrogate (one long), never the wide 9-column
+    // route-key struct — the struct key blew Janino's method limit and fell
+    // back to interpreted eval (SCALE.md P6 wart). SparkTestBase runs with
     // spark.sql.codegen.fallback=false, so actually EXECUTING the page
     // proves every generated stage compiles; the plan-string check pins
     // the grouping keys so a regression is named, not just slow.
-    val (items, found, length) = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14",
-      RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5))
-    val plan = items.queryExecution.executedPlan.toString
+    val params = RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5)
+    val flags = RibJson.keyFlags(re, "ipv4u",
+      graft.filter.FilterParser.parse("10.4.0.0/14"), params)
+    val plan = flags.queryExecution.executedPlan.toString
     val aggKeys = "(?:HashAggregate|ObjectHashAggregate)\\(keys=\\[([^\\]]*)\\]".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq
     assert(aggKeys.nonEmpty, plan.take(3000))
@@ -99,7 +100,22 @@ class PlanEvidenceSpec extends AnyFunSuite {
       assert(!k.contains("rib#") && !k.contains("__rk"),
         s"wide-struct aggregate key leaked back into the page rollup: [$k]")
     }
-    assert(items.collect().length > 0 && found > 0 && length > 0)
+    assert(flags.collect().nonEmpty)
+    val (items, found, length) = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params)
+    assert(items.nonEmpty && found > 0 && length > 0)
+  }
+
+  test("an ipv4u page's key-flag plan compiles only the ipv4u key algebra") {
+    // the match flag is specialized to the page's rib: no evpn, mvpn or l2
+    // branch of the 15-way dispatch reaches the depth-window stage, and the
+    // scan reads none of those key columns
+    val plan = RibJson.keyFlags(re, "ipv4u",
+      graft.filter.FilterParser.parse("10.4.0.0/14 community:10:25"),
+      RibJson.RibParams(limit = 20, maxDepth = 5))
+      .queryExecution.executedPlan.toString
+    val exotic = "\\b(evpn|mvpn|l2)\\b".r.findAllIn(plan).toSeq
+    assert(exotic.isEmpty, s"${exotic.distinct}\n${plan.take(4000)}")
+    assert(plan.contains("prefix"), plan.take(4000))
   }
 
   test("wire decompose stays single-pass: one encode + one decode MapPartitions") {

@@ -32,13 +32,12 @@ class RibJsonSpec extends AnyFunSuite {
       ev(base + 1000, active = true, 2L),
       ev(base + 2000, active = true, 3L),
       ev(base + 500, active = true, 9L, sess = 1)))
-    val (items, found, length) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
+    val (rows, found, length) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
       RibJson.RibParams(maxDepth = 2))
-    val rows = items.collect()
     assert(found == 1 && length == 1)
     assert(rows.length == 1)
-    assert(rows(0).getAs[String]("item_key") == "10.0.0.0/24")
-    val json = rows(0).getAs[String]("items_json")
+    assert(rows(0).itemKey == "10.0.0.0/24")
+    val json = rows(0).itemsJson
     // sessions 0 and 1 present; session 0 capped to newest 2 entries
     assert(json.contains("\"" + (base + 2000) + "\""))
     assert(json.contains("\"" + (base + 1000) + "\""))
@@ -55,11 +54,10 @@ class RibJsonSpec extends AnyFunSuite {
       ev(base, active = false, 1L),
       ev(base + 1000, active = false, 2L),
       ev(base + 500, active = true, 9L, sess = 1)))
-    val (items, found, _) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
+    val (rows, found, _) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
       RibJson.RibParams(onlyActive = true))
-    val rows = items.collect()
     assert(found == 1 && rows.length == 1)
-    val json = rows(0).getAs[String]("items_json")
+    val json = rows(0).itemsJson
     assert(json.startsWith("{\"1\":{")) // session 0 entirely pruned
     assert(json.contains("\"" + (base + 500) + "\""))
   }
@@ -72,7 +70,7 @@ class RibJsonSpec extends AnyFunSuite {
     val (items, found, length) = RibJson.jsonPage(d, "ipv4u", "10.0.0.77",
       RibJson.RibParams())
     assert(found == 0 && length == 2)
-    val keys = items.collect().map(_.getAs[String]("item_key")).toSeq
+    val keys = items.map(_.itemKey)
     assert(keys == Seq("10.0.0.0/16", "10.0.0.0/8") ||
       keys.toSet == Set("10.0.0.0/16", "10.0.0.0/8"))
   }
@@ -97,11 +95,10 @@ class RibJsonSpec extends AnyFunSuite {
     val p = RibJson.RibParams(skip = 5, limit = 10, maxDepth = 3,
       onlyActive = true,
       changedAfterMs = Some(base + 500), changedBeforeMs = Some(base + 4500))
-    val (items, found, length) = RibJson.jsonPage(df(evs), "ipv4u",
+    val (rows, found, length) = RibJson.jsonPage(df(evs), "ipv4u",
       "10.0.0.0/16", p)
     assert(found == 20 && length == 20)
-    val rows = items.collect()
-    assert(rows.map(_.getAs[String]("item_key")).toSeq ==
+    assert(rows.map(_.itemKey) ==
       (5 until 15).map(i => s"10.0.$i.0/24"))
 
     // independently-built expected tree: per ring, entries passing
@@ -121,7 +118,7 @@ class RibJsonSpec extends AnyFunSuite {
     rows.zipWithIndex.foreach { case (row, idx) =>
       val i = idx + 5
       val want = expectedTree(i)
-      val node = mapper.readTree(row.getAs[String]("items_json"))
+      val node = mapper.readTree(row.itemsJson)
       import scala.jdk.CollectionConverters._
       // session keys ascending
       assert(node.fieldNames.asScala.toSeq == want.keys.toSeq.sortBy(_.toLong),
@@ -144,6 +141,50 @@ class RibJsonSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("history ties at one ts order by entry JSON, descending UTF-8 bytes") {
+    // two entries of one ring at the same ts: the newest-first order breaks
+    // the tie on the entry JSON in descending UTF-8 byte order. U+1F600
+    // (UTF-8 F0…) sorts above U+E000 (EE…) by bytes but below it by UTF-16
+    // code units, so the pick under maxdepth=1 pins the byte order.
+    def tie(origin: String, hash: Long) = ev(base, active = true, hash).copy(
+      attrs = Model.emptyAttrs.copy(origin = origin, med = Some(hash)))
+    val emoji = new String(Character.toChars(0x1F600))
+    val d = df(Seq(tie("\uE000", 1L), tie(emoji, 2L), ev(base - 1000, active = true, 3L)))
+    val (all, _, _) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24", RibJson.RibParams())
+    val json = all.head.itemsJson
+    val at = Seq("\"med\":2", "\"med\":1", "\"med\":3").map(json.indexOf(_))
+    assert(at.forall(_ >= 0) && at == at.sorted, json)
+    val (one, _, _) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
+      RibJson.RibParams(maxDepth = 1))
+    assert(one.head.itemsJson.contains("\"med\":2") &&
+      !one.head.itemsJson.contains("\"med\":1"), one.head.itemsJson)
+  }
+
+  test("maxdepth=0 renders the history uncapped") {
+    // no entry is in depth at maxdepth=0, so the page is the supernet
+    // fallback, which lists the route itself with every history entry
+    val d = df((0 until 12).map(j => ev(base + j * 1000, active = true, j.toLong)))
+    val (items, found, length) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/24",
+      RibJson.RibParams(maxDepth = 0))
+    assert(found == 0 && length == 1 && items.map(_.itemKey) == Seq("10.0.0.0/24"))
+    val hist = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(items.head.itemsJson).get("0").get("0")
+    assert(hist.size == 12, items.head.itemsJson)
+  }
+
+  test("supernet fallback leaves out a route whose entries all fail onlyactive") {
+    val d = df(Seq(
+      ev(base, active = true, 1L, pfx = Model.v4("10.0.0.0", 8)),
+      ev(base, active = false, 2L, pfx = Model.v4("10.0.0.0", 16))))
+    val (items, found, length) = RibJson.jsonPage(d, "ipv4u", "10.0.0.77",
+      RibJson.RibParams(onlyActive = true))
+    assert(found == 0 && length == 2)
+    assert(items.map(_.itemKey) == Seq("10.0.0.0/8"))
+    val resp = RibJson.response(d, "ipv4u", "10.0.0.77",
+      RibJson.RibParams(onlyActive = true, limit = 1))
+    assert(!resp.contains("10.0.0.0/16") && resp.endsWith("\"next_after\":null}"), resp)
   }
 
   test("full response document shape") {

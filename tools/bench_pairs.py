@@ -1,0 +1,131 @@
+"""Paired end-to-end benchmark runs: a parent and a change checkout, alternately.
+
+    python3 tools/bench_pairs.py --parent DIR --change DIR \
+        --workloads browse,live --seeds 11,12,13,14 [--seconds 14] \
+        [--trace 0|1] --out plans/page_plan.json [--append]
+
+For every seed and workload it runs `e2ebench/run.py` once from each
+checkout, back to back (the parent first on even pair indices, the change
+first on odd ones, so drift in host load falls on both sides alike), and
+writes every run's result metrics plus, per workload and trace mode, the
+medians of each side, the relative change of the medians and the number of
+pairs in which the change was better. `--append` adds the runs to an
+existing output file and recomputes the summary over all of them.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+# metrics where a larger value is better; every other metric is lower-better
+HIGHER_BETTER = {"req_per_s"}
+
+
+def run_once(tree, workload, seed, seconds, trace):
+    cmd = [sys.executable, os.path.join(tree, "e2ebench", "run.py"), "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+    t0 = time.time()
+    p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    wall = time.time() - t0
+    lines = [l for l in p.stdout.splitlines() if l.strip()]
+    result, report = None, {}
+    for l in lines:
+        try:
+            doc = json.loads(l)
+        except ValueError:
+            continue
+        if isinstance(doc, dict) and "report" in doc:
+            report = doc["report"]
+        elif isinstance(doc, dict) and "metrics" in doc:
+            result = doc
+    run = {"workload": workload, "seed": seed, "trace": trace, "seconds": seconds,
+           "wall_s": round(wall, 1), "exit": p.returncode}
+    if result is None:
+        run["error"] = (p.stderr or "")[-2000:]
+        return run
+    run["correct"] = result["correct"]
+    run["attempted"] = result["attempted"]
+    run["failed"] = result["failed"]
+    metrics = {k: v["value"] for k, v in result["metrics"].items()}
+    # the report line carries the end-to-end metrics of traced runs too
+    for k, v in report.get("end_to_end", {}).items():
+        metrics.setdefault(k, v["value"])
+    run["metrics"] = metrics
+    run["host"] = {k: report.get(k) for k in ("nproc", "load_before", "load_after",
+                                               "calib_sec_before", "calib_sec_after")}
+    return run
+
+
+def summarize(runs):
+    out = {}
+    keys = sorted({(r["workload"], r["trace"]) for r in runs})
+    for workload, trace in keys:
+        rs = [r for r in runs if r["workload"] == workload and r["trace"] == trace]
+        side = {s: [r for r in rs if r["tree"] == s and "metrics" in r] for s in ("parent", "change")}
+        names = sorted(set().union(*[r["metrics"] for r in side["parent"] + side["change"]]))
+        med = {s: {m: statistics.median([r["metrics"][m] for r in side[s] if m in r["metrics"]])
+                   for m in names if any(m in r["metrics"] for r in side[s])}
+               for s in side}
+        rel, better = {}, {}
+        for m in names:
+            pv, cv = med["parent"].get(m), med["change"].get(m)
+            if pv is not None and cv is not None and pv != 0:
+                rel[m] = round(cv / pv - 1, 4)
+            pairs = {}
+            for r in rs:
+                if "metrics" in r and m in r["metrics"]:
+                    pairs.setdefault(r["pair"], {})[r["tree"]] = r["metrics"][m]
+            full = [v for v in pairs.values() if len(v) == 2]
+            up = m in HIGHER_BETTER
+            better[m] = "%d/%d" % (sum((v["change"] > v["parent"]) if up else
+                                       (v["change"] < v["parent"]) for v in full), len(full))
+        out["%s/trace%d" % (workload, trace)] = {
+            "runs": {s: len(side[s]) for s in side},
+            "failed_runs": sum(1 for r in rs if not r.get("correct")),
+            "median": med, "change_vs_parent": rel, "change_better_pairs": better}
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workloads", required=True, help="comma-separated e2ebench workloads")
+    ap.add_argument("--seeds", required=True, help="comma-separated seeds, one pair each")
+    ap.add_argument("--seconds", type=int, default=14)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--out", required=True)
+    ap.add_argument("--append", action="store_true")
+    a = ap.parse_args()
+
+    doc = {"runs": []}
+    if a.append and os.path.exists(a.out):
+        with open(a.out) as fh:
+            doc = json.load(fh)
+    runs = doc["runs"]
+    pair = 1 + max([r["pair"] for r in runs], default=-1)
+    trees = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    for seed in [int(s) for s in a.seeds.split(",")]:
+        for workload in a.workloads.split(","):
+            order = ["parent", "change"] if pair % 2 == 0 else ["change", "parent"]
+            for side in order:
+                r = run_once(trees[side], workload, seed, a.seconds, a.trace)
+                r["tree"], r["pair"] = side, pair
+                runs.append(r)
+                msg = json.dumps(r["metrics"]) if "metrics" in r else r.get("error", "")[-300:]
+                sys.stderr.write("bench_pairs: pair %d %s %s seed %d: %s\n" % (
+                    pair, side, workload, seed, msg))
+            pair += 1
+            doc["summary"] = summarize(runs)
+            with open(a.out, "w") as fh:
+                json.dump(doc, fh, indent=1, sort_keys=True)
+                fh.write("\n")
+    failed = [r for r in runs if not r.get("correct")]
+    sys.exit(1 if failed else 0)
+
+
+if __name__ == "__main__":
+    main()
