@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,10 +14,12 @@ import graft.functions.IpFns
   * Output per route key: {session_id → {path_id → {ts_millis →
   * {Active, Attrs, Labels}}}}, history newest-first capped at `maxdepth`
   * (take-after-filter from the newest side, src/bgpsvc.rs:519-531), empty
-  * subtrees pruned. The key set is one keyed aggregation over the rib's
-  * slice of the log, shuffle-partitioned by the route key; the page's
-  * entry rows — bounded by limit × rings × history — are collected once
-  * and the tree is rendered on the driver. */
+  * subtrees pruned. The page keys come from one key pass — one action
+  * with one `route_id` exchange shared by the depth window and the
+  * key-flag aggregate, found/length observed on the same action — with
+  * no persisted key set; the page's entry rows — bounded by limit × rings
+  * × history — are collected once and the tree is rendered on the
+  * driver. */
 object RibJson {
 
   final case class RibParams(
@@ -187,10 +189,14 @@ object RibJson {
     * `found` (src/bgpsvc.rs:604-613) folded into the same aggregation.
     * Grouping on the route_id surrogate keeps the aggregate key one long;
     * the NLRI order tuple rides along as first() primitives `k0`, `k1`, …,
-    * which keeps the aggregation a hash aggregate. */
+    * which keeps the aggregation a hash aggregate. The slice is
+    * hash-partitioned on `route_id` once, ahead of the depth window, whose
+    * (route_id, ring) partitioning and the aggregate both reuse that one
+    * exchange; a `route_id` predicate above the aggregate pushes below
+    * the window and the exchange to the scan. */
   private[operators] def keyFlags(events: DataFrame, ribName: String,
       filter: RouteFilter, p: RibParams): DataFrame = {
-    val d = ribSlice(events, ribName)
+    val d = ribSlice(events, ribName).repartition(col("route_id"))
     val flag = RibViews.entryMatchFlag(d, ribName, filter, p.maxDepth,
       p.onlyActive, p.changedAfterMs, p.changedBeforeMs)
     d.withColumn("__em", flag)
@@ -199,58 +205,72 @@ object RibJson {
         nlriOrder.zipWithIndex.map { case (c, i) => first(c).as(s"k$i") }: _*)
   }
 
-  /** Shared page machinery: counts + page-key selection + the bounded
-    * broadcast semi-join back into the log. Returns (pageEntries, page
-    * route ids in item order, found, length) where pageEntries holds ALL
-    * history rows of the page's route keys. */
+  /** Shared page machinery: one key pass selects the page keys and
+    * observes the counts, then the page keys are broadcast-semi-joined
+    * back into the log. Returns (pageEntries, page route ids in item
+    * order, found, length) where pageEntries holds ALL history rows of
+    * the page's route keys. */
   private def pagedEntries(events: DataFrame, ribName: String,
       filterStr: String, p: RibParams): (DataFrame, Seq[Long], Long, Long) = {
     val d = ribSlice(events, ribName)
-    // the aggregated key set feeds BOTH the counts job and the page job:
-    // cache it so the match evaluation runs once. The key set is orders of
-    // magnitude smaller than the event log (one row per route key), so
-    // MEMORY_AND_DISK is safe at scale; unpersisted below once the bounded
-    // page keys are collected.
     val flags = keyFlags(events, ribName, FilterParser.parse(filterStr), p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = flags.agg(
-      sum(col("__m")).as("found"), count(lit(1)).as("length")).collect()(0)
-    val found = if (counts.isNullAt(0)) 0L else counts.getLong(0)
-    val length = counts.getLong(1)
-    val keys = flags.where(col("__m") === 1)
-    val pageKeyDf =
-      if (found > 0) p.pageAfterId match {
-        case Some(aid) =>
-          // keyset continuation: rebuild the continuation token from the
-          // `after` route key's order tuple (one bounded point lookup over
-          // the cached key set), then resume strictly after it — no
-          // skip-scan at any page depth. An unknown route_id yields no
-          // token → first page (the reference's tolerant-params behavior).
-          val tokDf = keys.where(col("route_id") === aid)
-            .select(keyOrder.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
-          val schema = tokDf.schema
-          val token = tokDf.collect().headOption.map { r =>
-            struct(schema.fields.zipWithIndex.map { case (f, i) =>
-              (if (r.isNullAt(i)) lit(null) else lit(r.get(i)))
-                .cast(f.dataType).as(f.name)
-            }: _*)
-          }
-          RibViews.pageAfter(keys, token, p.limit, keyOrder)
-        case None =>
-          RibViews.page(keys, p.skip, p.limit, keyOrder)
+    // keyset continuation: the `after` route key's order tuple, read from
+    // the key pass restricted to that one matched key (the route_id
+    // predicate reaches the scan), then the page resumes strictly after
+    // it — no skip-scan at any page depth. An unknown or unmatched
+    // route_id yields no token → first page (the reference's
+    // tolerant-params behavior).
+    val token = p.pageAfterId.flatMap { aid =>
+      val tokDf = flags.where(col("route_id") === aid && col("__m") === 1)
+        .select(keyOrder.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
+      val schema = tokDf.schema
+      tokDf.collect().headOption.map { r =>
+        struct(schema.fields.zipWithIndex.map { case (f, i) =>
+          (if (r.isNullAt(i)) lit(null) else lit(r.get(i)))
+            .cast(f.dataType).as(f.name)
+        }: _*)
       }
+    }
+    // the counts ride along with the page-key action as observed metrics:
+    // its TakeOrderedAndProject reads every key row, so the metrics above
+    // the aggregate see every key without a job of their own. A bounded
+    // (driver-local) input of at most `limit` keys loses the page's limit
+    // in the optimizer, and the global sort left in its place samples its
+    // input in a job of its own, which would count the metrics twice: one
+    // partition keeps that sort in the metrics' own stage.
+    val obs = Observation()
+    val observed = flags
+      .observe(obs, sum(col("__m")).as("found"), count(lit(1)).as("length"))
+      .where(col("__m") === 1)
+    val keys =
+      if (observed.queryExecution.analyzed.maxRows.isDefined) observed.coalesce(1)
+      else observed
+    val pageKeyDf =
+      if (p.pageAfterId.isDefined) RibViews.pageAfter(keys, token, p.limit, keyOrder)
+      else RibViews.page(keys, p.skip, p.limit, keyOrder)
+    val matched = routeIds(pageKeyDf)
+    // read only after the action succeeded (get blocks until the metrics
+    // arrive); an absent metric is 0 — the optimizer may prune the plan
+    // of an empty slice, and the sum over no keys is null
+    val metrics = obs.get
+    def metric(name: String): Long = metrics.get(name) match {
+      case Some(v: Long) => v
+      case _ => 0L
+    }
+    val found = metric("found")
+    val length = metric("length")
+    val order =
+      if (found > 0) matched
       else // supernet fallback: the most-specific `limit` keys, listed in page order
-        RibViews.scanSuper(d, filterStr)
+        routeIds(RibViews.scanSuper(d, filterStr)
           .dropDuplicates("route_id")
           .orderBy(RibViews.keyLen.desc +: pageOrder: _*)
           .limit(p.limit)
-          .orderBy(pageOrder: _*)
+          .orderBy(pageOrder: _*))
     // the page is bounded by `limit` (reference contract, default 1000):
-    // collect it, release the cached key set, and broadcast the keys into
-    // the entry semi-join — at scale this is a broadcast of ≤ limit longs
-    // against the log scan, the plan a keyed point-page wants
-    val order = pageKeyDf.select(col("route_id")).collect().map(_.getLong(0)).toSeq
-    flags.unpersist(false)
+    // broadcast its keys into the entry semi-join — at scale this is a
+    // broadcast of ≤ limit longs against the log scan, the plan a keyed
+    // point-page wants
     val s = d.sparkSession
     import s.implicits._
     val pageKeys = order.toDF("route_id")
@@ -258,6 +278,9 @@ object RibJson {
       d("route_id") === pageKeys("route_id"), "left_semi")
     (pageEntries, order, found, length)
   }
+
+  private def routeIds(keys: DataFrame): Seq[Long] =
+    keys.select(col("route_id")).collect().map(_.getLong(0)).toSeq
 
   /** The complete reference-shaped response document
     * (src/bgpsvc.rs:688-707). Collects only the bounded page. Engine

@@ -957,16 +957,20 @@ object RibViews {
     * The match is [[FilterCompiler.acceptFor]] specialized to that rib (≡
     * `matchRoute(f) <=> true` on its rows, the equivalence [[scan]] also
     * relies on), so the depth-window stage compiles one rib's key algebra
-    * instead of the 15-way dispatch. */
+    * instead of the 15-way dispatch. The frame must carry `route_id`: the
+    * windows partition on (route_id, ring) — the same rings, since a ring
+    * lies inside one route key — so a frame hash-partitioned on `route_id`
+    * feeds both them and a `route_id` aggregate without another exchange. */
   def entryMatchFlag(df: DataFrame, ribName: String, filter: RouteFilter,
       maxDepth: Int, onlyActive: Boolean, changedAfterMs: Option[Long],
       changedBeforeMs: Option[Long]): Column = {
-    val wAll = keyWindowAsc(df)
+    val ring = col("route_id") +: ringPart(df)
+    val wAll = Window.partitionBy(ring: _*).orderBy(sortCols(df, desc0 = false): _*)
     var passes: Column = lit(true)
     if (onlyActive) passes = passes && col("active")
     changedAfterMs.foreach(a => passes = passes && unix_millis(col("ts")) > a)
     changedBeforeMs.foreach(b => passes = passes && unix_millis(col("ts")) < b)
-    val nAll = count(lit(1)).over(Window.partitionBy(ringPart(df): _*))
+    val nAll = count(lit(1)).over(Window.partitionBy(ring: _*))
     val rnPass = sum(when(passes, 1).otherwise(0)).over(
       wAll.rowsBetween(Window.unboundedPreceding, 0))
     passes && (rnPass > nAll - maxDepth) && FilterCompiler.acceptFor(ribName, filter)

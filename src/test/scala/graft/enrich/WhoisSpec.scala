@@ -119,10 +119,11 @@ class WhoisSpec extends AnyFunSuite {
   }
 
   test("server map: shipped whois.json routes org/default/ip per the crate") {
-    // the reference's whoisjsonconfig file (loaded at config.rs:596-604,
-    // consumed by the whois-rust crate): org → pir, "" default → ripe,
-    // "_"."ip" → arin with the "n + $addr" ARIN query form
-    val map = Whois.loadServerMap("/root/reference/whois.json")
+    // the routes of the reference's whoisjsonconfig file (loaded at
+    // config.rs:596-604, consumed by the whois-rust crate), kept as a test
+    // resource: org → pir, "" default → ripe, "_"."ip" → arin with the
+    // "n + $addr" ARIN query form
+    val map = Whois.loadServerMap(WhoisSpec.shippedMap)
     assert(map.serverFor("example.org")
       .contains(Whois.WhoisServer("whois.pir.org", "$addr\r\n")))
     // unmapped TLD falls to the "" default
@@ -153,7 +154,7 @@ class WhoisSpec extends AnyFunSuite {
   }
 
   test("chaseWhoisWithMap feeds the elected server + template to fetch") {
-    val map = Whois.loadServerMap("/root/reference/whois.json")
+    val map = Whois.loadServerMap(WhoisSpec.shippedMap)
     val seen = scala.collection.mutable.Buffer[(String, String)]()
     val got = Whois.chaseWhoisWithMap("8.8.8.8", None, map,
       (q, srv) => { seen += ((q, srv)); arinResponse })
@@ -169,7 +170,7 @@ class WhoisSpec extends AnyFunSuite {
     // whois-rust builds referral servers via WhoIsServerValue::from_string
     // (no query), so the ARIN-specific "n + $addr" form is sent ONLY to
     // the initial elected server; the referred RIPE hop gets "$addr\r\n"
-    val map = Whois.loadServerMap("/root/reference/whois.json")
+    val map = Whois.loadServerMap(WhoisSpec.shippedMap)
     val seen = scala.collection.mutable.Buffer[(String, String)]()
     val got = Whois.chaseWhoisWithMap("8.8.8.8", Some("route:".r), map,
       (q, srv) => {
@@ -212,4 +213,11 @@ class WhoisSpec extends AnyFunSuite {
     assert(row.getLong(0) == 65001L)
     assert(row.getString(1) == "AS65001-ORG-1")
   }
+}
+
+object WhoisSpec {
+  /** Path of the test-resource `whois.json`: the routes of the reference's
+    * shipped map that the specs assert (org, the "" default, `_`.`ip`). */
+  def shippedMap: String =
+    java.nio.file.Paths.get(getClass.getResource("/whois.json").toURI).toString
 }

@@ -1,7 +1,16 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics, Filter}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
 import graft.sources.RouteEventGen
 
@@ -103,6 +112,96 @@ class PlanEvidenceSpec extends AnyFunSuite {
     assert(flags.collect().nonEmpty)
     val (items, found, length) = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params)
     assert(items.nonEmpty && found > 0 && length > 0)
+  }
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
+
+  /** The query executions `body` runs, in order. The listener bus delivers
+    * in order, so once a marker action's event has arrived every event of
+    * `body` has arrived before it. */
+  private def executionsOf(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val marker = spark.range(1).toDF()
+    try {
+      body
+      marker.collect()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_ eq marker.queryExecution) && System.nanoTime < deadline)
+        Thread.sleep(5)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.asScala.exists(_ eq marker.queryExecution), "marker execution never arrived")
+    seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
+  }
+
+  test("json page key pass: one route_id exchange, observed counts, nothing cached") {
+    val params = RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5)
+    var page: (Seq[RibJson.PageItem], Long, Long) = null
+    val qes = executionsOf { page = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params) }
+    assert(page._1.nonEmpty && page._2 > 0 && page._3 >= page._2)
+    // a matched page: the key pass, then the entries
+    assert(qes.length == 2, qes.map(_.executedPlan.toString.take(500)).mkString("\n\n"))
+    qes.foreach { qe =>
+      assert(aqe.collect(qe.executedPlan) { case c: InMemoryTableScanExec => c }.isEmpty &&
+        !qe.executedPlan.toString.contains("InMemoryRelation"), qe.executedPlan.toString)
+    }
+    val keyPass = qes.filter(_.optimizedPlan.exists(_.isInstanceOf[CollectMetrics]))
+    assert(keyPass.length == 1, qes.map(_.optimizedPlan.toString.take(800)).mkString("\n\n"))
+    val qe = keyPass.head
+    val plan = qe.executedPlan.toString
+    // the depth window and the route_id aggregate share one exchange
+    val shuffles = aqe.collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length == 1, plan)
+    val keys = shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map {
+        case a: Attribute => a.name
+        case e => e.sql
+      }
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("route_id"), plan)
+    // the counts are observed right above the route_id aggregate, and the
+    // page's __m filter stays above them, so the metrics see every key
+    val metrics = qe.optimizedPlan.collect { case c: CollectMetrics => c }
+    assert(metrics.length == 1, qe.optimizedPlan.toString)
+    metrics.head.child match {
+      case a: Aggregate =>
+        assert(a.groupingExpressions.collect { case r: Attribute => r.name } == Seq("route_id"),
+          qe.optimizedPlan.toString)
+      case other => fail(s"CollectMetrics over ${other.nodeName}\n${qe.optimizedPlan}")
+    }
+    assert(!metrics.head.child.exists {
+      case f: Filter => f.references.exists(_.name == "__m")
+      case _ => false
+    }, qe.optimizedPlan.toString)
+    assert(qe.optimizedPlan.exists {
+      case f: Filter => f.child.isInstanceOf[CollectMetrics]
+      case _ => false
+    }, qe.optimizedPlan.toString)
+  }
+
+  test("json page SQL executions: 2 matched, at most 3 with after= or the supernet fallback") {
+    val params = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 5)
+    var first: Seq[RibJson.PageItem] = Nil
+    assert(executionsOf {
+      first = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params)._1
+    }.length == 2)
+    assert(first.length == 5)
+    var next: Seq[RibJson.PageItem] = Nil
+    assert(executionsOf {
+      next = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14",
+        params.copy(pageAfterId = Some(first.last.routeId)))._1
+    }.length <= 3)
+    assert(next.nonEmpty && next.head.routeId != first.last.routeId)
+    var fallback: (Seq[RibJson.PageItem], Long, Long) = null
+    assert(executionsOf {
+      fallback = RibJson.jsonPage(re, "ipv4u", "10.3.9.50", params)
+    }.length <= 3)
+    assert(fallback._2 == 0 && fallback._1.nonEmpty)
   }
 
   test("an ipv4u page's key-flag plan compiles only the ipv4u key algebra") {

@@ -2,8 +2,11 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.filter.FilterParser
 import graft.model._
+import graft.sources.RouteEventGen
 
 /** JSON contract goldens (FIXTURES.md §3): response shape, newest-first
   * maxdepth cap, onlyactive pruning, empty-subtree pruning, supernet
@@ -195,6 +198,94 @@ class RibJsonSpec extends AnyFunSuite {
     assert(resp.contains("\"found\":1"))
     assert(resp.contains("\"items\":{\"10.0.0.0/24\":{"))
     assert(resp.contains("\"changed_after\":null"))
+  }
+
+  private lazy val re = RouteEventGen.routeEvents(spark, "/root/testdata/sf0.001")
+
+  /** found/length by a plain aggregate over the key flags, independent of
+    * the metrics the page's key pass observes. */
+  private def counted(events: DataFrame, rib: String, filter: String,
+      p: RibJson.RibParams): (Long, Long) = {
+    val r = RibJson.keyFlags(events, rib, FilterParser.parse(filter), p)
+      .agg(sum(col("__m")), count(lit(1))).collect()(0)
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+  }
+
+  test("property: found/length equal a count over the key flags across ribs and filters") {
+    val Seq(lo, hi) = re.agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
+      .collect()(0).toSeq.map(_.asInstanceOf[Long])
+    val third = (hi - lo) / 3
+    val cases = Seq(
+      ("ipv4u", "10.4.0.0/14", RibJson.RibParams(limit = 20, maxDepth = 5)),
+      ("ipv4u", "", RibJson.RibParams(limit = 20, maxDepth = 1)),
+      ("ipv4u", "community:10:25", RibJson.RibParams(limit = 20, onlyActive = true)),
+      ("ipv4u", "10.0.0.0/8", RibJson.RibParams(limit = 20,
+        changedAfterMs = Some(lo + third), changedBeforeMs = Some(hi - third))),
+      ("ipv6u", "", RibJson.RibParams(limit = 20, onlyActive = true,
+        changedAfterMs = Some(lo + third))),
+      ("vpnv4u", "as:^101", RibJson.RibParams(limit = 20)),
+      ("evpn", "", RibJson.RibParams(limit = 20, changedBeforeMs = Some(hi - third))),
+      ("l2vpls", "", RibJson.RibParams(limit = 20, maxDepth = 2)),
+      ("ipv4u", "10.3.9.50", RibJson.RibParams(limit = 20)))
+    cases.foreach { case (rib, f, p) =>
+      val (items, found, length) = RibJson.jsonPage(re, rib, f, p)
+      assert((found, length) == counted(re, rib, f, p), s"$rib '$f' $p")
+      assert(length > 0 && items.nonEmpty, s"$rib '$f' $p")
+      // skip at or past found: an empty page, with the same counts
+      if (found > 0) {
+        val past = p.copy(skip = found.toInt)
+        val (none, f2, l2) = RibJson.jsonPage(re, rib, f, past)
+        assert(none.isEmpty && (f2, l2) == (found, length), s"$rib '$f' $past")
+      }
+    }
+  }
+
+  test("after= with an unknown or an unmatched route id gives the first page") {
+    val p = RibJson.RibParams(limit = 5, maxDepth = 5)
+    val f = "10.4.0.0/14"
+    val first = RibJson.jsonPage(re, "ipv4u", f, p)
+    assert(first._2 > 0 && first._1.length == 5)
+    val unmatched = RibJson.keyFlags(re, "ipv4u", FilterParser.parse(f), p)
+      .where(col("__m") === 0).select("route_id").head().getLong(0)
+    for (aid <- Seq(unmatched, 42L)) {
+      val page = RibJson.jsonPage(re, "ipv4u", f, p.copy(pageAfterId = Some(aid)))
+      assert(page == first, s"after=$aid")
+    }
+    assert(first._2 -> first._3 == counted(re, "ipv4u", f, p))
+  }
+
+  test("an empty rib slice pages to 0/0 without throwing") {
+    val p = RibJson.RibParams(limit = 20, pageAfterId = Some(7L))
+    val empties = Seq(re.limit(0), re.where(col("rib") =!= "ipv4u"), df(Seq.empty[RouteEvent]))
+    empties.foreach { e =>
+      assert(RibJson.jsonPage(e, "ipv4u", "10.0.0.0/8", p) == ((Seq.empty, 0L, 0L)))
+      assert(RibJson.jsonPage(e, "ipv4u", "", p.copy(pageAfterId = None)) ==
+        ((Seq.empty, 0L, 0L)))
+    }
+  }
+
+  test("concurrent pages on one session answer as each page run alone") {
+    // every page observes its own found/length: eight pages with distinct
+    // filters and counts, run at once, give the bytes each gives alone
+    val pages = Seq(
+      ("ipv4u", "10.4.0.0/14"), ("ipv4u", "10.0.0.0/8"), ("ipv4u", "community:10:25"),
+      ("ipv4u", "10.3.9.50"), ("ipv6u", ""), ("vpnv4u", "as:^101"), ("evpn", ""),
+      ("l2vpls", ""))
+    val p = RibJson.RibParams(limit = 10, maxDepth = 3)
+    val alone = pages.map { case (rib, f) => RibJson.response(re, rib, f, p) }
+    assert(alone.distinct.length == pages.length)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(pages.length)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = pages.map { case (rib, f) =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = { start.await(); RibJson.response(re, rib, f, p) }
+        })
+      }
+      start.countDown()
+      val together = futures.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+      pages.indices.foreach(i => assert(together(i) == alone(i), pages(i)))
+    } finally pool.shutdownNow()
   }
 
   test("statistics json shape") {

@@ -94,7 +94,7 @@ class ServerSpec extends AnyFunSuite {
   test("whois route elects the initial server through the configured map") {
     import graft.enrich.Whois
     val seen = scala.collection.mutable.Buffer[(String, Option[String])]()
-    val map = Whois.loadServerMap("/root/reference/whois.json")
+    val map = Whois.loadServerMap(graft.enrich.WhoisSpec.shippedMap)
     val routes = ServerRoutes(events = () => events,
       whoisFetch = (q, srv) => { seen += ((q, srv)); "NetRange: 8.0.0.0/8" },
       whoisServers = Some(map))

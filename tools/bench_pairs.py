@@ -8,9 +8,12 @@ For every seed and workload it runs `e2ebench/run.py` once from each
 checkout, back to back (the parent first on even pair indices, the change
 first on odd ones, so drift in host load falls on both sides alike), and
 writes every run's result metrics plus, per workload and trace mode, the
-medians of each side, the relative change of the medians and the number of
-pairs in which the change was better. `--append` adds the runs to an
-existing output file and recomputes the summary over all of them.
+medians and quartiles of each side, the relative change of the medians,
+the number of pairs in which the change was better and `claim_met`: whether
+the change won at least nine tenths of the pairs (ties count for neither
+side) and its median beats the parent's by more than the parent's
+interquartile range. `--append` adds the runs to an existing output file
+and recomputes the summary over all of them.
 """
 import argparse
 import json
@@ -59,6 +62,13 @@ def run_once(tree, workload, seed, seconds, trace):
     return run
 
 
+def quartiles(values):
+    """[Q1, median, Q3] of the values (inclusive method; one value repeats)."""
+    if len(values) < 2:
+        return [values[0]] * 3
+    return statistics.quantiles(values, n=4, method="inclusive")
+
+
 def summarize(runs):
     out = {}
     keys = sorted({(r["workload"], r["trace"]) for r in runs})
@@ -66,10 +76,11 @@ def summarize(runs):
         rs = [r for r in runs if r["workload"] == workload and r["trace"] == trace]
         side = {s: [r for r in rs if r["tree"] == s and "metrics" in r] for s in ("parent", "change")}
         names = sorted(set().union(*[r["metrics"] for r in side["parent"] + side["change"]]))
-        med = {s: {m: statistics.median([r["metrics"][m] for r in side[s] if m in r["metrics"]])
-                   for m in names if any(m in r["metrics"] for r in side[s])}
-               for s in side}
-        rel, better = {}, {}
+        quart = {s: {m: quartiles([r["metrics"][m] for r in side[s] if m in r["metrics"]])
+                     for m in names if any(m in r["metrics"] for r in side[s])}
+                 for s in side}
+        med = {s: {m: q[1] for m, q in quart[s].items()} for s in side}
+        rel, better, claim = {}, {}, {}
         for m in names:
             pv, cv = med["parent"].get(m), med["change"].get(m)
             if pv is not None and cv is not None and pv != 0:
@@ -80,12 +91,18 @@ def summarize(runs):
                     pairs.setdefault(r["pair"], {})[r["tree"]] = r["metrics"][m]
             full = [v for v in pairs.values() if len(v) == 2]
             up = m in HIGHER_BETTER
-            better[m] = "%d/%d" % (sum((v["change"] > v["parent"]) if up else
-                                       (v["change"] < v["parent"]) for v in full), len(full))
+            won = sum((v["change"] > v["parent"]) if up else
+                      (v["change"] < v["parent"]) for v in full)
+            better[m] = "%d/%d" % (won, len(full))
+            if pv is not None and cv is not None:
+                q1, _, q3 = quart["parent"][m]
+                gain = (cv - pv) if up else (pv - cv)
+                claim[m] = bool(full) and 10 * won >= 9 * len(full) and gain > q3 - q1
         out["%s/trace%d" % (workload, trace)] = {
             "runs": {s: len(side[s]) for s in side},
             "failed_runs": sum(1 for r in rs if not r.get("correct")),
-            "median": med, "change_vs_parent": rel, "change_better_pairs": better}
+            "median": med, "quartiles": quart, "change_vs_parent": rel,
+            "change_better_pairs": better, "claim_met": claim}
     return out
 
 
