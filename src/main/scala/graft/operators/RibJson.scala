@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -233,32 +234,45 @@ object RibJson {
     }
     // the counts ride along with the page-key action as observed metrics:
     // its TakeOrderedAndProject reads every key row, so the metrics above
-    // the aggregate see every key without a job of their own. A bounded
-    // (driver-local) input of at most `limit` keys loses the page's limit
-    // in the optimizer, and the global sort left in its place samples its
-    // input in a job of its own, which would count the metrics twice: one
-    // partition keeps that sort in the metrics' own stage.
-    val obs = Observation()
-    val observed = flags
-      .observe(obs, sum(col("__m")).as("found"), count(lit(1)).as("length"))
-      .where(col("__m") === 1)
-    val keys =
-      if (observed.queryExecution.analyzed.maxRows.isDefined) observed.coalesce(1)
-      else observed
-    val pageKeyDf =
-      if (p.pageAfterId.isDefined) RibViews.pageAfter(keys, token, p.limit, keyOrder)
-      else RibViews.page(keys, p.skip, p.limit, keyOrder)
-    val matched = routeIds(pageKeyDf)
-    // read only after the action succeeded (get blocks until the metrics
-    // arrive); an absent metric is 0 — the optimizer may prune the plan
-    // of an empty slice, and the sum over no keys is null
-    val metrics = obs.get
-    def metric(name: String): Long = metrics.get(name) match {
-      case Some(v: Long) => v
-      case _ => 0L
+    // the aggregate see every key without a job of their own
+    def pageIds(keys: DataFrame): DataFrame = {
+      val matchedKeys = keys.where(col("__m") === 1)
+      (if (p.pageAfterId.isDefined) RibViews.pageAfter(matchedKeys, token, p.limit, keyOrder)
+       else RibViews.page(matchedKeys, p.skip, p.limit, keyOrder)).select(col("route_id"))
     }
-    val found = metric("found")
-    val length = metric("length")
+    val obs = Observation()
+    val observedFlags = flags
+      .observe(obs, sum(col("__m")).as("found"), count(lit(1)).as("length"))
+    val planned = pageIds(observedFlags)
+    // where the optimizer drops the page's limit (a driver-local input
+    // whose keys fit the page), the global sort left in its place samples
+    // its input in a job of its own, which would run the metrics twice;
+    // one partition keeps that sort in the metrics' own stage. Parquet
+    // logs, the served path, are unbounded and keep the TakeOrderedAndProject.
+    val pageIdDf =
+      if (planned.queryExecution.sparkPlan.exists {
+        case s: SortExec => s.global
+        case _ => false
+      }) pageIds(observedFlags.coalesce(1))
+      else planned
+    val matched = pageIdDf.collect().map(_.getLong(0)).toSeq
+    // read only after the action succeeded (get blocks until the metrics
+    // arrive). The sum over no keys is null, i.e. 0. The metrics are
+    // absent when the optimizer or AQE pruned their part of the plan (a
+    // zero limit, an offset past a bounded input, an empty slice), so
+    // they are then counted by a plain aggregate over the key flags
+    val metrics = obs.get
+    val (found, length) =
+      if (metrics.isEmpty) {
+        val r = flags.agg(coalesce(sum(col("__m")), lit(0L)), count(lit(1))).head()
+        (r.getLong(0), r.getLong(1))
+      } else {
+        def metric(name: String): Long = metrics.get(name) match {
+          case Some(v: Long) => v
+          case _ => 0L
+        }
+        (metric("found"), metric("length"))
+      }
     val order =
       if (found > 0) matched
       else // supernet fallback: the most-specific `limit` keys, listed in page order

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics, Filter}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -164,6 +164,12 @@ class PlanEvidenceSpec extends AnyFunSuite {
       case other => Seq(other.toString)
     }
     assert(keys == Seq("route_id"), plan)
+    // the served (parquet) log is unbounded: the page keeps its
+    // TakeOrderedAndProject, with no global sort and no one-partition coalesce
+    assert(aqe.collect(qe.executedPlan) {
+      case c: CoalesceExec => c
+      case s: SortExec if s.global => s
+    }.isEmpty && plan.contains("TakeOrderedAndProject"), plan)
     // the counts are observed right above the route_id aggregate, and the
     // page's __m filter stays above them, so the metrics see every key
     val metrics = qe.optimizedPlan.collect { case c: CollectMetrics => c }

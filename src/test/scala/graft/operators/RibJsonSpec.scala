@@ -264,6 +264,39 @@ class RibJsonSpec extends AnyFunSuite {
     }
   }
 
+  test("limit=0 and a skip past a bounded input keep the real found/length") {
+    // the optimizer prunes a zero limit, and an offset past a bounded
+    // input, together with the counts observed below them
+    val f = "10.4.0.0/14"
+    val p = RibJson.RibParams(limit = 5, maxDepth = 5)
+    val (first, found, length) = RibJson.jsonPage(re, "ipv4u", f, p)
+    assert(found > 0 && first.length == 5 && (found, length) == counted(re, "ipv4u", f, p))
+    for (q <- Seq(p.copy(limit = 0), p.copy(limit = 0, skip = 3),
+        p.copy(limit = 0, pageAfterId = Some(first.last.routeId)))) {
+      assert(RibJson.jsonPage(re, "ipv4u", f, q) == ((Seq.empty, found, length)), q)
+      val body = RibJson.response(re, "ipv4u", f, q)
+      assert(body.contains(s""""length":$length,""") && body.contains(s""""found":$found,""") &&
+        body.contains(""""items":{},"next_after":null}"""), body)
+    }
+    val d = df(Seq(
+      ev(base, active = true, 1L),
+      ev(base, active = true, 2L, pfx = Model.v4("10.0.1.0", 24)),
+      ev(base, active = true, 3L, pfx = Model.v4("10.0.2.0", 24)),
+      ev(base, active = true, 4L, pfx = Model.v4("11.0.0.0", 24))))
+    val dp = RibJson.RibParams(limit = 2)
+    val (dFirst, dFound, dLength) = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/16", dp)
+    assert((dFound, dLength) == ((3L, 4L)) && (dFound, dLength) == counted(d, "ipv4u", "10.0.0.0/16", dp))
+    assert(dFirst.map(_.itemKey) == Seq("10.0.0.0/24", "10.0.1.0/24"))
+    for (q <- Seq(dp.copy(limit = 0), dp.copy(skip = 4), dp.copy(skip = 100, limit = 0),
+        dp.copy(limit = 0, pageAfterId = Some(dFirst.head.routeId))))
+      assert(RibJson.jsonPage(d, "ipv4u", "10.0.0.0/16", q) == ((Seq.empty, 3L, 4L)), q)
+    // the rest of the matched keys after the first page fit the page
+    // limit: the counts are those of the whole rib, once
+    val rest = RibJson.jsonPage(d, "ipv4u", "10.0.0.0/16",
+      dp.copy(limit = 10, pageAfterId = Some(dFirst.last.routeId)))
+    assert(rest._1.map(_.itemKey) == Seq("10.0.2.0/24") && rest._2 == 3L && rest._3 == 4L)
+  }
+
   test("concurrent pages on one session answer as each page run alone") {
     // every page observes its own found/length: eight pages with distinct
     // filters and counts, run at once, give the bytes each gives alone

@@ -12,7 +12,9 @@ medians and quartiles of each side, the relative change of the medians,
 the number of pairs in which the change was better and `claim_met`: whether
 the change won at least nine tenths of the pairs (ties count for neither
 side) and its median beats the parent's by more than the parent's
-interquartile range. `--append` adds the runs to an existing output file
+interquartile range. `claim_met` is null for a metric with fewer than
+MIN_CLAIM_PAIRS complete pairs: a win count and quartiles from fewer runs
+cannot back a claim. `--append` adds the runs to an existing output file
 and recomputes the summary over all of them.
 """
 import argparse
@@ -25,6 +27,8 @@ import time
 
 # metrics where a larger value is better; every other metric is lower-better
 HIGHER_BETTER = {"req_per_s"}
+# complete pairs a metric needs before claim_met is decided
+MIN_CLAIM_PAIRS = 10
 
 
 def run_once(tree, workload, seed, seconds, trace):
@@ -97,7 +101,8 @@ def summarize(runs):
             if pv is not None and cv is not None:
                 q1, _, q3 = quart["parent"][m]
                 gain = (cv - pv) if up else (pv - cv)
-                claim[m] = bool(full) and 10 * won >= 9 * len(full) and gain > q3 - q1
+                claim[m] = (None if len(full) < MIN_CLAIM_PAIRS else
+                            10 * won >= 9 * len(full) and gain > q3 - q1)
         out["%s/trace%d" % (workload, trace)] = {
             "runs": {s: len(side[s]) for s in side},
             "failed_runs": sum(1 for r in rs if not r.get("correct")),
