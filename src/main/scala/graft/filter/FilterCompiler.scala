@@ -2,7 +2,7 @@ package graft.filter
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.IpFns
+import graft.functions.{IpFns, Param}
 
 /** Compiles a parsed [[RouteFilter]] to Catalyst `Column` predicates over the
   * canonical route-event schema (FIXTURES.md §1).
@@ -17,7 +17,10 @@ import graft.functions.IpFns
   *
   * Everything here is built from codegen'd built-ins (`when`, bit ops,
   * `exists`, `slice`, `rlike`) so compiled filters stay inside
-  * WholeStageCodegen and push down to Parquet scans where possible.
+  * WholeStageCodegen. Request values (addresses, masks, prefix lengths,
+  * numbers) enter as [[Param]]s, so one filter shape compiles one class
+  * whatever its values; the Parquet-pushable hints (RibViews'
+  * `rangePruneHintFor`, `superPruneHintFor`) stay constants.
   */
 object FilterCompiler {
   import FilterItem._
@@ -45,10 +48,17 @@ object FilterCompiler {
   def litPfx(n: V4Net): Column = litPfx(4, 0L, n.addr, n.plen)
   def litPfx(n: V6Net): Column = litPfx(6, n.hi, n.lo, n.plen)
 
-  // ---- literal-specialized prefix math ------------------------------------
-  // Filter nets are compile-time constants, so masks fold to Scala longs
-  // here instead of generic column expressions — keeps compiled predicate
-  // trees small (fast analysis + codegen) without touching semantics.
+  /** A request value as a [[Param]]: the generated code is the same for
+    * every value, so a page compiles once per filter shape, not once per
+    * prefix or number. Regex patterns stay literals (a non-literal pattern
+    * would compile per row), as do the pushdown hints built elsewhere. */
+  private def param(v: Any): Column = Param.column(v)
+
+  // ---- parameterized prefix math ------------------------------------------
+  // Masks and network addresses are still folded to Scala longs here, on
+  // the driver, instead of generic column expressions — keeps compiled
+  // predicate trees small (fast analysis + codegen) without touching
+  // semantics — but enter the plan as parameters, not literals.
 
   private def v6Masks(plen: Int): (Long, Long) = {
     val hi = if (plen <= 0) 0L else if (plen >= 64) -1L else -1L << (64 - plen)
@@ -58,14 +68,14 @@ object FilterCompiler {
 
   /** net ⊇ route for a literal v4 net (zettabgp `contains`). */
   private def containsLit(net: V4Net, pfx: Column): Column =
-    pfx("prefix_len") >= net.plen &&
-      pfx("ip_lo").bitwiseAND(lit(net.netMask)) === lit(net.firstAddr)
+    pfx("prefix_len") >= param(net.plen) &&
+      pfx("ip_lo").bitwiseAND(param(net.netMask)) === param(net.firstAddr)
 
   private def containsLit(net: V6Net, pfx: Column): Column = {
     val (mh, ml) = v6Masks(net.plen)
-    pfx("prefix_len") >= net.plen &&
-      pfx("ip_hi").bitwiseAND(lit(mh)) === lit(net.hi & mh) &&
-      pfx("ip_lo").bitwiseAND(lit(ml)) === lit(net.lo & ml)
+    pfx("prefix_len") >= param(net.plen) &&
+      pfx("ip_hi").bitwiseAND(param(mh)) === param(net.hi & mh) &&
+      pfx("ip_lo").bitwiseAND(param(ml)) === param(net.lo & ml)
   }
 
   /** route ⊇ literal net: the route's prefix length is a column, so shift
@@ -73,8 +83,8 @@ object FilterCompiler {
     * amount in range). */
   private def superContainsLit(pfx: Column, net: V4Net): Column = {
     val sh = (lit(32) - pfx("prefix_len")).cast("int")
-    lit(net.plen) >= pfx("prefix_len") &&
-      call_function("shiftright", lit(net.addr), sh) ===
+    param(net.plen) >= pfx("prefix_len") &&
+      call_function("shiftright", param(net.addr), sh) ===
         call_function("shiftright", pfx("ip_lo"), sh)
   }
 
@@ -82,31 +92,31 @@ object FilterCompiler {
     val p = pfx("prefix_len")
     val shHi = (lit(64) - least(p, lit(64))).cast("int")
     val hiOk = when(p <= 0, lit(true)).otherwise(
-      call_function("shiftright", lit(net.hi), shHi) ===
+      call_function("shiftright", param(net.hi), shHi) ===
         call_function("shiftright", pfx("ip_hi"), shHi))
     val shLo = (lit(128) - p).cast("int")
     val loOk = when(p <= 64, lit(true)).otherwise(
-      call_function("shiftright", lit(net.lo), shLo) ===
+      call_function("shiftright", param(net.lo), shLo) ===
         call_function("shiftright", pfx("ip_lo"), shLo))
-    lit(net.plen) >= p && hiOk && loOk
+    param(net.plen) >= p && hiOk && loOk
   }
 
   /** literal net ∋ host address (zettabgp `in_subnet`). */
   private def inSubnetLit(net: V4Net, host: Column): Column =
-    host("ip_lo").bitwiseAND(lit(net.netMask)) === lit(net.firstAddr)
+    host("ip_lo").bitwiseAND(param(net.netMask)) === param(net.firstAddr)
 
   private def inSubnetLit(net: V6Net, host: Column): Column = {
     val (mh, ml) = v6Masks(net.plen)
-    host("ip_hi").bitwiseAND(lit(mh)) === lit(net.hi & mh) &&
-      host("ip_lo").bitwiseAND(lit(ml)) === lit(net.lo & ml)
+    host("ip_hi").bitwiseAND(param(mh)) === param(net.hi & mh) &&
+      host("ip_lo").bitwiseAND(param(ml)) === param(net.lo & ml)
   }
 
   // ---- per-field matchers -------------------------------------------------
 
   /** `FilterItem::match_rd` (src/ribfilter.rs:1418-1429). */
   private def matchRd(item: FilterItem, rd: Column): Column = item match {
-    case RdEq(h, l) => rd("rdh") === h && rd("rdl") === l
-    case Num(n) => soft(rd("rdh") === n || rd("rdl") === n)
+    case RdEq(h, l) => rd("rdh") === param(h) && rd("rdl") === param(l)
+    case Num(n) => soft(rd("rdh") === param(n) || rd("rdl") === param(n))
     case Regexp(re) => soft(IpFns.rdStr(rd).rlike(re))
     case _ => UNK
   }
@@ -129,8 +139,8 @@ object FilterCompiler {
     case Num(n) =>
       // quirk: v4 prefixlen test is hard Yes/No, v6 is soft Yes/Unknown
       // (src/ribfilter.rs:1384-1386 vs 1409-1411)
-      when(pfx("version") === 4, pfx("prefix_len") === n)
-        .otherwise(soft(pfx("prefix_len") === n))
+      when(pfx("version") === 4, pfx("prefix_len") === param(n))
+        .otherwise(soft(pfx("prefix_len") === param(n)))
     case Regexp(re) => soft(display.rlike(re))
     case _ => UNK
   }
@@ -142,7 +152,7 @@ object FilterCompiler {
       when(pfx("version") =!= 4, UNK).otherwise(superContainsLit(pfx, net))
     case V6(net, false) =>
       when(pfx("version") =!= 6, UNK).otherwise(superContainsLit(pfx, net))
-    case Num(n) => soft(pfx("prefix_len") === n)
+    case Num(n) => soft(pfx("prefix_len") === param(n))
     case _ => UNK
   }
 
@@ -171,7 +181,7 @@ object FilterCompiler {
   private def matchL2(item: FilterItem, rd: Column, l2: Column): Column = item match {
     case RdEq(_, _) => matchRd(item, rd)
     case Num(n) =>
-      l2("site") === n || (l2("offset") <= n && l2("range") >= n)
+      l2("site") === param(n) || (l2("offset") <= param(n) && l2("range") >= param(n))
     case Regexp(re) =>
       soft(concat_ws(" ", IpFns.rdStr(rd), l2("site"), l2("offset"), l2("range")).rlike(re))
     case _ => UNK
@@ -243,7 +253,7 @@ object FilterCompiler {
       when(IpFns.isMulticastV6(pfx("ip_hi")) === lit(mc), containsLit(net, pfx))
         .otherwise(UNK)
     case Num(n) =>
-      if (ver == 4) pfx("prefix_len") === n else soft(pfx("prefix_len") === n)
+      if (ver == 4) pfx("prefix_len") === param(n) else soft(pfx("prefix_len") === param(n))
     case Regexp(re) => soft(display.rlike(re))
     case _ => UNK
   }
@@ -254,7 +264,7 @@ object FilterCompiler {
       case V6(_, false) if ver != 6 => UNK
       case V4(net, false) => superContainsLit(pfx, net)
       case V6(net, false) => superContainsLit(pfx, net)
-      case Num(n) => soft(pfx("prefix_len") === n)
+      case Num(n) => soft(pfx("prefix_len") === param(n))
       case _ => UNK
     }
 
@@ -358,19 +368,19 @@ object FilterCompiler {
       when(nh.isNull || nh("version") =!= 6, UNK)
         .otherwise(inSubnetLit(net, nh))
     case Comm(a, b) =>
-      exists(attrs("comms"), c => c("a") === a && c("b") === b)
+      exists(attrs("comms"), c => c("a") === param(a) && c("b") === param(b))
     case ExtComm(m) =>
       // fold: any element Yes → Yes, else Unknown; empty list → Unknown.
       // Per-element results are soft, No never occurs (ribfilter.rs:504-540).
       val elemPred: Column => Column = m match {
         case ExtCommMatch.Num(n) => e =>
-          e("a") === n || e("b") === n ||
-            shiftright(e("b"), 16).bitwiseAND(lit(0xFFFFL)) === n
-        case ExtCommMatch.PairNum(a, b) => e => e("a") === a && e("b") === b
+          e("a") === param(n) || e("b") === param(n) ||
+            shiftright(e("b"), 16).bitwiseAND(lit(0xFFFFL)) === param(n)
+        case ExtCommMatch.PairNum(a, b) => e => e("a") === param(a) && e("b") === param(b)
         case ExtCommMatch.IPv4(net) => e =>
           e("ctype") === 1 && ecIpInNet(e, net)
         case ExtCommMatch.PairNumIP(net, n) => e =>
-          e("ctype") === 1 && e("b").bitwiseAND(lit(0xFFFFL)) === n && ecIpInNet(e, net)
+          e("ctype") === 1 && e("b").bitwiseAND(lit(0xFFFFL)) === param(n) && ecIpInNet(e, net)
       }
       when(size(attrs("extcomms")) === 0, UNK)
         .otherwise(soft(exists(attrs("extcomms"), elemPred)))
@@ -381,20 +391,21 @@ object FilterCompiler {
     case AsPath(m) =>
       val asl = attrs("as_list")
       val n = size(asl)
-      def litArr(xs: Seq[Long]) = array(xs.map(lit): _*)
+      // one array parameter, not an array built per row
+      def arr(xs: Seq[Long]) = param(xs.toArray)
       m match {
         case AsPathMatch.Empty => n === 0
-        case AsPathMatch.FullMatch(xs) => asl === litArr(xs)
+        case AsPathMatch.FullMatch(xs) => asl === arr(xs)
         case AsPathMatch.Contains(xs) =>
           val mm = xs.length
           when(n < mm, lit(false)).otherwise(
-            exists(sequence(lit(1), n - mm + 1), i => slice(asl, i, lit(mm)) === litArr(xs)))
+            exists(sequence(lit(1), n - mm + 1), i => slice(asl, i, lit(mm)) === arr(xs)))
         case AsPathMatch.StartsWith(xs) =>
           val mm = xs.length
-          when(n < mm, lit(false)).otherwise(slice(asl, lit(1), lit(mm)) === litArr(xs))
+          when(n < mm, lit(false)).otherwise(slice(asl, lit(1), lit(mm)) === arr(xs))
         case AsPathMatch.EndsWith(xs) =>
           val mm = xs.length
-          when(n < mm, lit(false)).otherwise(slice(asl, n - mm + 1, lit(mm)) === litArr(xs))
+          when(n < mm, lit(false)).otherwise(slice(asl, n - mm + 1, lit(mm)) === arr(xs))
       }
     case _ => UNK
   }
@@ -405,7 +416,7 @@ object FilterCompiler {
     val ip = shiftleft(e("a").bitwiseAND(lit(0xFFFFL)), 16)
       .bitwiseOR(shiftright(e("b"), 16).bitwiseAND(lit(0xFFFFL)))
     // a holds the top 16 bits of the address, b's top 16 the bottom bits
-    ip.bitwiseAND(lit(net.netMask)) === lit(net.firstAddr)
+    ip.bitwiseAND(param(net.netMask)) === param(net.firstAddr)
   }
 
   // ---- term-level polarity tables ----------------------------------------

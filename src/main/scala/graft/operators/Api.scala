@@ -50,10 +50,14 @@ object Api {
       try Some(java.lang.Long.parseLong(v)) catch { case _: NumberFormatException => None })
     def bool(k: String): Option[Boolean] = params.get(k).flatMap(v =>
       if (v == "true") Some(true) else if (v == "false") Some(false) else None)
+    // a count: a negative value keeps the default, a value above
+    // Int.MaxValue clamps (as `limitOf` does)
+    def count(k: String, default: Int): Int =
+      num(k).filter(_ >= 0).map(v => math.min(v, Int.MaxValue.toLong).toInt).getOrElse(default)
     RibJson.RibParams(
-      skip = num("skip").map(_.toInt).getOrElse(0),
-      limit = num("limit").map(_.toInt).getOrElse(1000),
-      maxDepth = num("maxdepth").map(_.toInt).getOrElse(10),
+      skip = count("skip", 0),
+      limit = count("limit", 1000),
+      maxDepth = count("maxdepth", 10),
       onlyActive = bool("onlyactive").getOrElse(false),
       changedAfterMs = num("changed_after"),
       changedBeforeMs = num("changed_before"),

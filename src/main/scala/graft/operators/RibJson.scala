@@ -1,12 +1,13 @@
 package graft.operators
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
-import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 import graft.filter.{FilterParser, RouteFilter}
-import graft.functions.IpFns
+import graft.functions.{IpFns, Param}
 
 /** P6 JSON tree projection + the `/api/json` response lifecycle
   * (reference: serializers src/bgpsvc.rs:493-707, service
@@ -15,12 +16,15 @@ import graft.functions.IpFns
   * Output per route key: {session_id → {path_id → {ts_millis →
   * {Active, Attrs, Labels}}}}, history newest-first capped at `maxdepth`
   * (take-after-filter from the newest side, src/bgpsvc.rs:519-531), empty
-  * subtrees pruned. The page keys come from one key pass — one action
-  * with one `route_id` exchange shared by the depth window and the
-  * key-flag aggregate, found/length observed on the same action — with
-  * no persisted key set; the page's entry rows — bounded by limit × rings
-  * × history — are collected once and the tree is rendered on the
-  * driver. */
+  * subtrees pruned. The page keys come from one key pass — one action,
+  * found/length observed on it, no persisted key set — that reads a
+  * small rib slice in one partition (one stage) and hash-partitions a
+  * large one on `route_id` once for the depth window and the key-flag
+  * aggregate. The page's entry rows — bounded by limit × rings × history
+  * — are read through an `InSet` of the page keys in one stage, collected
+  * once and rendered on the driver. Request values (filter values, the
+  * `after=` id, change-time bounds, maxdepth) enter the plan as
+  * [[graft.functions.Param]]s, so each page shape compiles once. */
 object RibJson {
 
   final case class RibParams(
@@ -90,8 +94,8 @@ object RibJson {
   private def passes(p: RibParams): Column = {
     var c: Column = lit(true)
     if (p.onlyActive) c = c && col("active")
-    p.changedAfterMs.foreach(a => c = c && unix_millis(col("ts")) > a)
-    p.changedBeforeMs.foreach(b => c = c && unix_millis(col("ts")) < b)
+    p.changedAfterMs.foreach(a => c = c && unix_millis(col("ts")) > Param.column(a))
+    p.changedBeforeMs.foreach(b => c = c && unix_millis(col("ts")) < Param.column(b))
     c
   }
 
@@ -102,7 +106,7 @@ object RibJson {
     * instead of the 9-column nested tuple keeps the aggregate keys inside
     * whole-stage codegen (the wide-struct key exceeded Janino's method
     * limit and fell back to interpreted eval — SCALE.md round-2 wart) and
-    * makes the page semi-join a single-key broadcast. */
+    * makes the page's entry fetch a set lookup on one long. */
   private def withRouteId(entries: DataFrame): DataFrame =
     if (entries.columns.contains("route_id")) entries
     else entries.withColumn("route_id",
@@ -127,6 +131,7 @@ object RibJson {
     * and sessions by id ascending. A route with no entry left after the
     * filter is left out. */
   private def render(entries: DataFrame, order: Seq[Long], p: RibParams): Seq[PageItem] = {
+    if (order.isEmpty) return Nil // an empty page runs no entry job
     val rows = entries.where(passes(p))
       .select(col("route_id"), itemKey, col("session_id").cast("long"),
         col("path_id").cast("long"), unix_millis(col("ts")), to_json(entryStruct))
@@ -169,7 +174,7 @@ object RibJson {
     val capped =
       if (p.maxDepth > 0)
         filtered.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") <= p.maxDepth)
+          .where(col("__rn") <= Param.column(p.maxDepth))
       else filtered
     capped.select(itemKey.as("item_key"),
         col("session_id").cast("long").as("session_id"),
@@ -190,14 +195,20 @@ object RibJson {
     * `found` (src/bgpsvc.rs:604-613) folded into the same aggregation.
     * Grouping on the route_id surrogate keeps the aggregate key one long;
     * the NLRI order tuple rides along as first() primitives `k0`, `k1`, …,
-    * which keeps the aggregation a hash aggregate. The slice is
-    * hash-partitioned on `route_id` once, ahead of the depth window, whose
-    * (route_id, ring) partitioning and the aggregate both reuse that one
-    * exchange; a `route_id` predicate above the aggregate pushes below
-    * the window and the exchange to the scan. */
+    * which keeps the aggregation a hash aggregate. The depth window's
+    * (route_id, ring) partitioning and the aggregate share one
+    * distribution of the slice: a slice no larger than AQE's advisory
+    * partition size — the size at which AQE would shrink a `route_id`
+    * shuffle to one task anyway — is read in one partition with no
+    * exchange, so the pass is one stage; a larger slice is
+    * hash-partitioned on `route_id` once. Either way a `route_id`
+    * predicate above the aggregate pushes below the window to the scan. */
   private[operators] def keyFlags(events: DataFrame, ribName: String,
       filter: RouteFilter, p: RibParams): DataFrame = {
-    val d = ribSlice(events, ribName).repartition(col("route_id"))
+    val slice = ribSlice(events, ribName)
+    val d =
+      if (fitsOneTask(slice)) slice.coalesce(1)
+      else slice.repartition(col("route_id"))
     val flag = RibViews.entryMatchFlag(d, ribName, filter, p.maxDepth,
       p.onlyActive, p.changedAfterMs, p.changedBeforeMs)
     d.withColumn("__em", flag)
@@ -206,11 +217,19 @@ object RibJson {
         nlriOrder.zipWithIndex.map { case (c, i) => first(c).as(s"k$i") }: _*)
   }
 
+  /** Whether the frame's planned size is at most
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
+  private def fitsOneTask(df: DataFrame): Boolean = {
+    val advisory = JavaUtils.byteStringAsBytes(
+      df.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory
+  }
+
   /** Shared page machinery: one key pass selects the page keys and
-    * observes the counts, then the page keys are broadcast-semi-joined
-    * back into the log. Returns (pageEntries, page route ids in item
-    * order, found, length) where pageEntries holds ALL history rows of
-    * the page's route keys. */
+    * observes the counts, then the page's entries are read from the
+    * rib's slice through an `InSet` of the page keys. Returns
+    * (pageEntries, page route ids in item order, found, length) where
+    * pageEntries holds ALL history rows of the page's route keys. */
   private def pagedEntries(events: DataFrame, ribName: String,
       filterStr: String, p: RibParams): (DataFrame, Seq[Long], Long, Long) = {
     val d = ribSlice(events, ribName)
@@ -220,14 +239,15 @@ object RibJson {
     // predicate reaches the scan), then the page resumes strictly after
     // it — no skip-scan at any page depth. An unknown or unmatched
     // route_id yields no token → first page (the reference's
-    // tolerant-params behavior).
+    // tolerant-params behavior). The id and the token's values are
+    // parameters, so every continuation page of a shape shares its code.
     val token = p.pageAfterId.flatMap { aid =>
-      val tokDf = flags.where(col("route_id") === aid && col("__m") === 1)
+      val tokDf = flags.where(col("route_id") === Param.column(aid) && col("__m") === 1)
         .select(keyOrder.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*)
       val schema = tokDf.schema
       tokDf.collect().headOption.map { r =>
         struct(schema.fields.zipWithIndex.map { case (f, i) =>
-          (if (r.isNullAt(i)) lit(null) else lit(r.get(i)))
+          (if (r.isNullAt(i)) lit(null) else Param.column(r.get(i)))
             .cast(f.dataType).as(f.name)
         }: _*)
       }
@@ -235,27 +255,14 @@ object RibJson {
     // the counts ride along with the page-key action as observed metrics:
     // its TakeOrderedAndProject reads every key row, so the metrics above
     // the aggregate see every key without a job of their own
-    def pageIds(keys: DataFrame): DataFrame = {
-      val matchedKeys = keys.where(col("__m") === 1)
-      (if (p.pageAfterId.isDefined) RibViews.pageAfter(matchedKeys, token, p.limit, keyOrder)
-       else RibViews.page(matchedKeys, p.skip, p.limit, keyOrder)).select(col("route_id"))
-    }
     val obs = Observation()
-    val observedFlags = flags
+    val matchedKeys = flags
       .observe(obs, sum(col("__m")).as("found"), count(lit(1)).as("length"))
-    val planned = pageIds(observedFlags)
-    // where the optimizer drops the page's limit (a driver-local input
-    // whose keys fit the page), the global sort left in its place samples
-    // its input in a job of its own, which would run the metrics twice;
-    // one partition keeps that sort in the metrics' own stage. Parquet
-    // logs, the served path, are unbounded and keep the TakeOrderedAndProject.
-    val pageIdDf =
-      if (planned.queryExecution.sparkPlan.exists {
-        case s: SortExec => s.global
-        case _ => false
-      }) pageIds(observedFlags.coalesce(1))
-      else planned
-    val matched = pageIdDf.collect().map(_.getLong(0)).toSeq
+      .where(col("__m") === 1)
+    // Spark caps skip + limit at Int.MaxValue; no page reaches that many keys
+    val matched = (if (p.pageAfterId.isDefined) RibViews.pageAfter(matchedKeys, token, p.limit, keyOrder)
+      else RibViews.page(matchedKeys, p.skip, math.min(p.limit, Int.MaxValue - p.skip), keyOrder))
+      .select(col("route_id")).collect().map(_.getLong(0)).toSeq
     // read only after the action succeeded (get blocks until the metrics
     // arrive). The sum over no keys is null, i.e. 0. The metrics are
     // absent when the optimizer or AQE pruned their part of the plan (a
@@ -282,14 +289,9 @@ object RibJson {
           .limit(p.limit)
           .orderBy(pageOrder: _*))
     // the page is bounded by `limit` (reference contract, default 1000):
-    // broadcast its keys into the entry semi-join — at scale this is a
-    // broadcast of ≤ limit longs against the log scan, the plan a keyed
-    // point-page wants
-    val s = d.sparkSession
-    import s.implicits._
-    val pageKeys = order.toDF("route_id")
-    val pageEntries = d.join(broadcast(pageKeys),
-      d("route_id") === pageKeys("route_id"), "left_semi")
+    // its keys filter the slice as a set of at most `limit` longs, so the
+    // fetch is one stage and its code is the same at any page size
+    val pageEntries = d.where(RibViews.inSet(col("route_id"), order))
     (pageEntries, order, found, length)
   }
 

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.filter.{FilterCompiler, FilterParser, RouteFilter}
-import graft.functions.IpFns
+import graft.functions.{IpFns, Param}
 
 /** Derived views over the append-only route-event log — the engine's
   * re-expression of the reference's mutable nested history maps
@@ -966,14 +967,16 @@ object RibViews {
       changedBeforeMs: Option[Long]): Column = {
     val ring = col("route_id") +: ringPart(df)
     val wAll = Window.partitionBy(ring: _*).orderBy(sortCols(df, desc0 = false): _*)
+    // the request's values are parameters: one generated class per page shape
     var passes: Column = lit(true)
     if (onlyActive) passes = passes && col("active")
-    changedAfterMs.foreach(a => passes = passes && unix_millis(col("ts")) > a)
-    changedBeforeMs.foreach(b => passes = passes && unix_millis(col("ts")) < b)
+    changedAfterMs.foreach(a => passes = passes && unix_millis(col("ts")) > Param.column(a))
+    changedBeforeMs.foreach(b => passes = passes && unix_millis(col("ts")) < Param.column(b))
     val nAll = count(lit(1)).over(Window.partitionBy(ring: _*))
     val rnPass = sum(when(passes, 1).otherwise(0)).over(
       wAll.rowsBetween(Window.unboundedPreceding, 0))
-    passes && (rnPass > nAll - maxDepth) && FilterCompiler.acceptFor(ribName, filter)
+    passes && (rnPass > nAll - Param.column(maxDepth.toLong)) &&
+      FilterCompiler.acceptFor(ribName, filter)
   }
 
   /** SURVEY O2: the reference's BTreeMap range prune (most-specific
@@ -1048,7 +1051,10 @@ object RibViews {
     * candidates — an IN-list the Parquet reader can push into row-group
     * dictionary/stats skipping. Sound only for branches whose supernet
     * acceptance requires prefix containment (prefix/vpn families; mdt is
-    * rd-only on this path and gets no hint). */
+    * rd-only on this path and gets no hint). Built as an [[inSet]]: the
+    * number of distinct candidates varies with the address, and an
+    * IN-list of up to ten literals would put them into the generated
+    * code. */
   private def superPruneHintFor(rib: String, f: RouteFilter): Column = {
     val v4Pfx = Set("ipv4u", "vpnv4u", "ipv4lu", "ipv4m", "vpnv4m", "fs4u")
     val v6Pfx = Set("ipv6u", "vpnv6u", "ipv6lu", "ipv6mdt", "vpnv6m")
@@ -1056,16 +1062,22 @@ object RibViews {
       case Some(graft.filter.FilterItem.V4(net, _)) if v4Pfx(rib) =>
         val cands = (0 to net.plen)
           .map(p => if (p == 0) 0L else net.addr & (-1L << (32 - p)) & 0xFFFFFFFFL)
-          .distinct
-        col("prefix.ip_lo").isin(cands: _*)
+        inSet(col("prefix.ip_lo"), cands)
       case Some(graft.filter.FilterItem.V6(net, _)) if v6Pfx(rib) =>
         val cands = (0 to math.min(net.plen, 64))
           .map(p => if (p == 0) 0L else if (p >= 64) net.hi else net.hi & (-1L << (64 - p)))
-          .distinct
-        col("prefix.ip_hi").isin(cands: _*)
+        inSet(col("prefix.ip_hi"), cands)
       case _ => lit(true)
     }
   }
+
+  /** `c IN values` built as an `InSet` directly, where `isin` keeps an
+    * IN-list of at most ten values (`spark.sql.optimizer.inSetConversionThreshold`)
+    * whose literals whole-stage codegen inlines: the generated code is
+    * the same for any values and any number of them, and the filter
+    * still pushes to a Parquet scan as `In`. */
+  private[operators] def inSet(c: Column, values: Iterable[Long]): Column =
+    GraftBridge.column(InSet(GraftBridge.expression(c), values.toSet[Any]))
 
   /** Supernet scan (Q2, src/ribfilter.rs:620-683) — same union shape, plus
     * the candidate-network IN-list ahead of the tri-state predicate (the

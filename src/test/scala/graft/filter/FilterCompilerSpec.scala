@@ -370,4 +370,68 @@ class FilterCompilerSpec extends AnyFunSuite {
     }
     assert(accepted > 0 && rejected > 0, s"accepted $accepted, rejected $rejected")
   }
+
+  // the generated code of graft.functions.Param reads its value from the
+  // class's references; its eval serves the interpreted path. The rib ×
+  // filter matrix, run once through whole-stage codegen and once with no
+  // code generated at all, must accept the same rows
+  test("property: interpreted evaluation accepts the rows generated code accepts") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(7)
+    // checkpointed, so the projections run in the plan, not folded while optimizing
+    val gen = graft.sources.RouteEventGen.fromEvents((0L until 4800L).map(i =>
+      (i, rnd.nextInt(1500).toLong, new java.sql.Timestamp(1700000000000L + i * 1000L)))
+      .toDF("event_id", "user_id", "ts")).localCheckpoint()
+    // type-1 route targets embed an IPv4 address (a: its top 16 bits, b:
+    // its bottom 16 then the assigned number); the generator writes none
+    def rt(ip: String, n: Long): Attrs = {
+      val a = Model.v4(ip, 32).ip_lo
+      Model.emptyAttrs.copy(extcomms = Seq(ExtCommunity(1, 2, a >> 16, ((a & 0xFFFF) << 16) | n)))
+    }
+    val hand = df(Seq(
+      ev("ipv4u", Model.v4("10.4.1.0", 24), attrs = rt("10.4.1.7", 7)),
+      ev("vpnv4u", Model.v4("10.4.2.0", 24), rd = Some(Rd(100, 1000)), attrs = rt("10.9.0.1", 100)),
+      ev("ipv4u", Model.v4("10.9.0.0", 16),
+        attrs = Model.emptyAttrs.copy(nexthop = Some(Model.v4("10.1.2.3", 32)))),
+      ev("ipv4u", Model.v4("10.4.1.7", 32)),
+      ev("ipv6u", Model.v6(0x2001000000040100L, 0L, 56)))).localCheckpoint()
+    val filters = Seq(
+      "10.4.0.0/14", "-10.4.0.0/14", "10.4.1.7", "10.4.1.0/24", "232.0.0.0/8", "2001:0:4:100::/56",
+      "2001:0:4:100::1", "24", "-28", "64", "rd:100:1000", "rt:100:1000", "rt:302",
+      "rt:10.4.1.7", "rt:10.9.0.1:100", "nh:192.168.0.0/16", "nh:10.1.0.0/16", "nh:2001::/16",
+      "community:10:25", "-community:20:3", "as:101,200", "as:^104", "as:65001$")
+    val parsed = filters.map(FilterParser.parse)
+    parsed.zip(filters).foreach { case (f, text) => assert(f.terms.nonEmpty, text) }
+    // every filter's route acceptance then its supernet acceptance, per row
+    def verdicts(frame: DataFrame): Seq[String] = FilterCompiler.ribValues.flatMap { r =>
+      frame.where(col("rib") === r).select(col("ts") +: col("prefix_str") +: parsed.flatMap(f =>
+        Seq(FilterCompiler.acceptFor(r, f), FilterCompiler.acceptSuperFor(r, f))): _*)
+        .collect().map(_.toSeq.mkString(","))
+    }.sorted
+    def codegenStages(frame: DataFrame): Int =
+      frame.where(FilterCompiler.acceptFor("ipv4u", parsed.head)).queryExecution.executedPlan
+        .collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }.length
+    val generated = Seq(gen, hand).map(verdicts)
+    assert(codegenStages(gen) > 0)
+    val conf = Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val interpreted = try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(codegenStages(gen) == 0)
+      Seq(gen, hand).map(verdicts)
+    } finally conf.keys.foreach(spark.conf.unset)
+    assert(generated == interpreted)
+    // each kind of term accepts some row, so both paths evaluated a match
+    val accepted = generated.flatten.map(_.split(",").drop(2)).transpose
+      .map(_.count(_ == "true"))
+    val byFilter = filters.zipWithIndex.map { case (f, i) =>
+      f -> (accepted(2 * i), accepted(2 * i + 1)) }.toMap
+    // the mdt group is a host address: 232.0.0.0/8 matches it alone
+    Seq("10.4.0.0/14", "10.4.1.7", "232.0.0.0/8", "2001:0:4:100::/56", "24", "rd:100:1000", "rt:302",
+      "rt:10.4.1.7", "rt:10.9.0.1:100", "nh:192.168.0.0/16", "nh:10.1.0.0/16",
+      "community:10:25", "as:101,200").foreach(f => assert(byFilter(f)._1 > 0, s"$f: ${byFilter(f)}"))
+    Seq("10.4.1.7", "2001:0:4:100::1").foreach(f =>
+      assert(byFilter(f)._2 > 0, s"supernet $f: ${byFilter(f)}"))
+  }
 }

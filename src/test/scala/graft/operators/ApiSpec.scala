@@ -135,6 +135,25 @@ class ApiSpec extends AnyFunSuite {
     assert(p.skip == 0 && p.limit == 1000 && !p.onlyActive && p.maxDepth == 7)
   }
 
+  test("params: a negative count keeps its default, one past Int.MaxValue clamps") {
+    val neg = Api.parseParams(Map("skip" -> "-1", "limit" -> "-1", "maxdepth" -> "-2"))
+    assert(neg.skip == 0 && neg.limit == 1000 && neg.maxDepth == 10)
+    val big = Api.parseParams(Map("skip" -> "99999999999", "limit" -> "99999999999",
+      "maxdepth" -> "4294967296"))
+    assert(big.skip == Int.MaxValue && big.limit == Int.MaxValue && big.maxDepth == Int.MaxValue)
+    // each answers a page (a 200), not a Spark analysis error (a 500)
+    val d = events
+    Seq("limit=-1" -> "\"skip\":0,\"limit\":1000,", "skip=-1" -> "\"skip\":0,\"limit\":1000,",
+      "limit=99999999999" -> s"\"skip\":0,\"limit\":${Int.MaxValue},",
+      "skip=1&limit=99999999999" -> s"\"skip\":1,\"limit\":${Int.MaxValue},",
+      "maxdepth=-1" -> "\"maxdepth\":10,").foreach { case (q, echo) =>
+      val body = Api.handle(d, s"/api/json/ipv4u?filter=10.0.0.0%2F8&$q")
+      assert(body.exists(b => b.contains(echo) && b.contains("\"length\":1")), s"$q: $body")
+      assert(body.exists(_.contains(if (q.startsWith("skip=1")) "\"items\":{}" else "\"found\":1")),
+        s"$q: $body")
+    }
+  }
+
   test("unknown rib name dispatches to ipv4u") {
     assert(Api.ribName("vpnv6u") == "vpnv6u")
     assert(Api.ribName("nonsense") == "ipv4u")

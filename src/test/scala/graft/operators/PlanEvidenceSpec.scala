@@ -2,13 +2,15 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics, Filter}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SortExec}
+import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, QueryExecution, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
@@ -79,17 +81,6 @@ class PlanEvidenceSpec extends AnyFunSuite {
       plan.take(3000))
   }
 
-  test("json page entries reach the log via a broadcast semi-join on route_id") {
-    // the page keys (≤ limit longs) must broadcast into the log scan — a
-    // shuffled join here would move the whole log at 100 TB (SCALE.md P6)
-    val page = RibJson.structuralPage(re, "ipv4u", "10.4.0.0/14",
-      RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5))
-    val plan = page.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      plan.take(3000))
-    assert(!plan.contains("SortMergeJoin"), plan.take(3000))
-  }
-
   test("json page rollup groups on surrogate longs and compiles its codegen") {
     // the key-flag aggregate — the only aggregate the page runs — must key
     // on the route_id surrogate (one long), never the wide 9-column
@@ -138,7 +129,15 @@ class PlanEvidenceSpec extends AnyFunSuite {
     seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
   }
 
-  test("json page key pass: one route_id exchange, observed counts, nothing cached") {
+  private def withAdvisorySize[T](size: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, size)
+    try body finally spark.conf.unset(key)
+  }
+
+  /** The key pass and the entry fetch of one matched ipv4u page, with the
+    * observed-count plan checks every key pass must meet. */
+  private def pageExecutions(): (QueryExecution, QueryExecution) = {
     val params = RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5)
     var page: (Seq[RibJson.PageItem], Long, Long) = null
     val qes = executionsOf { page = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params) }
@@ -149,27 +148,9 @@ class PlanEvidenceSpec extends AnyFunSuite {
       assert(aqe.collect(qe.executedPlan) { case c: InMemoryTableScanExec => c }.isEmpty &&
         !qe.executedPlan.toString.contains("InMemoryRelation"), qe.executedPlan.toString)
     }
-    val keyPass = qes.filter(_.optimizedPlan.exists(_.isInstanceOf[CollectMetrics]))
+    val (keyPass, entries) = qes.partition(_.optimizedPlan.exists(_.isInstanceOf[CollectMetrics]))
     assert(keyPass.length == 1, qes.map(_.optimizedPlan.toString.take(800)).mkString("\n\n"))
     val qe = keyPass.head
-    val plan = qe.executedPlan.toString
-    // the depth window and the route_id aggregate share one exchange
-    val shuffles = aqe.collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }
-    assert(shuffles.length == 1, plan)
-    val keys = shuffles.head.outputPartitioning match {
-      case h: HashPartitioning => h.expressions.map {
-        case a: Attribute => a.name
-        case e => e.sql
-      }
-      case other => Seq(other.toString)
-    }
-    assert(keys == Seq("route_id"), plan)
-    // the served (parquet) log is unbounded: the page keeps its
-    // TakeOrderedAndProject, with no global sort and no one-partition coalesce
-    assert(aqe.collect(qe.executedPlan) {
-      case c: CoalesceExec => c
-      case s: SortExec if s.global => s
-    }.isEmpty && plan.contains("TakeOrderedAndProject"), plan)
     // the counts are observed right above the route_id aggregate, and the
     // page's __m filter stays above them, so the metrics see every key
     val metrics = qe.optimizedPlan.collect { case c: CollectMetrics => c }
@@ -188,6 +169,85 @@ class PlanEvidenceSpec extends AnyFunSuite {
       case f: Filter => f.child.isInstanceOf[CollectMetrics]
       case _ => false
     }, qe.optimizedPlan.toString)
+    (qe, entries.head)
+  }
+
+  test("json page entries reach the log via an InSet filter on route_id, no join, no exchange") {
+    // the page keys (≤ limit longs) filter the rib's slice as one set
+    // lookup in the scan's stage: no broadcast, no join, no shuffle
+    val (_, entries) = pageExecutions()
+    val plan = entries.executedPlan
+    assert(aqe.collect(plan) {
+      case f: FilterExec => f.condition.collect {
+        case InSet(a: Attribute, _) if a.name == "route_id" => a
+      }
+    }.flatten.length == 1, plan.toString)
+    assert(aqe.collect(plan) {
+      case j: BaseJoinExec => j
+      case e: Exchange => e
+    }.isEmpty, plan.toString)
+  }
+
+  test("json page key pass: no exchange below the advisory size, one route_id exchange above") {
+    // a slice within AQE's advisory partition size is read in one
+    // partition: the depth window, the route_id aggregate and the page's
+    // TakeOrderedAndProject run in one stage, with no global sort
+    val (small, _) = pageExecutions()
+    val smallPlan = small.executedPlan
+    assert(aqe.collect(smallPlan) { case e: ShuffleExchangeExec => e }.isEmpty, smallPlan.toString)
+    assert(aqe.collect(smallPlan) { case s: SortExec if s.global => s }.isEmpty &&
+      smallPlan.toString.contains("TakeOrderedAndProject"), smallPlan.toString)
+    // a slice above it keeps exactly one exchange, on route_id, shared by
+    // the depth window and the aggregate
+    val (large, _) = withAdvisorySize("64k")(pageExecutions())
+    val plan = large.executedPlan.toString
+    val shuffles = aqe.collect(large.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length == 1, plan)
+    val keys = shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map {
+        case a: Attribute => a.name
+        case e => e.sql
+      }
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("route_id"), plan)
+    assert(aqe.collect(large.executedPlan) {
+      case c: CoalesceExec => c
+      case s: SortExec if s.global => s
+    }.isEmpty && plan.contains("TakeOrderedAndProject"), plan)
+  }
+
+  test("a page shape compiles once") {
+    // pages that differ only in a request value generate the same code in
+    // every execution, so the second one reuses the first one's classes
+    // (the code only: each subtree's plan text prints the values)
+    def code(filter: String, p: RibJson.RibParams, rib: String = "ipv4u"): Seq[Seq[String]] =
+      executionsOf { RibJson.jsonPage(re, rib, filter, p) }
+        .map(qe => codegenStringSeq(qe.executedPlan).map(_._2))
+    val p = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 5)
+    val first = RibJson.jsonPage(re, "ipv4u", "10.1.0.0/16", p)._1
+    assert(first.length == 5)
+    val jan5 = 1704412800000L
+    val pairs = Seq(
+      "v4 /16" -> (() => code("10.1.0.0/16", p), () => code("10.2.0.0/16", p)),
+      "exact v6 prefix" -> (() => code("2001:0:6:8::/64", p, "ipv6u"),
+        () => code("2001:0:8:b::/64", p, "ipv6u")),
+      "after= id" -> (() => code("10.1.0.0/16", p.copy(pageAfterId = Some(first(1).routeId))),
+        () => code("10.1.0.0/16", p.copy(pageAfterId = Some(first(3).routeId)))),
+      "supernet address" -> (() => code("10.3.9.50", p), () => code("10.6.7.255", p)),
+      "changed_after" -> (() => code("10.1.0.0/16", p.copy(changedAfterMs = Some(jan5))),
+        () => code("10.1.0.0/16", p.copy(changedAfterMs = Some(jan5 + 5 * 86400000L)))))
+    pairs.foreach { case (what, (a, b)) =>
+      val (ca, cb) = (a(), b())
+      assert(ca.nonEmpty && ca.length == cb.length, s"$what: ${ca.length} vs ${cb.length} executions")
+      ca.zip(cb).zipWithIndex.foreach { case ((x, y), i) =>
+        assert(x.nonEmpty && x.length == y.length, s"$what, execution $i: codegen subtrees")
+        x.zip(y).foreach { case (sx, sy) =>
+          val diff = sx.linesIterator.zip(sy.linesIterator).find { case (l, r) => l != r }
+          assert(sx == sy, s"$what, execution $i differs: $diff")
+        }
+      }
+    }
   }
 
   test("json page SQL executions: 2 matched, at most 3 with after= or the supernet fallback") {

@@ -14,8 +14,10 @@ the change won at least nine tenths of the pairs (ties count for neither
 side) and its median beats the parent's by more than the parent's
 interquartile range. `claim_met` is null for a metric with fewer than
 MIN_CLAIM_PAIRS complete pairs: a win count and quartiles from fewer runs
-cannot back a claim. `--append` adds the runs to an existing output file
-and recomputes the summary over all of them.
+cannot back a claim. The summary also holds `shape_p50_ms`: per side, the
+median over runs of each URL shape's `p50_ms` from the report's
+`by_shape`, so a change shows which shapes moved. `--append` adds the runs
+to an existing output file and recomputes the summary over all of them.
 """
 import argparse
 import json
@@ -61,6 +63,7 @@ def run_once(tree, workload, seed, seconds, trace):
     for k, v in report.get("end_to_end", {}).items():
         metrics.setdefault(k, v["value"])
     run["metrics"] = metrics
+    run["shape_p50_ms"] = {k: v["p50_ms"] for k, v in report.get("by_shape", {}).items()}
     run["host"] = {k: report.get(k) for k in ("nproc", "load_before", "load_after",
                                                "calib_sec_before", "calib_sec_after")}
     return run
@@ -103,11 +106,18 @@ def summarize(runs):
                 gain = (cv - pv) if up else (pv - cv)
                 claim[m] = (None if len(full) < MIN_CLAIM_PAIRS else
                             10 * won >= 9 * len(full) and gain > q3 - q1)
+        shapes = {s: {} for s in side}
+        for s in side:
+            for r in side[s]:
+                for k, v in r.get("shape_p50_ms", {}).items():
+                    shapes[s].setdefault(k, []).append(v)
         out["%s/trace%d" % (workload, trace)] = {
             "runs": {s: len(side[s]) for s in side},
             "failed_runs": sum(1 for r in rs if not r.get("correct")),
             "median": med, "quartiles": quart, "change_vs_parent": rel,
-            "change_better_pairs": better, "claim_met": claim}
+            "change_better_pairs": better, "claim_met": claim,
+            "shape_p50_ms": {s: {k: statistics.median(v) for k, v in sorted(shapes[s].items())}
+                             for s in side}}
     return out
 
 
