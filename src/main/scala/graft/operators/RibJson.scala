@@ -4,6 +4,8 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 import graft.filter.{FilterParser, RouteFilter}
@@ -17,10 +19,10 @@ import graft.functions.{IpFns, Param}
   * {Active, Attrs, Labels}}}}, history newest-first capped at `maxdepth`
   * (take-after-filter from the newest side, src/bgpsvc.rs:519-531), empty
   * subtrees pruned. The page keys come from one key pass — one action,
-  * found/length observed on it, no persisted key set — that reads a
-  * small rib slice in one partition (one stage) and hash-partitions a
-  * large one on `route_id` once for the depth window and the key-flag
-  * aggregate. The page's entry rows — bounded by limit × rings × history
+  * found/length observed on it, no persisted key set — that reads a rib
+  * slice AQE would shrink to one task in one partition (one stage) and
+  * hash-partitions a larger one on `route_id` once for the depth window
+  * and the key-flag aggregate. The page's entry rows — bounded by limit × rings × history
   * — are read through an `InSet` of the page keys in one stage, collected
   * once and rendered on the driver. Request values (filter values, the
   * `after=` id, change-time bounds, maxdepth) enter the plan as
@@ -174,7 +176,7 @@ object RibJson {
     val capped =
       if (p.maxDepth > 0)
         filtered.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") <= Param.column(p.maxDepth))
+          .where(col("__rn") <= p.maxDepth)
       else filtered
     capped.select(itemKey.as("item_key"),
         col("session_id").cast("long").as("session_id"),
@@ -197,17 +199,17 @@ object RibJson {
     * the NLRI order tuple rides along as first() primitives `k0`, `k1`, …,
     * which keeps the aggregation a hash aggregate. The depth window's
     * (route_id, ring) partitioning and the aggregate share one
-    * distribution of the slice: a slice no larger than AQE's advisory
-    * partition size — the size at which AQE would shrink a `route_id`
-    * shuffle to one task anyway — is read in one partition with no
-    * exchange, so the pass is one stage; a larger slice is
-    * hash-partitioned on `route_id` once. Either way a `route_id`
-    * predicate above the aggregate pushes below the window to the scan. */
+    * distribution of the slice. A slice no larger than the size up to
+    * which AQE coalesces a shuffle into one task ([[oneTaskBytes]]) is
+    * read in one partition with no exchange, so the pass is one stage;
+    * a larger slice is hash-partitioned on `route_id` once. Either way a
+    * `route_id` predicate above the aggregate pushes below the window to
+    * the scan. */
   private[operators] def keyFlags(events: DataFrame, ribName: String,
       filter: RouteFilter, p: RibParams): DataFrame = {
     val slice = ribSlice(events, ribName)
     val d =
-      if (fitsOneTask(slice)) slice.coalesce(1)
+      if (sliceBytes(events, ribName) <= oneTaskBytes(events)) slice.coalesce(1)
       else slice.repartition(col("route_id"))
     val flag = RibViews.entryMatchFlag(d, ribName, filter, p.maxDepth,
       p.onlyActive, p.changedAfterMs, p.changedBeforeMs)
@@ -217,12 +219,36 @@ object RibJson {
         nlriOrder.zipWithIndex.map { case (c, i) => first(c).as(s"k$i") }: _*)
   }
 
-  /** Whether the frame's planned size is at most
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
-  private def fitsOneTask(df: DataFrame): Boolean = {
-    val advisory = JavaUtils.byteStringAsBytes(
-      df.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= advisory
+  /** The planned size of the rib's slice. For a log that is one file
+    * relation partitioned by `rib` it is the size of the rib's files: the
+    * optimizer prunes the partitions of a path-based log only at physical
+    * planning, so its estimate is the whole log's. Otherwise it is the
+    * optimizer's estimate of the slice. */
+  private def sliceBytes(events: DataFrame, ribName: String): BigInt =
+    events.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.partitionSchema.fieldNames.toSeq == Seq("rib") =>
+        fs.location.listFiles(Nil, Nil)
+          .filter(_.values.getUTF8String(0).toString == ribName)
+          .flatMap(_.files).map(f => BigInt(f.getLen)).sum
+      case _ => ribSlice(events, ribName).queryExecution.optimizedPlan.stats.sizeInBytes
+    }
+
+  /** The shuffle size up to which AQE coalesces a shuffle into one task:
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` while
+    * `coalescePartitions.parallelismFirst` holds (AQE then targets
+    * max(min(size / parallelism, advisory), minPartitionSize)), else
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. The rib files
+    * are compared with it: the key pass's shuffle measured 0.53–0.70 of
+    * them (SCALE.md), so a slice read in one partition is one AQE would
+    * have shrunk to one task. */
+  private def oneTaskBytes(df: DataFrame): Long = {
+    val conf = df.sparkSession.conf
+    val key =
+      if (conf.get(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST.key).toBoolean)
+        SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key
+      else SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    JavaUtils.byteStringAsBytes(conf.get(key))
   }
 
   /** Shared page machinery: one key pass selects the page keys and
@@ -256,13 +282,34 @@ object RibJson {
     // its TakeOrderedAndProject reads every key row, so the metrics above
     // the aggregate see every key without a job of their own
     val obs = Observation()
-    val matchedKeys = flags
+    val observed = flags
       .observe(obs, sum(col("__m")).as("found"), count(lit(1)).as("length"))
-      .where(col("__m") === 1)
-    // Spark caps skip + limit at Int.MaxValue; no page reaches that many keys
-    val matched = (if (p.pageAfterId.isDefined) RibViews.pageAfter(matchedKeys, token, p.limit, keyOrder)
-      else RibViews.page(matchedKeys, p.skip, math.min(p.limit, Int.MaxValue - p.skip), keyOrder))
-      .select(col("route_id")).collect().map(_.getLong(0)).toSeq
+    // the page plans as a TakeOrderedAndProject only while skip + limit
+    // stays below Spark's top-K fallback threshold: past it the page would
+    // be a global sort, whose range-partition sampling job runs the
+    // observed metrics a second time. No page reaches that many keys
+    val maxRows = d.sparkSession.conf.get(SQLConf.TOP_K_SORT_FALLBACK_THRESHOLD.key).toInt - 1
+    val limit = math.min(p.limit, maxRows)
+    def pageIds(keys: DataFrame): DataFrame = {
+      val matchedKeys = keys.where(col("__m") === 1)
+      (if (p.pageAfterId.isDefined) RibViews.pageAfter(matchedKeys, token, limit, keyOrder)
+        else RibViews.page(matchedKeys, p.skip, math.max(0, math.min(limit, maxRows - p.skip)),
+          keyOrder))
+        .select(col("route_id"))
+    }
+    val planned = pageIds(observed)
+    // the optimizer also drops the limit of a page whose keys fit it when
+    // the input is bounded (a driver-local frame); above the one-task size
+    // the global sort left in its place would sample its exchanged input
+    // in a job of its own. One partition keeps that sort in the metrics'
+    // own stage. Parquet logs, the served path, are unbounded
+    val pageIdDf =
+      if (planned.queryExecution.sparkPlan.exists {
+        case s: SortExec => s.global
+        case _ => false
+      }) pageIds(observed.coalesce(1))
+      else planned
+    val matched = pageIdDf.collect().map(_.getLong(0)).toSeq
     // read only after the action succeeded (get blocks until the metrics
     // arrive). The sum over no keys is null, i.e. 0. The metrics are
     // absent when the optimizer or AQE pruned their part of the plan (a
@@ -286,7 +333,7 @@ object RibJson {
         routeIds(RibViews.scanSuper(d, filterStr)
           .dropDuplicates("route_id")
           .orderBy(RibViews.keyLen.desc +: pageOrder: _*)
-          .limit(p.limit)
+          .limit(limit)
           .orderBy(pageOrder: _*))
     // the page is bounded by `limit` (reference contract, default 1000):
     // its keys filter the slice as a set of at most `limit` longs, so the

@@ -129,8 +129,11 @@ class PlanEvidenceSpec extends AnyFunSuite {
     seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
   }
 
-  private def withAdvisorySize[T](size: String)(body: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  /** Runs `body` with AQE's minimum coalesced partition size set to
+    * `size`: the size up to which a shuffle becomes one task, and so the
+    * size up to which a page's key pass reads its slice in one partition. */
+  private def withOneTaskSize[T](size: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     spark.conf.set(key, size)
     try body finally spark.conf.unset(key)
   }
@@ -188,10 +191,11 @@ class PlanEvidenceSpec extends AnyFunSuite {
     }.isEmpty, plan.toString)
   }
 
-  test("json page key pass: no exchange below the advisory size, one route_id exchange above") {
-    // a slice within AQE's advisory partition size is read in one
-    // partition: the depth window, the route_id aggregate and the page's
-    // TakeOrderedAndProject run in one stage, with no global sort
+  test("json page key pass: no exchange below the one-task size, one route_id exchange above") {
+    // a slice no larger than the size AQE coalesces a shuffle into one
+    // task is read in one partition: the depth window, the route_id
+    // aggregate and the page's TakeOrderedAndProject run in one stage,
+    // with no global sort
     val (small, _) = pageExecutions()
     val smallPlan = small.executedPlan
     assert(aqe.collect(smallPlan) { case e: ShuffleExchangeExec => e }.isEmpty, smallPlan.toString)
@@ -199,7 +203,7 @@ class PlanEvidenceSpec extends AnyFunSuite {
       smallPlan.toString.contains("TakeOrderedAndProject"), smallPlan.toString)
     // a slice above it keeps exactly one exchange, on route_id, shared by
     // the depth window and the aggregate
-    val (large, _) = withAdvisorySize("64k")(pageExecutions())
+    val (large, _) = withOneTaskSize("16k")(pageExecutions())
     val plan = large.executedPlan.toString
     val shuffles = aqe.collect(large.executedPlan) { case e: ShuffleExchangeExec => e }
     assert(shuffles.length == 1, plan)

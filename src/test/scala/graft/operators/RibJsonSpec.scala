@@ -297,6 +297,38 @@ class RibJsonSpec extends AnyFunSuite {
     assert(rest._1.map(_.itemKey) == Seq("10.0.2.0/24") && rest._2 == 3L && rest._3 == 4L)
   }
 
+  test("a page planned without top-K counts once on either key pass") {
+    // skip + limit at or past spark.sql.execution.topKSortFallbackThreshold,
+    // or a bounded input whose keys fit the page, would plan the page as a
+    // global sort, whose range-partition sampling job over an exchanged
+    // key pass runs the observed counts a second time; the key pass takes
+    // the route_id exchange when the one-task size is below the slice
+    val f = "10.4.0.0/14"
+    val p = RibJson.RibParams(limit = 5, maxDepth = 5)
+    val first = RibJson.jsonPage(re, "ipv4u", f, p)._1
+    val (found, length) = counted(re, "ipv4u", f, p)
+    assert(found > 5 && first.length == 5)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    for (size <- Seq("1MB", "16k")) {
+      spark.conf.set(key, size)
+      try {
+        for ((q, items) <- Seq("limit=99999999999" -> found, "skip=1&limit=99999999999" -> (found - 1),
+            s"after=${first.head.routeId}&limit=99999999999" -> (found - 1))) {
+          val doc = mapper.readTree(
+            Api.handle(re, s"/api/json/ipv4u?filter=10.4.0.0%2F14&maxdepth=5&$q").get)
+          assert((doc.get("found").asLong, doc.get("length").asLong) == ((found, length)) &&
+            doc.get("items").size == items, s"$size $q")
+        }
+        // a bounded input whose keys fit the page: the optimizer drops the
+        // page's limit and leaves a global sort
+        val bounded = re.limit(re.count().toInt)
+        val (items, bFound, bLength) = RibJson.jsonPage(bounded, "ipv4u", f, p.copy(limit = 1000))
+        assert((bFound, bLength) == ((found, length)) && items.length == found, size)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("concurrent pages on one session answer as each page run alone") {
     // every page observes its own found/length: eight pages with distinct
     // filters and counts, run at once, give the bytes each gives alone
