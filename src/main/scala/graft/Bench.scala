@@ -45,7 +45,7 @@ object Bench {
     }
     // Scheduler-contention probe (VERDICT r10 item 3): the single-thread
     // loop above only sees CPU speed, but the observed 1.8× quiet-run
-    // swing on q_pipeline_attrition tracks SCHEDULER contention — 32
+    // swing on the composed pipeline queries tracks SCHEDULER contention — 32
     // tasks fighting neighbor VMs for cores. This probe runs an actual
     // 32-task map + shuffle + reduce (the shape every bench query has),
     // so its time moves with exactly the resource the queries contend

@@ -4,9 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** IP-prefix math as Catalyst column expressions (reference: the zettabgp
-  * `contains`/`in_subnet`/`range_first`/`range_last` surface exercised at
-  * src/ribfilter.rs:231-303, 1350-1417, and the multicast classifiers at
-  * src/service.rs:30-41).
+  * `contains` surface exercised at src/ribfilter.rs:1350-1417, and the
+  * multicast classifiers at src/service.rs:30-41).
   *
   * Representation: 128-bit address space in two signed longs (`ip_hi`,
   * `ip_lo`); IPv4 occupies the low 32 bits of `ip_lo` with `ip_hi == 0`,
@@ -54,17 +53,6 @@ object IpFns {
       (route("ip_lo").bitwiseAND(ml) === net("ip_lo").bitwiseAND(ml))
   }
 
-  /** True iff host address `addr` (a /32 or /128 struct) lies in `net` —
-    * the reference's `in_subnet` (src/ribfilter.rs:1430-1445 nexthop test). */
-  def inSubnet(net: Column, addr: Column): Column = {
-    val p = plen128(net)
-    val mh = netMaskHi(p)
-    val ml = netMaskLo(p)
-    net("version") === addr("version") &&
-      (addr("ip_hi").bitwiseAND(mh) === net("ip_hi").bitwiseAND(mh)) &&
-      (addr("ip_lo").bitwiseAND(ml) === net("ip_lo").bitwiseAND(ml))
-  }
-
   /** IPv4 multicast: first octet >= 224 and not 255.255.255.255
     * (reference: src/service.rs:30-38). */
   def isMulticastV4(ipLo: Column): Column =
@@ -73,25 +61,6 @@ object IpFns {
   /** IPv6 multicast: first octet == 0xff (reference: src/service.rs:39-41). */
   def isMulticastV6(ipHi: Column): Column =
     shiftright(ipHi, 56).bitwiseAND(lit(0xFFL)) === lit(0xFFL)
-
-  /** Multicast test on a prefix struct column. */
-  def isMulticast(pfx: Column): Column =
-    when(pfx("version") === 4, isMulticastV4(pfx("ip_lo")))
-      .otherwise(isMulticastV6(pfx("ip_hi")))
-
-  /** First address of the subnet (network address), as (hi, lo) columns —
-    * the reference's `range_first` (src/ribfilter.rs:231-303). */
-  def rangeFirst(pfx: Column): (Column, Column) = {
-    val p = plen128(pfx)
-    (pfx("ip_hi").bitwiseAND(netMaskHi(p)), pfx("ip_lo").bitwiseAND(netMaskLo(p)))
-  }
-
-  /** Last address of the subnet (broadcast), as (hi, lo) columns —
-    * the reference's `range_last`. */
-  def rangeLast(pfx: Column): (Column, Column) = {
-    val p = plen128(pfx)
-    (pfx("ip_hi").bitwiseOR(hostMaskHi(p)), pfx("ip_lo").bitwiseOR(hostMaskLo(p)))
-  }
 
   /** Offset-encode a long so SIGNED ordering equals UNSIGNED ordering of the
     * raw bits (flip the sign bit). Use for deterministic NLRI sort order

@@ -110,9 +110,9 @@ object RibViews {
     * when the path is null OR empty — the size guard matters: a bare
     * `element_at(.., -1)` THROWS on an empty array under Spark 4's
     * default ANSI mode, and zero-length AS_PATHs are legal (iBGP-
-    * originated routes), so the bare form would crash a streaming query
-    * on a valid frame. Shared by the origin rollups, the origin-change
-    * analytics and the ST12 alert stream so the guard can't drift. */
+    * originated routes), so the bare form would crash a query on a valid
+    * frame. Shared by the origin rollups and the origin-change analytics
+    * so the guard can't drift. */
   def pathOrigin: Column =
     when(size(col("attrs.as_list")) > 0, element_at(col("attrs.as_list"), -1))
 
@@ -986,31 +986,12 @@ object RibViews {
     * them within rib partitions), while the full tri-state filter — too
     * complex to push — runs behind it. Semantically implied by the filter:
     * rows whose match could depend on a v4/v6 prefix key must lie inside
-    * the term's address range; all other key shapes pass through. */
-  def rangePruneHint(f: RouteFilter): Column = f.leastSubnet match {
-    case Some(graft.filter.FilterItem.V4(net, _)) =>
-      // ipv4mdt is NOT prunable by prefix range: its mdt_group host can
-      // satisfy a v4 term via the multi() majority even when the v4 prefix
-      // lies outside the term's range (FilterCompiler.matchItem mdt arm)
-      col("prefix").isNull || col("rib") === "ipv4mdt" ||
-        col("prefix.version") =!= 4 ||
-        (col("prefix.ip_lo") >= net.firstAddr && col("prefix.ip_lo") <= net.lastAddr)
-    case Some(graft.filter.FilterItem.V6(net, _)) if net.hi >= 0 =>
-      val maskHi = if (net.plen <= 0) 0L
-        else if (net.plen >= 64) -1L else -1L << (64 - net.plen)
-      val firstHi = net.hi & maskHi
-      val lastHi = net.hi | ~maskHi
-      // signed compare is unsigned-correct here: the range is non-negative
-      // and negative hi values (ff00::/8 space) sort below it either way
-      col("prefix").isNull || col("prefix.version") =!= 6 ||
-        (col("prefix.ip_hi") >= firstHi && col("prefix.ip_hi") <= lastHi)
-    case _ => lit(true)
-  }
-
-  /** Per-rib range-prune hint for the union scan: within one rib branch the
-    * prefix family and nullability are statically known, so the hint is
-    * either a plain pushable range conjunct or `true`. ipv4mdt is never
-    * v4-range-prunable (its mdt_group can satisfy the term alone). */
+    * the term's address range. Per rib branch of the union scan: within
+    * one rib the prefix family and nullability are statically known, so
+    * the hint is either a plain pushable range conjunct or `true`.
+    * ipv4mdt is never v4-range-prunable (its mdt_group host can satisfy a
+    * v4 term via the multi() majority even when the v4 prefix lies
+    * outside the term's range). */
   private def rangePruneHintFor(rib: String, f: RouteFilter): Column = {
     val v4Pfx = Set("ipv4u", "vpnv4u", "ipv4lu", "ipv4m", "vpnv4m", "fs4u")
     val v6Pfx = Set("ipv6u", "vpnv6u", "ipv6lu", "ipv6mdt", "vpnv6m")
@@ -1018,6 +999,8 @@ object RibViews {
       case Some(graft.filter.FilterItem.V4(net, _)) if v4Pfx(rib) =>
         col("prefix.ip_lo") >= net.firstAddr && col("prefix.ip_lo") <= net.lastAddr
       case Some(graft.filter.FilterItem.V6(net, _)) if net.hi >= 0 && v6Pfx(rib) =>
+        // signed compare is unsigned-correct here: the range is non-negative
+        // and negative hi values (ff00::/8 space) sort below it either way
         val maskHi = if (net.plen <= 0) 0L
           else if (net.plen >= 64) -1L else -1L << (64 - net.plen)
         col("prefix.ip_hi") >= (net.hi & maskHi) && col("prefix.ip_hi") <= (net.hi | ~maskHi)

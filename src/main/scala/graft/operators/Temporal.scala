@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.DecimalType
   * in-partition sort by (ts, side), and `last(value, ignoreNulls)` over
   * the preceding frame carries the newest earlier state onto each probe
   * row. Cost is a sort-window over |probes| + |states| — linear per key
-  * after the exchange, the same plan at 100 TB (and exchange-FREE over a
-  * ring_id-bucketed layout, BucketedLogSpec pattern). Strictness: probes
+  * after the exchange, the same plan at 100 TB. Strictness: probes
   * sort BEFORE states at equal ts, so same-instant states are excluded;
   * callers wanting ≤ pre-shift probe ts. States must be unique per
   * (key, ts) — pre-aggregate (max_by) if not: ambiguity is resolved

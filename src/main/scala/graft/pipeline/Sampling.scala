@@ -393,7 +393,7 @@ object Sampling {
     * filter would make the histogram branch's subtree structurally
     * different from the probe branch, breaking Catalyst's exchange reuse
     * between the two evaluations of the (possibly expensive) upstream —
-    * measured 2× on the composed curate3 chain at sf1.
+    * measured 2× on a composed curation chain at sf1.
     *
     * `materializeInput = true` localCheckpoints the scored input before
     * the two consumers (histogram + probe) read it — the gate evaluates

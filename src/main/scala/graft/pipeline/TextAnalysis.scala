@@ -177,9 +177,9 @@ object TextAnalysis {
     * CAUTION — do NOT `.where()` on the output column: predicate pushdown
     * substitutes the alias chain back into the filter (it has no
     * expensive-expression guard, unlike CollapseProject), reconstructing
-    * the quadratic split-inside-lambda form per row (measured 8× on
-    * q_pipeline_curate at sf0.1). To GATE on repetition use
-    * [[repetitionByDoc]] and join. */
+    * the quadratic split-inside-lambda form per row (measured 8× on a
+    * repetition-gated curation chain at sf0.1). To GATE on repetition,
+    * aggregate it per document and join back. */
   def withRepetition(df: DataFrame, textCol: String, k: Int = 3,
       out: String = "repetition_x1000"): DataFrame = {
     val sh = col("__rep_sh")
@@ -190,22 +190,6 @@ object TextAnalysis {
           greatest(size(sh), lit(1)).cast("double")).cast("long"))
       .drop("__rep_w", "__rep_sh")
   }
-
-  /** Per-document repetition as an aggregate: (id, repetition_x1000) via
-    * the exploded shingle pipeline — one exchange on id, map-side
-    * combinable, no array lambdas anywhere a filter could re-inline them.
-    * The join-back form for GATING on repetition (see the caution on
-    * [[withRepetition]]); same arithmetic, so the two forms agree. */
-  def repetitionByDoc(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3): DataFrame =
-    Dedup.explodedShingleHashes(df.select(col(idCol), col(textCol)),
-        idCol, textCol, k)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("__total"), countDistinct(col("h")).as("__distinct"))
-      .select(col("id"),
-        floor((col("__total") - col("__distinct")).cast("double") * 1000.0 /
-          greatest(col("__total"), lit(1)).cast("double")).cast("long")
-          .as("repetition_x1000"))
 
   /** Cross-document boilerplate score: the permille of a document's
     * DISTINCT k-shingles that are corpus-common — appearing in at least

@@ -2,14 +2,14 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Curate, Dedup, Packing, Sampling, Similarity, TextAnalysis}
+import graft.pipeline.{Dedup, Sampling, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators over `documents`/`embeddings`:
   * deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding
-  * cosine), ANN similarity search, text analysis, sampling, curation and
-  * packing. Hash-checkable ops carry DuckDB oracles; the
-  * LSH/float ops are rows-only here and pinned by ScalaTest recall checks
-  * against their exact counterparts (PipelineSpec).
+  * cosine), ANN similarity search, text analysis and sampling.
+  * Hash-checkable ops carry DuckDB oracles; the LSH/float ops are
+  * rows-only here and pinned by ScalaTest recall checks against their
+  * exact counterparts (PipelineSpec).
   */
 object PipelineQueries {
 
@@ -813,44 +813,6 @@ object PipelineQueries {
           col("n_shared_shingles"))
         .orderBy(col("doc_id"), col("eval_id"))
     }),
-    // Dataset release diff (round 16): v2 derived in-query (drop %7,
-    // append a marker to %5, add fresh ids for %11) so every status is
-    // planted; the oracle compares normalized text instead of the hash
-    "q_pipeline_dataset_diff" -> ((s, dir) => {
-      val v1 = docs(s, dir).select(col("doc_id"), col("text"))
-      val v2 = v1.where(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(v1.where(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat(lit("new doc "), col("text")).as("text")))
-      Curate.datasetDiff(v1, v2, "doc_id", "text")
-        .select(col("id").as("doc_id"), col("status"))
-        .orderBy(col("doc_id"))
-    }),
-    // Corpus data card (round 12): the per-(lang, source) release audit —
-    // volume, dup mass, quality-pass, label agreement, wrong-script — in
-    // one aggregation; runs over the script-planted docs so n_nonlatin is
-    // falsifiable. The oracle replays every per-doc metric and the rollup
-    "q_pipeline_datacard" -> ((s, dir) => {
-      val planted = docs(s, dir).select(col("doc_id"), col("lang"),
-        col("source"), plantedScriptText(col("doc_id"), col("text")).as("text"))
-      Curate.datacard(planted, "text")
-        .orderBy(col("lang"), col("source"))
-    }),
-    // k-anonymity suppression audit (round 18): every document marked with
-    // its (lang, n_chars-bucket) equivalence-class size and the k=5
-    // suppression verdict — the release-gate privacy check beside PII
-    // redaction. One tuple-keyed aggregation broadcast back; the oracle
-    // re-derives classes and flags independently.
-    "q_pipeline_kanon" -> ((s, dir) =>
-      Curate.kAnonymity(docs(s, dir),
-        Seq(col("lang"), call_function("div", col("n_chars"), lit(64L))),
-        k = 5L)
-        .select(col("doc_id"), col("class_size"),
-          col("suppress").cast("long").as("suppress_flag"))
-        .orderBy(col("doc_id"))),
     // Bloom-prefiltered decontamination (round 12): tiny 4096-bit table to
     // force real false positives through the prefilter — the exact verify
     // join must remove every one of them, so the oracle is the SAME exact
@@ -1011,46 +973,6 @@ object PipelineQueries {
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_kept"),
           col("cleaned_text"))
         .orderBy(col("doc_id"))
-    }),
-    // sequence packing: concatenate-then-chunk layout of the corpus token
-    // stream into 512-token context windows — per-doc global offsets via
-    // the distributed two-phase prefix sum (never a single-task window)
-    "q_pack_sequences" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      Packing.packSequences(d, "doc_id", "text", seqLen = 512)
-        .orderBy(col("id"))
-    }),
-    // chunk manifest rollup: per context window, how many docs feed it and
-    // the token fill — every chunk but the last must fill to exactly 512
-    "q_pack_manifest" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      val packed = Packing.packSequences(d, "doc_id", "text", seqLen = 512)
-      Packing.chunkManifest(packed, seqLen = 512)
-        .groupBy(col("chunk"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_tokens_in_chunk")).cast("long").as("n_toks"))
-        .orderBy(col("chunk"))
-    }),
-    // document-preserving packing (round 16): whole docs into
-    // 512-capacity bins, bounded overflow instead of truncation; per-doc
-    // assignment (bin, position) plus the per-bin fill audit both pinned
-    "q_pack_bins" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      Packing.packDocsNoSplit(d, "doc_id", "text", binCapacity = 512)
-        .select(col("id").as("doc_id"), col("n_tokens"), col("bin"),
-          col("pos_in_bin"))
-        .orderBy(col("doc_id"))
-    }),
-    "q_pack_bin_fill" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-      Packing.binFill(
-        Packing.packDocsNoSplit(d, "doc_id", "text", binCapacity = 512),
-        binCapacity = 512)
-        .orderBy(col("bin"))
     }),
     // char-ngram compressibility proxy (the zlib-ratio quality signal,
     // engine-portable): per-doc distinct-4-gram permille — scan-local,
@@ -1396,79 +1318,6 @@ object PipelineQueries {
       TextAnalysis.dedupLinesWithinDoc(planted, "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
         .orderBy(col("doc_id"))
-    }),
-
-    // The full curation chain as one plan: dedup → quality → repetition cap
-    // → redact → sample (planted PII so the redaction stage is falsifiable)
-    "q_pipeline_curate" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
-        plantedPii(col("doc_id"),
-          regexp_replace(trim(col("text")), "\\s+", " ")).as("text"))
-      Curate.curate(d, "doc_id", "text", maxRepetitionPermille = 50,
-        samplePermille = 600, salt = "cur")
-        .select(col("doc_id"), col("source"), col("repetition_x1000"),
-          col("n_red"), col("redacted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // curation with the model gate: heuristics first, classifier second,
-    // then the repetition cap — the full five-stage chain plus inference
-    "q_pipeline_curate2" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
-        plantedPii(col("doc_id"),
-          regexp_replace(trim(col("text")), "\\s+", " ")).as("text"))
-      Curate.curate(d, "doc_id", "text", maxRepetitionPermille = 50,
-        samplePermille = 600, salt = "cur",
-        classifier = Some((classifierWeights, 3000L)))
-        .select(col("doc_id"), col("source"), col("repetition_x1000"),
-          col("n_red"), col("redacted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // the round-12 "modern" chain: normalize → near-dup keepBest dedup →
-    // quality-percentile gate → proportional mixture, each stage's
-    // arithmetic already proven by its standalone oracle; the composed
-    // oracle replays all four in sequence
-    "q_pipeline_curate3" -> ((s, dir) =>
-      Curate.curateModern(docs(s, dir), "doc_id", "text", "source",
-        jaccardPermille = 600, shingleK = 3, qualityKeepPermille = 600,
-        mixTargets = Map("src0" -> 500, "src1" -> 300, "src2" -> 200),
-        salt = "cur3", materializeStages = true)
-        .orderBy(col("doc_id"))),
-    // curate4 (round 16, r14 ask #6): the modern chain with the Gopher
-    // repetition gate composed in FRONT — the gate reads the RAW planted
-    // text (normalization would erase the line/paragraph structure the
-    // signals measure), then normalize → near-dup election → quality
-    // percentile → mixture run on the gated corpus. Planted repetition
-    // docs make the gate falsifiable (natural fixture docs all pass)
-    "q_pipeline_curate4" -> ((s, dir) =>
-      Curate.curateModern(plantedRepetitionDocs(s, dir), "doc_id", "text",
-        "source", jaccardPermille = 600, shingleK = 3,
-        qualityKeepPermille = 600,
-        mixTargets = Map("src0" -> 500, "src1" -> 300, "src2" -> 200),
-        salt = "cur4", repetitionGate = true, materializeStages = true)
-        .orderBy(col("doc_id"))),
-    // the modern chain's attrition curve with the repetition gate's row
-    // visible (r14 ask #6's second half); oracle counts each CTE boundary
-    "q_pipeline_attrition4" -> ((s, dir) =>
-      Curate.attritionModern(plantedRepetitionDocs(s, dir), "doc_id",
-        "text", "source", jaccardPermille = 600, shingleK = 3,
-        qualityKeepPermille = 600,
-        mixTargets = Map("src0" -> 500, "src1" -> 300, "src2" -> 200),
-        salt = "cur4", repetitionGate = true)
-        .orderBy(col("stage_idx"))),
-
-    // pipeline observability: the attrition curve — per-stage survivor
-    // counts of the six-stage chain (a gate suddenly eating the corpus is
-    // the classic silent data bug); oracle re-counts every CTE boundary
-    "q_pipeline_attrition" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
-        plantedPii(col("doc_id"),
-          regexp_replace(trim(col("text")), "\\s+", " ")).as("text"))
-      Curate.attrition(d, "doc_id", "text", maxRepetitionPermille = 50,
-        samplePermille = 600, salt = "cur",
-        classifier = Some((classifierWeights, 3000L)))
-        .orderBy(col("stage_idx"))
     }))
 
   /** Planted 64-bucket weight vector for the classifier query (values
@@ -1687,12 +1536,10 @@ object PipelineQueries {
 
   /** Shared shingle CTEs: `shm` is the word-3-shingle multiset, `shd` the
     * set — mirrors Dedup.explodedShingleStrings (incl. the whole-text
-    * shingle for sub-3-word docs). `src` must expose (doc_id, text) — the
-    * curate4 oracle shingles the repetition-gated planted corpus instead
-    * of the raw table. */
-  private def shingleCtes(src: String): String =
-    s"""d AS (
-       |  SELECT doc_id, string_split($docNorm, ' ') AS words FROM $src
+    * shingle for sub-3-word docs). */
+  private val shingleCte: String =
+    s"""WITH d AS (
+       |  SELECT doc_id, string_split($docNorm, ' ') AS words FROM documents
        |), shm AS (
        |  SELECT doc_id, words[i]||' '||words[i+1]||' '||words[i+2] AS s
        |  FROM (SELECT doc_id, words, unnest(range(1, len(words)-1)) AS i
@@ -1703,8 +1550,6 @@ object PipelineQueries {
        |), shd AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, s FROM shm
        |)""".stripMargin
-
-  private val shingleCte = "WITH " + shingleCtes("documents")
 
   /** k-round unrolled farthest-point replica (the perceptron unroll
     * discipline): quantize once, then per round a distance CTE against
@@ -1767,80 +1612,78 @@ object PipelineQueries {
       |    AS t
       |  FROM documents""".stripMargin
 
-  /** Gopher repetition replica over an existing CTE `src`(doc_id, t):
-    * the full signal chain — trim+blank-drop segmentation, surplus
-    * sums, two-level top-gram election, threshold flags — with every
-    * CTE name prefixed by `x` so two instances (or an instance inside a
-    * larger chain, the curate4 oracle) cannot collide. Ends in
-    * `${x}rep`: one row per doc, same column order as
+  /** Gopher repetition replica over the [[repPlantsSql]] CTE `p`(doc_id,
+    * t): the full signal chain — trim+blank-drop segmentation, surplus
+    * sums, two-level top-gram election, threshold flags. Ends in `rep`:
+    * one row per doc, same column order as
     * [[TextAnalysis.repetitionSignals]]. Every SUM cast to BIGINT
     * (DuckDB SUM(BIGINT) → HUGEINT, the forbidden-type gate). */
-  private def gopherSignalsSql(src: String, x: String): String =
-    s""", ${x}lseg AS (
+  private val gopherSignalsSql: String =
+    s""", lseg AS (
        |  SELECT doc_id, trim(seg) AS seg FROM (
        |    SELECT doc_id, unnest(string_split(t, chr(10))) AS seg
-       |    FROM $src) q
+       |    FROM p) q
        |  WHERE trim(seg) <> ''
-       |), ${x}lg AS (
+       |), lg AS (
        |  SELECT doc_id, seg, COUNT(*) AS c, length(seg) AS len
-       |  FROM ${x}lseg GROUP BY 1, 2
-       |), ${x}lagg AS (
+       |  FROM lseg GROUP BY 1, 2
+       |), lagg AS (
        |  SELECT doc_id, SUM(c) AS n_lines,
        |    SUM(CASE WHEN c >= 2 THEN c - 1 ELSE 0 END) AS dup_line_n,
        |    SUM(c * len) AS line_chars,
        |    SUM(CASE WHEN c >= 2 THEN (c - 1) * len ELSE 0 END)
        |      AS dup_line_chars
-       |  FROM ${x}lg GROUP BY 1
-       |), ${x}pseg AS (
+       |  FROM lg GROUP BY 1
+       |), pseg AS (
        |  SELECT doc_id, trim(seg) AS seg FROM (
        |    SELECT doc_id, unnest(string_split(t, chr(10)||chr(10))) AS seg
-       |    FROM $src) q
+       |    FROM p) q
        |  WHERE trim(seg) <> ''
-       |), ${x}pg AS (
+       |), pg AS (
        |  SELECT doc_id, seg, COUNT(*) AS c, length(seg) AS len
-       |  FROM ${x}pseg GROUP BY 1, 2
-       |), ${x}pagg AS (
+       |  FROM pseg GROUP BY 1, 2
+       |), pagg AS (
        |  SELECT doc_id, SUM(c) AS n_paras,
        |    SUM(CASE WHEN c >= 2 THEN c - 1 ELSE 0 END) AS dup_para_n,
        |    SUM(c * len) AS para_chars,
        |    SUM(CASE WHEN c >= 2 THEN (c - 1) * len ELSE 0 END)
        |      AS dup_para_chars
-       |  FROM ${x}pg GROUP BY 1
-       |), ${x}w AS (
+       |  FROM pg GROUP BY 1
+       |), w AS (
        |  SELECT doc_id,
        |    list_filter(
        |      string_split(regexp_replace(trim(t), '\\s+', ' ', 'g'), ' '),
        |      y -> y <> '') AS ws
-       |  FROM $src
-       |), ${x}g AS (
+       |  FROM p
+       |), g AS (
        |  SELECT doc_id, 2 AS gn, ws[i]||' '||ws[i+1] AS s
        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
-       |        FROM ${x}w WHERE len(ws) >= 2) q
+       |        FROM w WHERE len(ws) >= 2) q
        |  UNION ALL
        |  SELECT doc_id, 3, ws[i]||' '||ws[i+1]||' '||ws[i+2]
        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws)-1)) AS i
-       |        FROM ${x}w WHERE len(ws) >= 3) q
+       |        FROM w WHERE len(ws) >= 3) q
        |  UNION ALL
        |  SELECT doc_id, 4, ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]
        |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws)-2)) AS i
-       |        FROM ${x}w WHERE len(ws) >= 4) q
-       |), ${x}gc AS (
-       |  SELECT doc_id, gn, s, COUNT(*) AS c FROM ${x}g GROUP BY 1, 2, 3
-       |), ${x}gmax AS (
-       |  SELECT doc_id, gn, MAX(c) AS mc FROM ${x}gc GROUP BY 1, 2
-       |), ${x}gtop AS (
+       |        FROM w WHERE len(ws) >= 4) q
+       |), gc AS (
+       |  SELECT doc_id, gn, s, COUNT(*) AS c FROM g GROUP BY 1, 2, 3
+       |), gmax AS (
+       |  SELECT doc_id, gn, MAX(c) AS mc FROM gc GROUP BY 1, 2
+       |), gtop AS (
        |  SELECT g2.doc_id, g2.gn, MAX(g2.c * length(g2.s)) AS mass
-       |  FROM ${x}gc g2 JOIN ${x}gmax m
+       |  FROM gc g2 JOIN gmax m
        |    ON g2.doc_id = m.doc_id AND g2.gn = m.gn AND g2.c = m.mc
        |  GROUP BY 1, 2
-       |), ${x}gp AS (
+       |), gp AS (
        |  SELECT doc_id,
        |    MAX(CASE WHEN gn = 2 THEN mass END) AS top2_chars,
        |    MAX(CASE WHEN gn = 3 THEN mass END) AS top3_chars,
        |    MAX(CASE WHEN gn = 4 THEN mass END) AS top4_chars
-       |  FROM ${x}gtop GROUP BY 1
-       |), ${x}base AS (SELECT doc_id, length(t) AS n_chars FROM $src),
-       |${x}j AS (
+       |  FROM gtop GROUP BY 1
+       |), base AS (SELECT doc_id, length(t) AS n_chars FROM p),
+       |j AS (
        |  SELECT b.doc_id, CAST(b.n_chars AS BIGINT) AS n_chars,
        |    CAST(COALESCE(l.n_lines, 0) AS BIGINT) AS n_lines,
        |    CAST(COALESCE(l.dup_line_n, 0) AS BIGINT) AS dup_line_n,
@@ -1853,11 +1696,11 @@ object PipelineQueries {
        |    CAST(COALESCE(gp2.top2_chars, 0) AS BIGINT) AS top2_chars,
        |    CAST(COALESCE(gp2.top3_chars, 0) AS BIGINT) AS top3_chars,
        |    CAST(COALESCE(gp2.top4_chars, 0) AS BIGINT) AS top4_chars
-       |  FROM ${x}base b
-       |  LEFT JOIN ${x}lagg l ON l.doc_id = b.doc_id
-       |  LEFT JOIN ${x}pagg a ON a.doc_id = b.doc_id
-       |  LEFT JOIN ${x}gp gp2 ON gp2.doc_id = b.doc_id
-       |), ${x}rep AS (
+       |  FROM base b
+       |  LEFT JOIN lagg l ON l.doc_id = b.doc_id
+       |  LEFT JOIN pagg a ON a.doc_id = b.doc_id
+       |  LEFT JOIN gp gp2 ON gp2.doc_id = b.doc_id
+       |), rep AS (
        |  SELECT *,
        |    dup_line_n * 1000 > n_lines * 300 AS dup_line_bad,
        |    dup_line_chars * 1000 > line_chars * 200 AS dup_line_chars_bad,
@@ -1873,7 +1716,7 @@ object PipelineQueries {
        |      OR top2_chars * 1000 > n_chars * 200
        |      OR top3_chars * 1000 > n_chars * 180
        |      OR top4_chars * 1000 > n_chars * 160) AS repetition_ok
-       |  FROM ${x}j
+       |  FROM j
        |)""".stripMargin
 
   /** Generated DuckDB replica of the arithmetic-hash MinHash pipeline:
@@ -2530,115 +2373,6 @@ object PipelineQueries {
        |)""".stripMargin
   }
 
-  /** The curateModern oracle's CTE chain — recursive near-dup closure +
-    * quality election, histogram gate, mixture rates — optionally headed
-    * by the Gopher repetition gate (plants + prefixed signal chain + the
-    * gated `g4` corpus), so curate3, curate4 and attrition4 share ONE
-    * body and cannot drift. Ends after `rates`; splice
-    * [[curateModernFinalSql]] (and anything else that needs the stage
-    * CTEs) behind it. */
-  private def curateModernOracleCtes(repGate: Boolean): String = {
-    val head =
-      if (!repGate) shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ")
-      else s"WITH RECURSIVE p AS (\n$repPlantsSql\n)" +
-        gopherSignalsSql("p", "rp_") +
-        """, g4 AS MATERIALIZED (
-          |  SELECT p.doc_id, d0.source, p.t AS text
-          |  FROM p JOIN documents d0 USING (doc_id)
-          |  JOIN rp_rep r ON r.doc_id = p.doc_id AND r.repetition_ok
-          |), """.stripMargin + shingleCtes("g4")
-    val nrmSrc = if (repGate) "g4" else "documents"
-    head + s""", sizes AS (
-         |  SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id
-         |), jp AS (
-         |  SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS inter
-         |  FROM shd l JOIN shd r ON l.s = r.s AND l.doc_id < r.doc_id
-         |  GROUP BY 1, 2
-         |), cand AS (
-         |  SELECT a, b FROM jp
-         |  JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-         |  WHERE inter*1000 >= (sa.n + sb.n - inter)*600
-         |), e AS MATERIALIZED (
-         |  SELECT a AS x, b AS y FROM cand
-         |  UNION SELECT b AS x, a AS y FROM cand
-         |), reach(x, y) AS (
-         |  SELECT x, x FROM e
-         |  UNION
-         |  SELECT e.x, r.y FROM e JOIN reach r ON r.x = e.y
-         |), comp AS (
-         |  SELECT x AS doc_id, MIN(y) AS cluster_id FROM reach GROUP BY x
-         |), nrm AS MATERIALIZED (
-         |  SELECT doc_id, source, $docNorm AS t FROM $nrmSrc
-         |), lab AS (
-         |  SELECT nrm.doc_id, coalesce(comp.cluster_id, nrm.doc_id) AS cl,
-         |    CAST(length(t) AS BIGINT) AS q
-         |  FROM nrm LEFT JOIN comp USING (doc_id)
-         |), keepers AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY cl
-         |      ORDER BY q DESC, doc_id) AS r FROM lab) t
-         |  WHERE r = 1
-         |), m AS (
-         |  SELECT nrm.doc_id, source,
-         |    len(string_split(t, ' ')) AS n_words,
-         |    length(t) AS n_chars,
-         |    len(regexp_extract_all(t, '[A-Za-z]')) AS alpha,
-         |    len(regexp_extract_all(t,'\\bthe\\b'))+len(regexp_extract_all(t,'\\band\\b'))
-         |      +len(regexp_extract_all(t,'\\bof\\b'))+len(regexp_extract_all(t,'\\bto\\b'))
-         |      +len(regexp_extract_all(t,'\\bin\\b'))
-         |      +len(regexp_extract_all(t,'\\bder\\b'))+len(regexp_extract_all(t,'\\bdie\\b'))
-         |      +len(regexp_extract_all(t,'\\bund\\b'))+len(regexp_extract_all(t,'\\bdas\\b'))
-         |      +len(regexp_extract_all(t,'\\bist\\b'))
-         |      +len(regexp_extract_all(t,'\\ble\\b'))+len(regexp_extract_all(t,'\\bla\\b'))
-         |      +len(regexp_extract_all(t,'\\bet\\b'))+len(regexp_extract_all(t,'\\bles\\b'))
-         |      +len(regexp_extract_all(t,'\\bdes\\b'))
-         |      +len(regexp_extract_all(t,'\\bel\\b'))+len(regexp_extract_all(t,'\\bla\\b'))
-         |      +len(regexp_extract_all(t,'\\blos\\b'))+len(regexp_extract_all(t,'\\bque\\b'))
-         |      +len(regexp_extract_all(t,'\\bde\\b')) AS stop
-         |  FROM nrm JOIN keepers USING (doc_id)
-         |), scd AS (
-         |  SELECT doc_id, source, CAST(n_words AS BIGINT) AS n_words,
-         |    CAST(FLOOR(alpha*1000.0/greatest(n_chars,1))
-         |      + FLOOR(stop*1000.0/greatest(n_words,1)) AS BIGINT) AS score
-         |  FROM m
-         |), h AS (
-         |  SELECT score AS s2, COUNT(*) AS c FROM scd GROUP BY 1
-         |), cum AS (
-         |  SELECT s2, SUM(c) OVER (ORDER BY s2 DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         |    SUM(c) OVER () AS n
-         |  FROM h
-         |), thr AS (
-         |  SELECT MAX(CASE WHEN cum >= greatest(1, (n*600) // 1000) THEN s2 END) AS t2
-         |  FROM cum
-         |), gate AS (
-         |  SELECT * FROM scd WHERE score >= (SELECT t2 FROM thr)
-         |), tgt AS (
-         |  SELECT * FROM (VALUES ('src0', 500), ('src1', 300), ('src2', 200))
-         |    t(source, p)
-         |), tot AS (
-         |  SELECT source, CAST(SUM(n_words) AS BIGINT) AS total
-         |  FROM gate GROUP BY 1
-         |), live AS (
-         |  SELECT p, total FROM tgt JOIN tot USING (source)
-         |  WHERE p > 0 AND total > 0
-         |), rates AS (
-         |  SELECT ti.source,
-         |    CASE WHEN ti.total IS NULL OR ti.total <= 0 THEN 0
-         |      ELSE (SELECT MIN(ti.p * lj.total * 1000 // (lj.p * ti.total))
-         |            FROM live lj) END AS rate
-         |  FROM (SELECT tgt.source, tgt.p, tot.total
-         |        FROM tgt LEFT JOIN tot USING (source)) ti
-         |)""".stripMargin
-  }
-
-  /** The chain's final projection: histogram-gated rows joined to their
-    * source's mixture rate, sampled under `salt`. */
-  private def curateModernFinalSql(salt: String): String =
-    s"""SELECT g.doc_id, g.source, g.score, g.n_words
-       |FROM gate g JOIN rates USING (source)
-       |WHERE ${samplePermilleSql(salt, "doc_id")} < rate""".stripMargin
-
   /** One batch-perceptron epoch as SQL: score each doc with the previous
     * epoch's weights, collect misclassified (y·s ≤ 0 — zero counts as
     * wrong, the cold-start rule), sum `y·cnt` per bucket over them, add
@@ -2687,139 +2421,6 @@ object PipelineQueries {
        |)""".stripMargin
 
   def oracleSql: Map[String, String] = staticOracleSql ++ centroidOracleEntries
-
-
-  /** The curation-chain oracle; `classifierThr` inserts the hashed-linear
-    * classifier stage between the heuristic quality gate (q0) and the
-    * repetition cap — the same stage order as Curate.curate. */
-  private def curateOracleSql(classifierThr: Option[Long]): String = {
-    val gateCtes = classifierThr match {
-      case Some(thr) =>
-        s""", cw AS (
-           |  SELECT doc_id, lower(w) AS w
-           |  FROM (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM q0) x
-           |  WHERE w <> ''
-           |), cs AS (
-           |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nw,
-           |    CAST(SUM(([${classifierWeights.mkString(", ")}])
-           |      [(${sqlCharFold("w", 31L, 1073741789L)} % 64) + 1]) AS BIGINT) AS raw
-           |  FROM cw GROUP BY doc_id
-           |), q AS (
-           |  SELECT q0.doc_id, q0.source, q0.t FROM q0
-           |  JOIN cs USING (doc_id)
-           |  WHERE (cs.raw * 1000) // cs.nw >= $thr
-           |)""".stripMargin
-      case None => ", q AS (SELECT doc_id, source, t FROM q0)"
-    }
-    curateCtes(gateCtes) +
-      s"""
-         |SELECT doc_id, source, r AS repetition_x1000,
-         |  CAST(len(regexp_extract_all(redacted, '<URL>|<EMAIL>|<IP>')) AS BIGINT) AS n_red,
-         |  redacted
-         |FROM red
-         |WHERE ${samplePermilleSql("cur", "doc_id")} < 600
-         |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Per-stage survivor counts over the same CTE chain (q_pipeline_
-    * attrition): stage indices follow Curate.stages' order WITH the
-    * classifier stage present. */
-  private def attritionOracleSql(classifierThr: Long): String = {
-    val gateCtes =
-      s""", cw AS (
-         |  SELECT doc_id, lower(w) AS w
-         |  FROM (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM q0) x
-         |  WHERE w <> ''
-         |), cs AS (
-         |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nw,
-         |    CAST(SUM(([${classifierWeights.mkString(", ")}])
-         |      [(${sqlCharFold("w", 31L, 1073741789L)} % 64) + 1]) AS BIGINT) AS raw
-         |  FROM cw GROUP BY doc_id
-         |), q AS (
-         |  SELECT q0.doc_id, q0.source, q0.t FROM q0
-         |  JOIN cs USING (doc_id)
-         |  WHERE (cs.raw * 1000) // cs.nw >= $classifierThr
-         |)""".stripMargin
-    curateCtes(gateCtes) +
-      s""", smp AS (
-         |  SELECT doc_id FROM red
-         |  WHERE ${samplePermilleSql("cur", "doc_id")} < 600
-         |)
-         |SELECT * FROM (
-         |  SELECT CAST(0 AS BIGINT) AS stage_idx, 'input' AS stage, COUNT(*) AS n_docs FROM t0
-         |  UNION ALL SELECT 1, 'deduped', COUNT(*) FROM ded
-         |  UNION ALL SELECT 2, 'quality', COUNT(*) FROM q0
-         |  UNION ALL SELECT 3, 'classifier', COUNT(*) FROM q
-         |  UNION ALL SELECT 4, 'repetition', COUNT(*) FROM kept
-         |  UNION ALL SELECT 5, 'sampled', COUNT(*) FROM smp
-         |) t ORDER BY stage_idx""".stripMargin
-  }
-
-  private def curateCtes(gateCtes: String): String =
-    s"""WITH t0 AS (
-         |  SELECT doc_id, source,
-         |    CASE WHEN doc_id % 5 = 0 THEN $docNorm
-         |      || ' contact u' || CAST(doc_id AS VARCHAR)
-         |      || '@ex' || CAST(doc_id % 7 AS VARCHAR)
-         |      || '.com or http://h' || CAST(doc_id % 9 AS VARCHAR)
-         |      || '.example/p' || CAST(doc_id AS VARCHAR)
-         |      || ' at 10.' || CAST(doc_id % 200 AS VARCHAR) || '.0.1'
-         |    ELSE $docNorm END AS t
-         |  FROM documents
-         |), ded AS (
-         |  SELECT doc_id, source, t FROM (
-         |    SELECT doc_id, source, t,
-         |      MIN(doc_id) OVER (PARTITION BY lower(t)) AS keep_id
-         |    FROM t0) x
-         |  WHERE keep_id = doc_id
-         |), m AS (
-         |  SELECT doc_id, source, t,
-         |    len(string_split(t, ' ')) AS n_words,
-         |    length(t) AS n_chars,
-         |    len(regexp_extract_all(t, '[A-Za-z]')) AS alpha,
-         |    len(regexp_extract_all(t,'\\bthe\\b'))+len(regexp_extract_all(t,'\\band\\b'))
-         |      +len(regexp_extract_all(t,'\\bof\\b'))+len(regexp_extract_all(t,'\\bto\\b'))
-         |      +len(regexp_extract_all(t,'\\bin\\b'))
-         |      +len(regexp_extract_all(t,'\\bder\\b'))+len(regexp_extract_all(t,'\\bdie\\b'))
-         |      +len(regexp_extract_all(t,'\\bund\\b'))+len(regexp_extract_all(t,'\\bdas\\b'))
-         |      +len(regexp_extract_all(t,'\\bist\\b'))
-         |      +len(regexp_extract_all(t,'\\ble\\b'))+len(regexp_extract_all(t,'\\bla\\b'))
-         |      +len(regexp_extract_all(t,'\\bet\\b'))+len(regexp_extract_all(t,'\\bles\\b'))
-         |      +len(regexp_extract_all(t,'\\bdes\\b'))
-         |      +len(regexp_extract_all(t,'\\bel\\b'))+len(regexp_extract_all(t,'\\bla\\b'))
-         |      +len(regexp_extract_all(t,'\\blos\\b'))+len(regexp_extract_all(t,'\\bque\\b'))
-         |      +len(regexp_extract_all(t,'\\bde\\b')) AS stop
-         |  FROM ded
-         |), q0 AS (
-         |  SELECT doc_id, source, t FROM m
-         |  WHERE n_words >= 10
-         |    AND CAST(FLOOR(stop*1000.0/greatest(n_words,1)) AS BIGINT) >= 20
-         |    AND CAST(FLOOR(alpha*1000.0/greatest(n_chars,1)) AS BIGINT) >= 600
-         |)$gateCtes, dw AS (
-         |  SELECT doc_id, source, t, string_split(t, ' ') AS words FROM q
-         |), shm AS (
-         |  SELECT doc_id, words[i]||' '||words[i+1]||' '||words[i+2] AS s
-         |  FROM (SELECT doc_id, words, unnest(range(1, len(words)-1)) AS i
-         |        FROM dw WHERE len(words) >= 3) x
-         |  UNION ALL
-         |  SELECT doc_id, array_to_string(words, ' ') AS s FROM dw WHERE len(words) < 3
-         |), rep AS (
-         |  SELECT doc_id,
-         |    CAST(FLOOR((COUNT(*) - COUNT(DISTINCT s)) * 1000.0 / COUNT(*)) AS BIGINT) AS r
-         |  FROM shm GROUP BY doc_id
-         |), kept AS (
-         |  SELECT dw.doc_id, dw.source, dw.t, rep.r FROM dw
-         |  JOIN rep ON rep.doc_id = dw.doc_id
-         |  WHERE rep.r <= 50
-         |), red AS (
-         |  SELECT doc_id, source, r,
-         |    regexp_replace(regexp_replace(regexp_replace(t,
-         |      'https?://[^\\s]+', '<URL>', 'g'),
-         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-         |      '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b', '<IP>', 'g')
-         |      AS redacted
-         |  FROM kept
-         |)""".stripMargin
 
   private def staticOracleSql: Map[String, String] = Map(
     "q_dedup_exact" ->
@@ -3953,81 +3554,6 @@ object PipelineQueries {
          |  COALESCE(kept.cleaned_text, '') AS cleaned_text
          |FROM w LEFT JOIN kept USING (doc_id)
          |ORDER BY w.doc_id""".stripMargin,
-    // global prefix sum replicated as a plain window cumsum (the oracle can
-    // afford the single-task plan the engine avoids); integer-div chunks
-    "q_pack_sequences" ->
-      s"""WITH t AS (
-         |  SELECT doc_id AS id,
-         |    CAST(len(string_split($docNorm, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |), c AS (
-         |  SELECT id, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      - n_tokens AS BIGINT) AS start_offset
-         |  FROM t
-         |)
-         |SELECT id, n_tokens, start_offset,
-         |  start_offset // 512 AS first_chunk,
-         |  (start_offset + n_tokens - 1) // 512 AS last_chunk,
-         |  (start_offset + n_tokens - 1) // 512 - start_offset // 512 + 1
-         |    AS n_chunks
-         |FROM c ORDER BY id""".stripMargin,
-    // no-split packing replica: same cumsum, bin = start // capacity,
-    // within-bin position by id; the fill audit re-aggregates per bin
-    "q_pack_bins" ->
-      s"""WITH t AS (
-         |  SELECT doc_id AS id,
-         |    CAST(len(string_split($docNorm, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |), c AS (
-         |  SELECT id, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      - n_tokens AS BIGINT) AS so
-         |  FROM t
-         |)
-         |SELECT id AS doc_id, n_tokens, so // 512 AS bin,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY so // 512 ORDER BY id) - 1
-         |    AS BIGINT) AS pos_in_bin
-         |FROM c ORDER BY 1""".stripMargin,
-    "q_pack_bin_fill" ->
-      s"""WITH t AS (
-         |  SELECT doc_id AS id,
-         |    CAST(len(string_split($docNorm, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |), c AS (
-         |  SELECT id, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      - n_tokens AS BIGINT) AS so
-         |  FROM t
-         |)
-         |SELECT so // 512 AS bin, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS fill,
-         |  SUM(n_tokens) > 512 AS overflow
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_pack_manifest" ->
-      s"""WITH t AS (
-         |  SELECT doc_id AS id,
-         |    CAST(len(string_split($docNorm, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |), c AS (
-         |  SELECT id, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      - n_tokens AS BIGINT) AS start_offset
-         |  FROM t
-         |), spans AS (
-         |  SELECT id, n_tokens, start_offset,
-         |    unnest(generate_series(start_offset // 512,
-         |      (start_offset + n_tokens - 1) // 512)) AS chunk
-         |  FROM c WHERE n_tokens > 0
-         |)
-         |SELECT chunk, COUNT(*) AS n_docs,
-         |  CAST(SUM(least((chunk + 1) * 512, start_offset + n_tokens)
-         |    - greatest(chunk * 512, start_offset)) AS BIGINT) AS n_toks
-         |FROM spans GROUP BY chunk ORDER BY chunk""".stripMargin,
     "q_sample_stratified" ->
       s"""SELECT doc_id, source FROM documents
          |WHERE ${samplePermilleSql("mix1", "doc_id")}
@@ -4595,30 +4121,6 @@ object PipelineQueries {
          |  AND e.doc_id % 97 = 0 AND t.doc_id % 97 <> 0
          |GROUP BY 1, 2 HAVING COUNT(DISTINCT t.s) >= 2
          |ORDER BY 1, 2""".stripMargin,
-    // diff replay: v2 derived by the same arithmetic; content equality
-    // on the NORMALIZED STRING where the engine compares its xxhash64
-    // (the q_dedup_exact identity posture)
-    "q_pipeline_dataset_diff" ->
-      s"""WITH v1 AS (
-         |  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
-         |  FROM documents
-         |), v2 AS (
-         |  SELECT doc_id, regexp_replace(lower(trim(
-         |      CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END
-         |    )), '\\s+', ' ', 'g') AS nt
-         |  FROM documents WHERE doc_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000,
-         |    regexp_replace(lower(trim('new doc ' || text)), '\\s+', ' ', 'g')
-         |  FROM documents WHERE doc_id % 11 = 0
-         |)
-         |SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
-         |  CASE WHEN v1.doc_id IS NULL THEN 'added'
-         |       WHEN v2.doc_id IS NULL THEN 'removed'
-         |       WHEN v1.nt = v2.nt THEN 'unchanged'
-         |       ELSE 'changed' END AS status
-         |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-         |ORDER BY 1""".stripMargin,
     // the Bloom prefilter admits a superset and the verify join removes it:
     // the exact-decontamination SQL IS the oracle for the bloom path
     "q_decontam_bloom" ->
@@ -4849,7 +4351,7 @@ object PipelineQueries {
     // max(struct(c, mass)) lexicographic rule); every SUM cast to
     // BIGINT (DuckDB SUM(BIGINT) -> HUGEINT, the forbidden-type gate)
     "q_text_gopher_rep" ->
-      (s"WITH p AS (\n$repPlantsSql\n)" + gopherSignalsSql("p", "") +
+      (s"WITH p AS (\n$repPlantsSql\n)" + gopherSignalsSql +
         "\nSELECT * FROM rep ORDER BY doc_id"),
     // soundness is checked by a structurally different algorithm
     "q_text_phrases" ->
@@ -4877,21 +4379,6 @@ object PipelineQueries {
          |SELECT p AS phrase, CAST(c AS BIGINT) AS n FROM g
          |WHERE c * 10000 >= (SELECT n FROM tot) * 5
          |ORDER BY phrase""".stripMargin,
-    // k-anonymity replica: equivalence classes over the (lang,
-    // n_chars-bucket) quasi tuple re-counted independently, k=5 verdict
-    // per doc. n_chars is non-negative so `//` vs `div` agree.
-    "q_pipeline_kanon" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, lang, n_chars // 64 AS bucket FROM documents
-        |), classes AS (
-        |  SELECT lang, bucket, CAST(COUNT(*) AS BIGINT) AS class_size
-        |  FROM keyed GROUP BY 1, 2
-        |)
-        |SELECT k.doc_id, c.class_size,
-        |  CAST(CASE WHEN c.class_size < 5 THEN 1 ELSE 0 END AS BIGINT)
-        |    AS suppress_flag
-        |FROM keyed k JOIN classes c USING (lang, bucket)
-        |ORDER BY doc_id""".stripMargin,
     // Histogram-threshold replica of Sampling.keepTopByScore: same score
     // arithmetic as q_text_quality, then histogram → desc running sum →
     // k = max(1, n·250 div 1000) → largest score with cum ≥ k → the ≥ cut
@@ -4937,70 +4424,6 @@ object PipelineQueries {
          |FROM (SELECT unnest(string_split($docNorm, ' ')) AS w FROM documents) t
          |GROUP BY 1 ORDER BY n DESC, word LIMIT 20""".stripMargin,
     "q_text_script" -> scriptOracleSql,
-    // every per-doc metric (fingerprint norm, counts, quality gate, langid
-    // election, dominant script) replayed, then the one rollup; the stop
-    // and langid fragments mirror q_text_quality / q_text_langid verbatim
-    "q_pipeline_datacard" ->
-      s"""WITH planted AS (
-         |  SELECT doc_id, lang, source, $plantedScriptTextSql AS text
-         |  FROM documents
-         |), m AS (
-         |  SELECT lang, source,
-         |    lower($docNorm) AS norm,
-         |    CAST(len(string_split($docNorm, ' ')) AS BIGINT) AS n_words,
-         |    CAST(length(text) AS BIGINT) AS n_chars,
-         |    len(regexp_extract_all(text, '[A-Za-z]')) AS alpha,
-         |    len(regexp_extract_all(text,'\\bthe\\b'))+len(regexp_extract_all(text,'\\band\\b'))
-         |      +len(regexp_extract_all(text,'\\bof\\b'))+len(regexp_extract_all(text,'\\bto\\b'))
-         |      +len(regexp_extract_all(text,'\\bin\\b'))
-         |      +len(regexp_extract_all(text,'\\bder\\b'))+len(regexp_extract_all(text,'\\bdie\\b'))
-         |      +len(regexp_extract_all(text,'\\bund\\b'))+len(regexp_extract_all(text,'\\bdas\\b'))
-         |      +len(regexp_extract_all(text,'\\bist\\b'))
-         |      +len(regexp_extract_all(text,'\\ble\\b'))+len(regexp_extract_all(text,'\\bla\\b'))
-         |      +len(regexp_extract_all(text,'\\bet\\b'))+len(regexp_extract_all(text,'\\bles\\b'))
-         |      +len(regexp_extract_all(text,'\\bdes\\b'))
-         |      +len(regexp_extract_all(text,'\\bel\\b'))+len(regexp_extract_all(text,'\\bla\\b'))
-         |      +len(regexp_extract_all(text,'\\blos\\b'))+len(regexp_extract_all(text,'\\bque\\b'))
-         |      +len(regexp_extract_all(text,'\\bde\\b')) AS stop,
-         |    len(regexp_extract_all(text,'\\bthe\\b'))+len(regexp_extract_all(text,'\\band\\b'))
-         |      +len(regexp_extract_all(text,'\\bof\\b'))+len(regexp_extract_all(text,'\\bto\\b'))
-         |      +len(regexp_extract_all(text,'\\bin\\b')) AS s_en,
-         |    len(regexp_extract_all(text,'\\bder\\b'))+len(regexp_extract_all(text,'\\bdie\\b'))
-         |      +len(regexp_extract_all(text,'\\bund\\b'))+len(regexp_extract_all(text,'\\bdas\\b'))
-         |      +len(regexp_extract_all(text,'\\bist\\b')) AS s_de,
-         |    len(regexp_extract_all(text,'\\ble\\b'))+len(regexp_extract_all(text,'\\bla\\b'))
-         |      +len(regexp_extract_all(text,'\\bet\\b'))+len(regexp_extract_all(text,'\\bles\\b'))
-         |      +len(regexp_extract_all(text,'\\bdes\\b')) AS s_fr,
-         |    len(regexp_extract_all(text,'\\bel\\b'))+len(regexp_extract_all(text,'\\bla\\b'))
-         |      +len(regexp_extract_all(text,'\\blos\\b'))+len(regexp_extract_all(text,'\\bque\\b'))
-         |      +len(regexp_extract_all(text,'\\bde\\b')) AS s_es,
-         |    $scriptCountsSqlCols
-         |  FROM planted
-         |), q AS (
-         |  SELECT lang, source, norm, n_words, n_chars,
-         |    CASE WHEN n_words >= 10
-         |      AND CAST(FLOOR(stop*1000.0/greatest(n_words,1)) AS BIGINT) >= 20
-         |      AND CAST(FLOOR(alpha*1000.0/greatest(n_chars,1)) AS BIGINT) >= 600
-         |      THEN 1 ELSE 0 END AS keep,
-         |    CASE WHEN (CASE
-         |        WHEN s_en=0 AND s_de=0 AND s_fr=0 AND s_es=0 THEN 'und'
-         |        WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es THEN 'fr'
-         |        WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-         |        WHEN s_en >= s_de THEN 'en'
-         |        ELSE 'de' END) = lang THEN 1 ELSE 0 END AS agree,
-         |    CASE WHEN (CASE
-         |      $scriptDomSqlCase
-         |      ELSE 'none' END) <> 'latin' THEN 1 ELSE 0 END AS nonlatin
-         |  FROM m
-         |)
-         |SELECT lang, source, COUNT(*) AS n_docs,
-         |  COUNT(DISTINCT norm) AS n_unique,
-         |  CAST(SUM(n_words) AS BIGINT) AS total_words,
-         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         |  CAST(SUM(keep) AS BIGINT) AS n_quality_keep,
-         |  CAST(SUM(agree) AS BIGINT) AS n_lang_agree,
-         |  CAST(SUM(nonlatin) AS BIGINT) AS n_nonlatin
-         |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q_text_tfidf" ->
       s"""WITH w AS (
          |  SELECT doc_id, lower(w) AS word FROM (
@@ -5096,44 +4519,5 @@ object PipelineQueries {
       s"""SELECT lang, COUNT(*) AS n_docs,
          |  CAST(SUM(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))) AS BIGINT) AS total_tokens,
          |  CAST(SUM(len(string_split($docNorm, ' '))) AS BIGINT) AS total_words
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // Stage-by-stage replica of Curate.curate over the planted-PII corpus:
-    // dedup window on lower(norm text) ≡ the engine's fingerprint hash
-    // (the established hash≡string equivalence), the q_text_quality metric
-    // arithmetic, the q_text_repetition shingle arithmetic, the q_text_redact
-    // regex chain, the q_sample_stratified hash predicate — each fragment
-    // individually proven by its standalone oracle.
-    // Composed replica of Curate.curateModern: the recursive-CTE closure +
-    // quality election (q_dedup_keepbest), the histogram gate
-    // (q_text_quality_gate), and the mixture derivation (q_sample_mixture),
-    // chained over the normalized text in the chain's stage order
-    "q_pipeline_curate3" ->
-      (curateModernOracleCtes(repGate = false) + "\n" +
-        curateModernFinalSql("cur3") + "\nORDER BY doc_id"),
-    // curate4 (round 16, r14 ask #6): the same modern chain with the
-    // Gopher repetition gate FIRST — on the RAW planted text, before the
-    // shingle CTEs see the corpus (normalization would erase the line/
-    // paragraph structure the signals read)
-    "q_pipeline_curate4" ->
-      (curateModernOracleCtes(repGate = true) + "\n" +
-        curateModernFinalSql("cur4") + "\nORDER BY doc_id"),
-    // modern-chain attrition: survivor counts at each oracle CTE
-    // boundary — independently derived from the Spark stage frames
-    "q_pipeline_attrition4" ->
-      (curateModernOracleCtes(repGate = true) +
-        "\n, fin AS (\n" + curateModernFinalSql("cur4") + "\n)\n" +
-        """SELECT CAST(stage_idx AS BIGINT) AS stage_idx, stage, n_docs
-          |FROM (
-          |  SELECT 0 AS stage_idx, 'input' AS stage,
-          |    (SELECT COUNT(*) FROM documents) AS n_docs
-          |  UNION ALL SELECT 1, 'repetition', (SELECT COUNT(*) FROM g4)
-          |  UNION ALL SELECT 2, 'neardup', (SELECT COUNT(*) FROM keepers)
-          |  UNION ALL SELECT 3, 'quality', (SELECT COUNT(*) FROM gate)
-          |  UNION ALL SELECT 4, 'mixture', (SELECT COUNT(*) FROM fin)) t
-          |ORDER BY 1""".stripMargin),
-    "q_pipeline_curate" -> curateOracleSql(None),
-    // same chain with the model gate between heuristics and the
-    // repetition cap (mirrors Curate.curate stage order)
-    "q_pipeline_curate2" -> curateOracleSql(Some(3000L)),
-    "q_pipeline_attrition" -> attritionOracleSql(3000L))
+         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)
 }

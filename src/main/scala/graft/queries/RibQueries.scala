@@ -394,9 +394,9 @@ object RibQueries {
         .orderBy(col("etype"))
     }),
 
-    // RFC-2439 flap damping, batch twin (round 13): replay the event log
-    // per ring through the SAME flapStep recurrence the ST14 stream uses
-    // (penalty halvings by elapsed event time, suppress/reuse crossings)
+    // RFC-2439 flap damping (round 13): replay the event log per ring
+    // through Feed's flapStep recurrence (penalty halvings by elapsed
+    // event time, suppress/reuse crossings)
     // — integer halvings are engine-portable, so the DuckDB oracle
     // re-derives every transition with a recursive CTE
     "q_rib_flap_damp" -> ((s, dir) => {

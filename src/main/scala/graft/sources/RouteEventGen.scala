@@ -80,37 +80,6 @@ object RouteEventGen {
     s"$snapshotRoot/${java.lang.Integer.toHexString(sfDir.hashCode)}"
   }
 
-  /** Bucketed variant of the event log: pre-hash-partitioned by `ring_id`
-    * into `nBuckets` files at write time (`bucketBy` + in-bucket sort by
-    * (ring_id, ts)), so every ring-keyed window/aggregation/join scans with
-    * its HashClusteredDistribution ALREADY satisfied — history views plan
-    * with NO shuffle exchange at all (spec-proven, BucketedLogSpec). This
-    * is the cluster deployment layout SCALE.md names for the steady-state
-    * log: at 100 TB the one-time bucketed write amortizes over every
-    * subsequent history query, which otherwise each pay a full exchange of
-    * the scanned slice. */
-  private val bucketedSource = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def bucketedRouteEvents(spark: SparkSession, sfDir: String,
-      table: String = "route_events_bucketed", nBuckets: Int = 8): DataFrame = {
-    // Guard against silent stale-table reuse: `tableExists` alone would hand
-    // back a table built from a DIFFERENT source dir (e.g. another scale
-    // factor) under the same name — correct-looking plans over wrong data.
-    val prev = bucketedSource.putIfAbsent(table, sfDir)
-    require(prev == null || prev == sfDir,
-      s"bucketed table '$table' was built from '$prev' but '$sfDir' was " +
-        "requested — pass a distinct table name per source dir")
-    if (!spark.catalog.tableExists(table)) {
-      // dir keyed by (sfDir, table): two table names over one source dir
-      // must not clobber each other's files
-      val dir = s"$snapshotRoot/bucketed_${java.lang.Integer.toHexString(sfDir.hashCode)}_$table"
-      fromEvents(Tables(spark, sfDir, "events"))
-        .write.bucketBy(nBuckets, "ring_id").sortBy("ring_id", "ts")
-        .option("path", dir).mode("overwrite").saveAsTable(table)
-    }
-    spark.table(table)
-  }
-
   val l2Type = "struct<site:int,offset:int,range:int>"
   val pfxType = "struct<version:tinyint,ip_hi:bigint,ip_lo:bigint,prefix_len:int>"
   val rdType = "struct<rdh:bigint,rdl:bigint>"

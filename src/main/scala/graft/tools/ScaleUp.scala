@@ -9,15 +9,18 @@ import org.apache.spark.sql.functions._
   * SCALE.md records the sf0.1→sf1 per-family scaling exponents).
   *
   * Each fact table is replicated `factor`× with consistently shifted
-  * keys, so referential joins keep their per-copy fan-in and the copies
-  * read as new entities, not as a 10-deep duplication of the old ones:
+  * keys, so referential joins keep their per-copy fan-in:
   *
   *   - customer/supplier/part/orders/lineitem: key shift `i * SHIFT`
   *     applied to both sides of every FK (orderkey↔lineitem,
   *     custkey↔orders, partkey/suppkey↔lineitem);
-  *   - events: event_id/user_id shift + `i` seconds of ts offset — the
-  *     derived BGP sessions/prefixes scale with the copy index instead of
-  *     colliding at identical timestamps;
+  *   - events: event_id/user_id shift + `i` seconds of ts offset, so no
+  *     two copies collide at identical timestamps. The copies do NOT add
+  *     route keys: `RouteEventGen.fromEvents` derives a v4 key from
+  *     `uid % 256` and `slot % 16` (at most 5,120 ipv4u keys, which sf0.1
+  *     already nearly fills), so the shifted user ids land on the same
+  *     keys and each copy only deepens every key's history. A scale point
+  *     with more routes needs shifted key spaces (ROADMAP item 9);
   *   - documents: every WORD gets a per-copy suffix (`w` → `w3`), which
   *     keeps each copy's internal near-duplicate structure intact while
   *     making copies mutually disjoint — scaling a dedup corpus by

@@ -60,12 +60,7 @@ class SparkEntrySpec extends AnyFunSuite {
       "q_dedup_simhash", "q_dedup_simhash_arith", "q_dedup_soft",
       "q_dedup_span_removal", "q_dedup_spans", "q_dedup_url",
       "q_dedup_winnow", "q_dedup_winnow_spans_arith", "q_embed_binary",
-      "q_embed_int8", "q_pack_bin_fill", "q_pack_bins",
-      "q_pack_manifest", "q_pack_sequences", "q_pipeline_attrition",
-      "q_pipeline_attrition4", "q_pipeline_curate",
-      "q_pipeline_curate2", "q_pipeline_curate3", "q_pipeline_curate4",
-      "q_pipeline_datacard", "q_pipeline_dataset_diff",
-      "q_pipeline_kanon", "q_sample_budget", "q_sample_doremi",
+      "q_embed_int8", "q_sample_budget", "q_sample_doremi",
       "q_sample_dsir", "q_sample_epochs", "q_sample_exact_global",
       "q_sample_exact_k", "q_sample_group_split", "q_sample_mixture",
       "q_sample_shuffle", "q_sample_split", "q_sample_stratified",
@@ -90,7 +85,7 @@ class SparkEntrySpec extends AnyFunSuite {
       "q_dedup_semantic", "q_embed_cluster_sample", "q_embed_clusters",
       "q_sim_ivf", "q_sim_ivf_auto", "q_sim_pq", "q_sim_recall",
       "q_sim_recall_pq")
-    assert(rib.size == 81 && pipeline.size == 98 && trained.size == 8)
+    assert(rib.size == 81 && pipeline.size == 85 && trained.size == 8)
     val expected = rib ++ pipeline ++ trained
     assert(SparkEntry.queries.keySet == expected,
       s"missing ${expected -- SparkEntry.queries.keySet}, " +

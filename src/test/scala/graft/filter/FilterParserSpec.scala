@@ -89,4 +89,48 @@ class FilterParserSpec extends AnyFunSuite {
   test("num") {
     assert(item("12345") == Num(12345))
   }
+
+  test("fuzz: any string parses, and every rib compiles the result") {
+    // random strings, and random joins of grammar fragments, must never
+    // make the parser throw (an unparseable term is dropped), and what it
+    // returns must build a Column for each of the 15 ribs on both paths
+    import org.scalacheck.{Arbitrary, Gen}
+    import org.scalacheck.rng.Seed
+    def sample[A](g: Gen[A], seed: Long): A =
+      g.apply(Gen.Parameters.default, Seed(seed)).get
+    val atom = Gen.oneOf(
+      Gen.oneOf("/", ":", "::", ".", ",", "$", "^", "(", "[", "*", "\\"),
+      Gen.numChar.map(_.toString),
+      Gen.hexChar.map(_.toString),
+      Gen.choose(0L, Long.MaxValue).map(_.toString),
+      Gen.choose(0, 300).map(_.toString))
+    val term = for {
+      pol <- Gen.oneOf("", "", "+", "-")
+      head <- Gen.oneOf("", "re:", "as:^", "as:", "rd:", "nh:", "rt:", "c:",
+        "community:", "target:", "ext-target:")
+      n <- Gen.choose(0, 8)
+      body <- Gen.listOfN(n, atom)
+    } yield pol + head + body.mkString
+    val joined = Gen.choose(0, 5).flatMap(n =>
+      Gen.listOfN(n, term).map(_.mkString(" ")))
+    val input = Gen.frequency(
+      6 -> joined,
+      2 -> Gen.asciiPrintableStr,
+      1 -> Arbitrary.arbitrary[String])
+    var withTerms = 0
+    (0 until 600).foreach { i =>
+      val s = sample(input, 9000L + i)
+      val built = scala.util.Try {
+        val f = FilterParser.parse(s)
+        if (!f.isEmpty) withTerms += 1
+        FilterCompiler.ribValues.flatMap(rib =>
+          Seq(FilterCompiler.acceptFor(rib, f),
+            FilterCompiler.acceptSuperFor(rib, f)))
+      }
+      assert(built.toOption.exists(cs => cs.size == 30 && cs.forall(_ != null)),
+        s"input <$s>: $built")
+    }
+    // not vacuous: a good share of the inputs keep at least one term
+    assert(withTerms >= 100, s"$withTerms of 600 inputs kept a term")
+  }
 }

@@ -403,17 +403,6 @@ class PlanEvidenceSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), plan.take(3000))
   }
 
-  test("sequence packing windows stay partitioned: no single-task cumsum") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val packed = graft.pipeline.Packing.packSequences(
-      docs, "doc_id", "text", seqLen = 512, buckets = 8)
-    val plan = packed.queryExecution.executedPlan.toString
-    // the whole point of the two-phase prefix sum: the running-sum window
-    // partitions on the range bucket, never Window.orderBy over everything
-    assert(plan.contains("Window"), plan.take(3000))
-    assert(!plan.contains("SinglePartition"), plan.take(3000))
-  }
-
   test("line dedup plans as groupBy+join: no window, no single partition") {
     // the keep-first election must be the map-side-combined min + join
     // form — a row_number window over the line fingerprint would funnel
@@ -633,16 +622,6 @@ class PlanEvidenceSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
     assert(!plan.contains("SortMergeJoin"), plan.take(3000))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
-  }
-
-  test("packDocsNoSplit: the bin window partitions by bin, never one task") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val plan = graft.pipeline.Packing
-      .packDocsNoSplit(docs, "doc_id", "text", binCapacity = 512)
-      .queryExecution.executedPlan.toString
-    // the prefix sum windows by bucket, the rank windows by bin — no
-    // window may collapse the corpus onto a single partition
-    assert(!plan.contains("SinglePartition"), plan.take(3000))
   }
 
   test("asRelationships: broadcast degree join, no synthetic-id shuffle") {

@@ -113,7 +113,7 @@ class RibViewsSpec extends AnyFunSuite {
     // emptyAttrs carries as_list = Nil — the legal zero-length AS_PATH of
     // an iBGP-originated route; a bare element_at(as_list, -1) THROWS on
     // it under Spark 4's default ANSI mode (the review-caught crash in
-    // the origin analytics + ST12 stream), the size-guarded column nulls
+    // the origin analytics), the size-guarded column nulls
     val empties = df(historyRows.take(2))
       .select(RibViews.pathOrigin.as("o")).collect()
     assert(empties.forall(_.isNullAt(0)))

@@ -106,26 +106,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(r == Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
   }
 
-  test("attrition equals per-stage recounts, with and without classifier") {
-    // the one-traversal flag-conjunction report must agree with counting
-    // each Curate.stages boundary directly — pins the two against drift
-    val d = docs.select(col("doc_id"),
-      regexp_replace(trim(col("text")), "\\s+", " ").as("text"))
-    val w = (0 until 64).map(b => (b * 37 + 11) % 7)
-    for (clf <- Seq(None, Some((w, 3000L)))) {
-      val report = Curate.attrition(d, "doc_id", "text",
-        maxRepetitionPermille = 50, samplePermille = 600, salt = "cur",
-        classifier = clf)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .sortBy(_._1)
-      val expected = Curate.stages(d, "doc_id", "text",
-        maxRepetitionPermille = 50, samplePermille = 600, salt = "cur",
-        classifier = clf)
-        .zipWithIndex.map { case ((n, df), i) => (i.toLong, n, df.count()) }
-      assert(report.toSeq == expected)
-    }
-  }
-
   test("markup strip: tags removed, entities single-decoded, ws collapsed") {
     val d = Seq(
       (1L, "<div class=\"a\"><h1>Title</h1>body &amp; more</div>"),
@@ -894,85 +874,6 @@ class PipelineSpec extends AnyFunSuite {
       (5L, 6L, 0L, 0L)))
   }
 
-  test("sequence packing: global offsets, chunk spans, empty docs") {
-    // tokens: 4, 7, 0, 12, 3 → offsets 0, 4, 11, 11, 23; seqLen 10
-    val d = Seq(
-      (10L, "a b c d"),
-      (20L, "a b c d e f g"),
-      (30L, ""),
-      (40L, "a b c d e f g h i j k l"),
-      (50L, "x y z")
-    ).toDF("doc_id", "text")
-    val r = Packing.packSequences(d, "doc_id", "text", seqLen = 10, buckets = 3)
-      .orderBy("id").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3),
-        x.getLong(4), x.getLong(5)))
-    assert(r.toSeq == Seq(
-      (10L, 4L, 0L, 0L, 0L, 1L),   // [0,4) in chunk 0
-      (20L, 7L, 4L, 0L, 1L, 2L),   // [4,11) crosses the 10 boundary
-      (30L, 0L, 11L, 1L, 1L, 0L),  // empty doc: zero chunks, pinned start
-      (40L, 12L, 11L, 1L, 2L, 2L), // [11,23) spans chunks 1-2
-      (50L, 3L, 23L, 2L, 2L, 1L))) // [23,26) in chunk 2
-  }
-
-  test("no-split packing: whole docs per bin, bounded overflow, fill audit") {
-    // tokens: 4, 5, 3, 10, 2, 9 → starts 0, 4, 9, 12, 22, 24; capacity 10
-    val d = Seq(
-      (1L, "a a a a"),
-      (2L, "b b b b b"),
-      (3L, "c c c"),
-      (4L, "d d d d d d d d d d"),
-      (5L, "e e"),
-      (6L, "f f f f f f f f f")
-    ).toDF("doc_id", "text")
-    val packed = Packing.packDocsNoSplit(d, "doc_id", "text",
-      binCapacity = 10, buckets = 2)
-    val r = packed.orderBy("id").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    assert(r.toSeq == Seq(
-      (1L, 4L, 0L, 0L),
-      (2L, 5L, 0L, 1L),
-      (3L, 3L, 0L, 2L),  // starts at 9 < 10: bin 0 overflows to 12
-      (4L, 10L, 1L, 0L), // starts at 12
-      (5L, 2L, 2L, 0L),  // starts at 22
-      (6L, 9L, 2L, 1L)))
-    val fills = Packing.binFill(packed, binCapacity = 10)
-      .orderBy("bin").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getBoolean(3)))
-    assert(fills.toSeq == Seq(
-      (0L, 3L, 12L, true),  // the one boundary-crossing doc's tail
-      (1L, 1L, 10L, false),
-      (2L, 2L, 11L, true)))
-    // overflow bound: fill <= capacity + (max doc in bin) - 1
-    val byBin = r.groupBy(_._3)
-    fills.foreach { case (bin, _, fill, _) =>
-      assert(fill <= 10 + byBin(bin).map(_._2).max - 1)
-    }
-  }
-
-  test("sequence packing: bucket count never changes the layout") {
-    val one = Packing.packSequences(docs, "doc_id", "text", 512, buckets = 1)
-      .orderBy("id").collect().toSeq
-    val many = Packing.packSequences(docs, "doc_id", "text", 512, buckets = 7)
-      .orderBy("id").collect().toSeq
-    assert(one == many)
-    // offsets telescope: last doc's end == total token count
-    val total = docs.select(sum(size(split(col("text"), "\\s+")))).first().getLong(0)
-    val last = one.last
-    assert(last.getLong(2) + last.getLong(1) == total)
-  }
-
-  test("chunk manifest: every window but the last fills to seqLen") {
-    val packed = Packing.packSequences(docs, "doc_id", "text", 512)
-    val fills = Packing.chunkManifest(packed, 512)
-      .groupBy(col("chunk")).agg(sum(col("n_tokens_in_chunk")).as("n"))
-      .orderBy(col("chunk")).collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(fills.nonEmpty)
-    assert(fills.init.forall(_._2 == 512L), "a non-final chunk under-filled")
-    assert(fills.last._2 <= 512L)
-    assert(fills.map(_._1).toSeq == fills.indices.map(_.toLong))
-  }
-
   test("fingerprint normalizes case and whitespace") {
     val d = Seq(("A  B\tC", 1), ("a b c", 2), ("a b d", 3)).toDF("text", "id")
     val fps = d.select(TextAnalysis.fingerprint(col("text"))).as[Long].collect()
@@ -1501,51 +1402,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.nonEmpty, "fixture slice must plant cross-epoch pairs")
   }
 
-  test("attritionModern: gate row fires, curve monotone, last = chain output") {
-    // plant a Gopher-failing tail (6 duplicate lines) on every 4th doc so
-    // the repetition stage visibly bites; the curve must stay monotone
-    // non-increasing and its last row must equal the chain's own output
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("source"), concat(col("text"),
-        when(col("doc_id") % 4 === 0,
-          lit("\nxq yq\nxq yq\nxq yq\nxq yq\nxq yq\nxq yq"))
-          .otherwise(lit(""))).as("text"))
-    val rows = Curate.attritionModern(d, "doc_id", "text", "source",
-        repetitionGate = true)
-      .orderBy(col("stage_idx"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .toSeq
-    assert(rows.map(_._2) ==
-      Seq("input", "repetition", "neardup", "quality", "mixture"))
-    assert(rows.map(_._1) == Seq(0L, 1L, 2L, 3L, 4L))
-    rows.sliding(2).foreach { case Seq(a, b) =>
-      assert(b._3 <= a._3, s"attrition must not grow: $a -> $b") }
-    assert(rows(1)._3 < rows(0)._3, "repetition gate must fire on plants")
-    val out = Curate.curateModern(d, "doc_id", "text", "source",
-      repetitionGate = true).count()
-    assert(out == rows.last._3)
-  }
-
-  test("attritionModern: materialized ≡ plain (checkpoint is plan-only)") {
-    // the neardup-boundary localCheckpoint must not change a single
-    // count — materializeStages is an execution strategy, not semantics
-    val d = spark.read.parquet(s"$sf/documents.parquet")
-    def run(mat: Boolean) =
-      Curate.attritionModern(d, "doc_id", "text", "source",
-          repetitionGate = true, materializeStages = mat)
-        .orderBy(col("stage_idx"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .toSeq
-    assert(run(mat = true) == run(mat = false))
-    // and the chain OUTPUT is row-identical both ways (the q_pipeline_
-    // curate3/curate4 board entries run materialized)
-    def chain(mat: Boolean) =
-      Curate.curateModern(d, "doc_id", "text", "source",
-          repetitionGate = true, materializeStages = mat)
-        .orderBy(col("doc_id")).collect().map(_.toString).toSeq
-    assert(chain(mat = true) == chain(mat = false))
-  }
-
   test("epochDedup: index grows with admissions, drops never feed it") {
     // three epochs; the decisive rows are doc 7 (dup of an EPOCH-1
     // admission — flags index_dup only because the index grew past the
@@ -1833,35 +1689,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(r == Map(1L -> math.floor(4 * 1000.0 / 7).toLong, 2L -> 0L, 3L -> 0L))
   }
 
-  test("curate: each stage of the chain gates what it should") {
-    val good = "the quick brown fox jumps over the lazy dog in the garden today"
-    val d = Seq(
-      (1L, good), // kept (canonical of the 1/2 dup pair)
-      (2L, good), // dropped: exact duplicate, higher id
-      (3L, "please contact the team at a@b.io for all of the details today now"), // kept, 1 redaction
-      (4L, "the cat and the cat and the cat and the cat and the cat"), // passes quality, dropped by repetition (769‰)
-      (5L, "1 2 3 4 5 6 7 8 9 10 11 12")) // dropped by the quality gate (alpha)
-      .toDF("doc_id", "text")
-    val r = Curate.curate(d, "doc_id", "text", maxRepetitionPermille = 50,
-        samplePermille = 1000, salt = "t")
-      .select("doc_id", "n_red", "repetition_x1000", "redacted")
-      .collect().map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getString(3))))
-      .toMap
-    assert(r.keySet == Set(1L, 3L))
-    assert(r(1L) == ((0L, 0L, good)))
-    assert(r(3L)._1 == 1L && r(3L)._3.contains("<EMAIL>"))
-    // the optional model gate actually gates: an unreachable threshold
-    // empties the chain, a zero threshold changes nothing
-    val w = (0 until 16).map(b => (b * 5 + 2) % 7)
-    assert(Curate.curate(d, "doc_id", "text", maxRepetitionPermille = 50,
-      samplePermille = 1000, salt = "t",
-      classifier = Some((w, Long.MaxValue))).count() == 0L)
-    assert(Curate.curate(d, "doc_id", "text", maxRepetitionPermille = 50,
-      samplePermille = 1000, salt = "t",
-      classifier = Some((w, 0L))).select("doc_id")
-      .as[Long].collect().toSet == Set(1L, 3L))
-  }
-
   test("pii redaction: urls before emails before ips, counts consistent") {
     val d = Seq(
       "mail bob@x.com or see http://a.b/c?u=p@q.io from 10.0.0.1 now",
@@ -2080,27 +1907,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(byDoc.values.forall(_.length <= 2))
   }
 
-  test("datacard: volume, dup mass, quality, agreement and script per group") {
-    val enText = "the cat and the dog of to in it is here now"
-    val ruText = "\u041F\u0440\u0438\u0432\u0435\u0442 \u043C\u0438\u0440 \u041F\u0440\u0438\u0432\u0435\u0442 \u043C\u0438\u0440"
-    val d = Seq(
-      (1L, "en", "s1", enText),
-      (2L, "en", "s1", enText), // exact duplicate
-      (3L, "en", "s2", "x y"),  // short: fails the quality gate, langid und
-      (4L, "ru", "s1", ruText)) // non-latin dominant, label never predicted
-      .toDF("doc_id", "lang", "source", "text")
-    val got = Curate.datacard(d, "text").collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-          r.getLong(6), r.getLong(7), r.getLong(8))).toMap
-    def words(t: String) = t.split("\\s+").length.toLong
-    assert(got(("en", "s1")) == ((2L, 1L, 2 * words(enText),
-      2L * enText.length, 2L, 2L, 0L)))
-    assert(got(("en", "s2")) == ((1L, 1L, 2L, 3L, 0L, 0L, 0L)))
-    assert(got(("ru", "s1")) == ((1L, 1L, words(ruText),
-      ruText.length.toLong, 0L, 0L, 1L)))
-  }
-
   test("clusterSizeHistogram: clusters and doc mass per size") {
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (8L, 9L),
       (10L, 11L)).toDF("a", "b")
@@ -2216,26 +2022,6 @@ class PipelineSpec extends AnyFunSuite {
     val expect = (1L to 300L).sortBy(i => (fullMix("gk", i), i)).take(25).toSet
     assert(got == expect)
     assert(Sampling.exactK(d, "doc_id", 1000).count() == 300) // k > n
-  }
-
-  test("curateModern: encoding variants dedup only because NFC runs first") {
-    // docs 1 and 2 are the same text in decomposed vs composed encoding:
-    // without NFC their shingle Jaccard is 6/12 = 0.5 < 0.6 (the three
-    // shingles touching the accented 3rd word differ), so they do NOT pair;
-    // after NFC they are identical and the cluster keeps one (tie -> id 1)
-    val deco = "the menu cafe\u0301 lists the usual offers and the daily special"
-    val comp = "the menu caf\u00e9 lists the usual offers and the daily special"
-    val other = "a completely different document about trains and the weather today"
-    val d = Seq((1L, "s0", deco), (2L, "s0", comp), (3L, "s1", other))
-      .toDF("doc_id", "source", "text")
-    // sanity: without normalization the pair is below the 0.6 cut
-    val rawPairs = Dedup.ngramJaccard(d, "doc_id", "text", 3)
-      .where(col("inter") * 1000 >= col("union_n") * 600).count()
-    assert(rawPairs == 0L)
-    val out = Curate.curateModern(d, "doc_id", "text", "source",
-        qualityKeepPermille = 1000)
-      .select("doc_id").as[Long].collect().toSet
-    assert(out == Set(1L, 3L))
   }
 
   test("frequentPhrases: exact counts, partition-invariant, sub-threshold excluded") {
@@ -2493,23 +2279,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(got == Map(
       "a.example.com" -> ((2L, 3L)), // doc 1 twice (case + port), doc 4 once
       "b.example" -> ((1L, 2L))))    // one doc, two URLs
-  }
-
-  test("datasetDiff: all four statuses; whitespace variants read unchanged") {
-    val v1 = Seq(
-      (1L, "same text"),
-      (2L, "will change"),
-      (3L, "will be removed"),
-      (4L, "Spacing   Variant")).toDF("doc_id", "text")
-    val v2 = Seq(
-      (1L, "same text"),
-      (2L, "has changed"),
-      (4L, "spacing variant"),   // case+whitespace normalize: unchanged
-      (5L, "brand new")).toDF("doc_id", "text")
-    val got = Curate.datasetDiff(v1, v2, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == Map(1L -> "unchanged", 2L -> "changed",
-      3L -> "removed", 4L -> "unchanged", 5L -> "added"))
   }
 
   test("perceptronTrain equals an independent batch-update model") {
@@ -2805,20 +2574,6 @@ class PipelineSpec extends AnyFunSuite {
     val wLo = math.floor(1e4 * math.exp(-16.0)).toLong // floor → 0
     assert(wLo == 0L && bg.map(_._5) ==
       Seq(wHi * 1000L / (wHi + wLo), wLo * 1000L / (wHi + wLo)))
-  }
-
-  test("kAnonymity: class sizes, the k verdict, columns survive") {
-    val d = Seq(
-      (1L, "en", 10L, "x"), (2L, "en", 12L, "y"), (3L, "en", 70L, "z"),
-      (4L, "de", 10L, "w"), (5L, "en", 11L, "v")
-    ).toDF("id", "lang", "n", "payload")
-    val got = Curate.kAnonymity(d,
-        Seq(col("lang"), call_function("div", col("n"), lit(64L))), k = 3L)
-      .select(col("id"), col("payload"), col("class_size"), col("suppress"))
-      .as[(Long, String, Long, Boolean)].collect().sortBy(_._1).toSeq
-    // (en, 0) has ids 1,2,5 → size 3, kept; (en, 1) and (de, 0) singletons
-    assert(got == Seq((1L, "x", 3L, false), (2L, "y", 3L, false),
-      (3L, "z", 1L, true), (4L, "w", 1L, true), (5L, "v", 3L, false)))
   }
 
   test("bitextMine: mutual argmax + ratio margin on hand-built geometry") {
