@@ -1,6 +1,5 @@
 package graft.filter
 
-import scala.util.matching.Regex
 
 /** Filter-language parser (reference: `FilterItem::parse`,
   * src/ribfilter.rs:945-1266, and `FilterTerm::parse`/`RouteFilter::parse`,

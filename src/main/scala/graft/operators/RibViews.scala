@@ -1068,11 +1068,15 @@ object RibViews {
   def scanSuper(df: DataFrame, filter: String): DataFrame = {
     val f = FilterParser.parse(filter)
     FilterCompiler.ribValues.map { r =>
-      df.where(col("rib") === r)
-        .where(superPruneHintFor(r, f))
-        .where(FilterCompiler.acceptSuperFor(r, f))
+      df.where(col("rib") === r).where(superMatchFor(r, f))
     }.reduce(_ union _)
   }
+
+  /** One rib's branch of [[scanSuper]]: the candidate-network hint and the
+    * supernet acceptance specialized to that rib. A page over one rib's
+    * slice builds this branch alone. */
+  def superMatchFor(rib: String, f: RouteFilter): Column =
+    superPruneHintFor(rib, f) && FilterCompiler.acceptSuperFor(rib, f)
 
   /** Route-key specificity (reference `len()`: prefixlen + 64 per RD + 24
     * per label, src/ribfilter.rs:469-494). */

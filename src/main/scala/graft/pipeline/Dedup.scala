@@ -1455,7 +1455,6 @@ object Dedup {
   def keepBest(df: DataFrame, idCol: String, scoreCol: String,
       pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIters: Int = 25, algorithm: String = "label"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
     // an integer score contract, enforced rather than silently truncated:
     // casting a fractional quality score to long would corrupt the

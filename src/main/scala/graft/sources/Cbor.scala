@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{EOFException, InputStream}
+import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal pure-JVM CBOR (RFC 8949) decoder — enough to read the

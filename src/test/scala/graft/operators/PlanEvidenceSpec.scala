@@ -138,12 +138,23 @@ class PlanEvidenceSpec extends AnyFunSuite {
     try body finally spark.conf.unset(key)
   }
 
+  /** Runs `body` with the route-key index off (it answers a key-only page
+    * only for a slice within the broadcast bound), so every page runs the
+    * Spark key pass. */
+  private def onSparkKeyPass[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.unset(key)
+  }
+
   /** The key pass and the entry fetch of one matched ipv4u page, with the
     * observed-count plan checks every key pass must meet. */
   private def pageExecutions(): (QueryExecution, QueryExecution) = {
     val params = RibJson.RibParams(skip = 0, limit = 20, maxDepth = 5)
     var page: (Seq[RibJson.PageItem], Long, Long) = null
-    val qes = executionsOf { page = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params) }
+    val qes = onSparkKeyPass(executionsOf {
+      page = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params)
+    })
     assert(page._1.nonEmpty && page._2 > 0 && page._3 >= page._2)
     // a matched page: the key pass, then the entries
     assert(qes.length == 2, qes.map(_.executedPlan.toString.take(500)).mkString("\n\n"))
@@ -226,7 +237,7 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // every execution, so the second one reuses the first one's classes
     // (the code only: each subtree's plan text prints the values)
     def code(filter: String, p: RibJson.RibParams, rib: String = "ipv4u"): Seq[Seq[String]] =
-      executionsOf { RibJson.jsonPage(re, rib, filter, p) }
+      onSparkKeyPass(executionsOf { RibJson.jsonPage(re, rib, filter, p) })
         .map(qe => codegenStringSeq(qe.executedPlan).map(_._2))
     val p = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 5)
     val first = RibJson.jsonPage(re, "ipv4u", "10.1.0.0/16", p)._1
@@ -257,21 +268,54 @@ class PlanEvidenceSpec extends AnyFunSuite {
   test("json page SQL executions: 2 matched, at most 3 with after= or the supernet fallback") {
     val params = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 5)
     var first: Seq[RibJson.PageItem] = Nil
-    assert(executionsOf {
+    assert(onSparkKeyPass(executionsOf {
       first = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14", params)._1
-    }.length == 2)
+    }).length == 2)
     assert(first.length == 5)
     var next: Seq[RibJson.PageItem] = Nil
-    assert(executionsOf {
+    assert(onSparkKeyPass(executionsOf {
       next = RibJson.jsonPage(re, "ipv4u", "10.4.0.0/14",
         params.copy(pageAfterId = Some(first.last.routeId)))._1
-    }.length <= 3)
+    }).length <= 3)
     assert(next.nonEmpty && next.head.routeId != first.last.routeId)
     var fallback: (Seq[RibJson.PageItem], Long, Long) = null
-    assert(executionsOf {
+    assert(onSparkKeyPass(executionsOf {
       fallback = RibJson.jsonPage(re, "ipv4u", "10.3.9.50", params)
-    }.length <= 3)
+    }).length <= 3)
     assert(fallback._2 == 0 && fallback._1.nonEmpty)
+  }
+
+  test("key-only json page SQL executions on the route-key index: 1 warm, 0 for an empty page") {
+    val params = RibJson.RibParams(skip = 0, limit = 5, maxDepth = 5)
+    val f = "10.4.0.0/14"
+    RibJson.jsonPage(re, "ipv4u", f, params) // builds the rib's index
+    var first: (Seq[RibJson.PageItem], Long, Long) = null
+    val warm = executionsOf { first = RibJson.jsonPage(re, "ipv4u", f, params) }
+    // the entry fetch alone: no aggregate, no observed counts
+    assert(warm.length == 1 && first._1.length == 5 && first._2 > 5, warm.map(_.optimizedPlan))
+    assert(!warm.head.optimizedPlan.exists {
+      case _: Aggregate | _: CollectMetrics => true
+      case _ => false
+    }, warm.head.optimizedPlan.toString)
+    for ((what, pageF, p) <- Seq(
+        ("after=", f, params.copy(pageAfterId = Some(first._1.last.routeId))),
+        ("supernet fallback with items", "10.3.9.50", params))) {
+      var page: (Seq[RibJson.PageItem], Long, Long) = null
+      assert(executionsOf { page = RibJson.jsonPage(re, "ipv4u", pageF, p) }.length == 1, what)
+      assert(page._1.nonEmpty, what)
+    }
+    // a supernet page with no supernet and a skip past the end list no
+    // key: no execution at all
+    for ((pageF, p) <- Seq(("192.0.2.1", params), (f, params.copy(skip = first._2.toInt)))) {
+      var page: (Seq[RibJson.PageItem], Long, Long) = null
+      assert(executionsOf { page = RibJson.jsonPage(re, "ipv4u", pageF, p) }.isEmpty, pageF)
+      assert(page._1.isEmpty && page._3 == first._3, pageF)
+    }
+    // an attribute term, onlyactive or maxdepth=0 keep the Spark key pass
+    for ((pageF, p) <- Seq(("10.4.0.0/14 community:10:25", params),
+        (f, params.copy(onlyActive = true)), (f, params.copy(maxDepth = 0))))
+      assert(executionsOf { RibJson.jsonPage(re, "ipv4u", pageF, p) }
+        .exists(_.optimizedPlan.exists(_.isInstanceOf[CollectMetrics])), s"$pageF $p")
   }
 
   test("an ipv4u page's key-flag plan compiles only the ipv4u key algebra") {

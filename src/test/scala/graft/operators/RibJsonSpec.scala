@@ -302,7 +302,8 @@ class RibJsonSpec extends AnyFunSuite {
     // or a bounded input whose keys fit the page, would plan the page as a
     // global sort, whose range-partition sampling job over an exchanged
     // key pass runs the observed counts a second time; the key pass takes
-    // the route_id exchange when the one-task size is below the slice
+    // the route_id exchange when the one-task size is below the slice.
+    // The route-key index, which would answer these key-only pages, is off
     val f = "10.4.0.0/14"
     val p = RibJson.RibParams(limit = 5, maxDepth = 5)
     val first = RibJson.jsonPage(re, "ipv4u", f, p)._1
@@ -310,7 +311,7 @@ class RibJsonSpec extends AnyFunSuite {
     assert(found > 5 && first.length == 5)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    for (size <- Seq("1MB", "16k")) {
+    for (size <- Seq("1MB", "16k")) onSparkKeyPass {
       spark.conf.set(key, size)
       try {
         for ((q, items) <- Seq("limit=99999999999" -> found, "skip=1&limit=99999999999" -> (found - 1),
@@ -351,6 +352,132 @@ class RibJsonSpec extends AnyFunSuite {
       val together = futures.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
       pages.indices.foreach(i => assert(together(i) == alone(i), pages(i)))
     } finally pool.shutdownNow()
+  }
+
+  /** Runs `body` with the route-key index off: every page takes the Spark
+    * key pass. */
+  private def onSparkKeyPass[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.unset(key)
+  }
+
+  test("property: a key-only page answers the same bytes from the route-key index as from the key pass") {
+    // per rib, filters drawn from its own keys: net, host, +/- terms, the
+    // empty filter, rd: and a bare number, a net below a key (the supernet
+    // fallback with items) and an address below no key (without); each
+    // runs the base page and two of the skip/limit/after=/maxdepth variants
+    val p = RibJson.RibParams(limit = 3, maxDepth = 5)
+    def variants(pageIds: Seq[Long], unmatched: => Long): Seq[RibJson.RibParams] = Seq(
+      p.copy(skip = 2), p.copy(limit = 0), p.copy(skip = 100000),
+      p.copy(pageAfterId = pageIds.drop(1).headOption.orElse(Some(42L))),
+      p.copy(pageAfterId = Some(42L)), p.copy(pageAfterId = Some(unmatched)),
+      p.copy(maxDepth = 1))
+    var n = 0
+    var nonEmpty = 0
+    for (rib <- Model.ribKinds) {
+      val keys = re.where(col("rib") === rib)
+        .select(col("prefix_str"), col("prefix.prefix_len"), col("rd.rdh"), col("rd.rdl"))
+        .distinct().orderBy(col("prefix_str"), col("rdh"), col("rdl")).limit(2).collect()
+      val nets = keys.filter(!_.isNullAt(0)).map(r => (r.getString(0), r.getInt(1))).toSeq
+      val hosts = nets.map(_._1.takeWhile(_ != '/'))
+      val below = nets.collect { case (n, plen) if plen + 2 <= (if (n.contains(':')) 128 else 32) =>
+        n.takeWhile(_ != '/') + "/" + (plen + 2) }
+      val rds = keys.filter(!_.isNullAt(2)).map(r => s"${r.getLong(2)}:${r.getLong(3)}").toSeq
+      val outside = if (nets.exists(_._1.contains(':'))) "3fff::1" else "192.0.2.1"
+      val filters = (Seq("", outside) ++ nets.headOption.map(_._1) ++ hosts.lastOption ++
+        nets.headOption.zip(hosts.lastOption).map { case ((net, _), h) => s"+$net -$h" } ++
+        below.headOption ++ rds.headOption.map("rd:" + _) ++
+        rds.headOption.map(_.split(':')(1))).distinct
+      for (f <- filters) {
+        val base = RibJson.response(re, rib, f, p)
+        val items = RibJson.jsonPage(re, rib, f, p)._1
+        assert(onSparkKeyPass(RibJson.response(re, rib, f, p)) == base, s"$rib '$f' $p")
+        lazy val unmatched = RibJson.keyFlags(re, rib, FilterParser.parse(f), p)
+          .where(col("__m") === 0).select("route_id").head(1).headOption.map(_.getLong(0)).getOrElse(7L)
+        val vs = variants(items.map(_.routeId), unmatched)
+        for (q <- Seq(vs(n % vs.length), vs((n + 3) % vs.length))) {
+          val body = RibJson.response(re, rib, f, q)
+          assert(onSparkKeyPass(RibJson.response(re, rib, f, q)) == body, s"$rib '$f' $q")
+        }
+        if (items.nonEmpty) nonEmpty += 1
+        n += 1
+      }
+    }
+    assert(n >= 15 * 3 && nonEmpty >= 15, s"$n pages, $nonEmpty non-empty")
+  }
+
+  /** `evs` written as a rib-partitioned Parquet log under `dir`. */
+  private def writeLog(evs: Seq[RouteEvent], dir: java.nio.file.Path, mode: String): Unit =
+    df(evs).write.mode(mode).partitionBy("rib").parquet(dir.toString)
+
+  test("a file appended to a parquet log shows its key on the next page") {
+    val dir = java.nio.file.Files.createTempDirectory("ribjson_log")
+    try {
+      writeLog(Seq(ev(base, active = true, 1L),
+        ev(base, active = true, 2L, pfx = Model.v4("10.0.1.0", 24)),
+        ev(base, active = true, 3L, pfx = Model.v4("11.0.0.0", 24))), dir, "overwrite")
+      val p = RibJson.RibParams(limit = 10)
+      val before = RibJson.jsonPage(spark.read.parquet(dir.toString), "ipv4u", "10.0.0.0/16", p)
+      assert(before._1.map(_.itemKey) == Seq("10.0.0.0/24", "10.0.1.0/24") &&
+        (before._2, before._3) == ((2L, 3L)))
+      writeLog(Seq(ev(base + 1000, active = true, 4L, pfx = Model.v4("10.0.0.128", 25))), dir, "append")
+      val log = spark.read.parquet(dir.toString)
+      val after = RibJson.jsonPage(log, "ipv4u", "10.0.0.0/16", p)
+      assert(after._1.map(_.itemKey) == Seq("10.0.0.0/24", "10.0.0.128/25", "10.0.1.0/24") &&
+        (after._2, after._3) == ((3L, 4L)), after)
+      assert(RibJson.response(log, "ipv4u", "10.0.0.0/16", p) ==
+        onSparkKeyPass(RibJson.response(log, "ipv4u", "10.0.0.0/16", p)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("eight pages at once on a fresh log version build one index and answer as each alone") {
+    val dir = java.nio.file.Files.createTempDirectory("ribjson_fresh")
+    try {
+      re.where(col("rib") === "ipv4u").write.mode("overwrite").partitionBy("rib").parquet(dir.toString)
+      val log = spark.read.parquet(dir.toString)
+      // seven nets of distinct keys, each the page of its own key and the
+      // keys inside it, and a supernet page
+      val nets = log.select("prefix_str").distinct().orderBy("prefix_str").collect()
+        .map(_.getString(0)).grouped(20).map(_.head).take(7).toSeq
+      val filters = nets :+ "10.3.9.50"
+      val p = RibJson.RibParams(limit = 10, maxDepth = 3)
+      val alone = onSparkKeyPass(filters.map(f => RibJson.response(log, "ipv4u", f, p)))
+      assert(alone.distinct.length == filters.length)
+      // the index build is the only aggregate a key-only page runs
+      val builds = new java.util.concurrent.atomic.AtomicInteger()
+      val marker = spark.range(1).toDF()
+      @volatile var markerSeen = false
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          if (qe eq marker.queryExecution) markerSeen = true
+          else if (qe.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))
+            builds.incrementAndGet()
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(filters.length)
+      spark.listenerManager.register(listener)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val futures = filters.map { f =>
+          pool.submit(new java.util.concurrent.Callable[String] {
+            def call(): String = { start.await(); RibJson.response(log, "ipv4u", f, p) }
+          })
+        }
+        start.countDown()
+        val together = futures.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+        filters.indices.foreach(i => assert(together(i) == alone(i), filters(i)))
+        // the listener bus delivers in order: once a marker action's event
+        // has arrived, every build's has
+        marker.collect()
+        val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+        while (!markerSeen && System.nanoTime < deadline) Thread.sleep(5)
+        assert(markerSeen && builds.get == 1, s"${builds.get} index builds")
+      } finally {
+        spark.listenerManager.unregister(listener)
+        pool.shutdownNow()
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("statistics json shape") {

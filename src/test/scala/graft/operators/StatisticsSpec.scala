@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
 import graft.SparkTestBase
 
 /** A1 statistics: exact vs approximate (HLL++) store counts. The approx

@@ -177,7 +177,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("semantic dedup: planted copies dropped, keepers dominate, total preserved") {
-    import graft.functions.VecDot
     // plant exact-direction copies (ids +1000): SemDeDup must drop them in
     // favor of the more-central original (exact ccos tie → lower id wins)
     val base = emb.select(col("vec_id"),

@@ -35,7 +35,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rib_accept: the filter language as a SQL predicate") {
-    import org.apache.spark.sql.functions._
     val s = spark
     val re = graft.sources.RouteEventGen.routeEvents(s, "/root/testdata/sf0.001")
     re.createOrReplaceTempView("re_sql_spec")

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import BgpSession._
 

@@ -4,7 +4,6 @@ import java.io.ByteArrayInputStream
 import java.net.{InetAddress, ServerSocket, Socket}
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.sources.BgpSession._
