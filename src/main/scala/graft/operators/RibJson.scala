@@ -1,18 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
-import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{SortExec, SQLExecution}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.filter.{FilterCompiler, FilterParser, RouteFilter}
 import graft.functions.{IpFns, Param}
@@ -24,20 +16,20 @@ import graft.functions.{IpFns, Param}
   * Output per route key: {session_id → {path_id → {ts_millis →
   * {Active, Attrs, Labels}}}}, history newest-first capped at `maxdepth`
   * (take-after-filter from the newest side, src/bgpsvc.rs:519-531), empty
-  * subtrees pruned. A page whose filter reads only route-key columns, with
-  * no response filter, takes its keys from the rib's route-key index: the
-  * rib's keys in page order, collected to the driver once per log version
-  * (its file listing), on which the page's compiled predicates are
-  * evaluated in-process — the reference's BTreeMap walk, with `length` the
-  * table size. Any other page runs one key pass — one action, found/length
-  * observed on it, no persisted key set — that reads a rib slice AQE would
-  * shrink to one task in one partition (one stage) and hash-partitions a
-  * larger one on `route_id` once for the depth window and the key-flag
-  * aggregate. Either way the page's entry rows — bounded by limit × rings
-  * × history — are read through an `InSet` of the page keys in one stage,
-  * collected once and rendered on the driver. Request values (filter
-  * values, the `after=` id, change-time bounds, maxdepth) enter the plan
-  * as [[graft.functions.Param]]s, so each page shape compiles once. */
+  * subtrees pruned. This object selects a page's keys and renders it. The
+  * keys, found and length come from the rib's [[RibState]] on the driver
+  * when the log is a file relation within its bound — the reference's
+  * BTreeMap walk, with `length` the table size: a key-only page reads its
+  * key part, a page with an attribute term or a response filter its
+  * dictionary-encoded entry part too. Any other page runs one Spark key
+  * pass — one action, found/length observed on it, no persisted key set —
+  * that hash-partitions the rib slice on `route_id` once for the depth
+  * window and the key-flag aggregate. Either way the page's entry rows —
+  * bounded by limit × rings × history — are read through an `InSet` of
+  * the page keys in one stage, collected once and rendered on the driver.
+  * Request values (filter values, the `after=` id, change-time bounds,
+  * maxdepth) enter the plans and the state's predicates as
+  * [[graft.functions.Param]]s, so each page shape compiles once. */
 object RibJson {
 
   final case class RibParams(
@@ -60,7 +52,7 @@ object RibJson {
     * mvpn keys have null prefix, rd and labels; l2vpls keys share a few
     * rds), so many keys tie on it alone; the surrogate makes skip pages
     * over them well defined and lets a keyset walk step past a tie. */
-  private def pageOrder: Seq[Column] = nlriOrder :+ col("route_id")
+  private[operators] def pageOrder: Seq[Column] = nlriOrder :+ col("route_id")
 
   private def nlriOrder: Seq[Column] = RibViews.nlriOrderFor(includeRing = false)
 
@@ -210,18 +202,12 @@ object RibJson {
     * the NLRI order tuple rides along as first() primitives `k0`, `k1`, …,
     * which keeps the aggregation a hash aggregate. The depth window's
     * (route_id, ring) partitioning and the aggregate share one
-    * distribution of the slice. A slice no larger than the size up to
-    * which AQE coalesces a shuffle into one task ([[oneTaskBytes]]) is
-    * read in one partition with no exchange, so the pass is one stage;
-    * a larger slice is hash-partitioned on `route_id` once. Either way a
-    * `route_id` predicate above the aggregate pushes below the window to
+    * distribution of the slice: it is hash-partitioned on `route_id` once.
+    * A `route_id` predicate above the aggregate pushes below the window to
     * the scan. */
   private[operators] def keyFlags(events: DataFrame, ribName: String,
       filter: RouteFilter, p: RibParams): DataFrame = {
-    val slice = ribSlice(events, ribName)
-    val d =
-      if (sliceBytes(events, ribName) <= oneTaskBytes(events)) slice.coalesce(1)
-      else slice.repartition(col("route_id"))
+    val d = ribSlice(events, ribName).repartition(col("route_id"))
     val flag = RibViews.entryMatchFlag(d, ribName, filter, p.maxDepth,
       p.onlyActive, p.changedAfterMs, p.changedBeforeMs)
     d.withColumn("__em", flag)
@@ -230,51 +216,9 @@ object RibJson {
         nlriOrder.zipWithIndex.map { case (c, i) => first(c).as(s"k$i") }: _*)
   }
 
-  /** The planned size of the rib's slice. For a log that is one file
-    * relation it is the size of the files that hold the slice: the
-    * optimizer prunes the partitions of a path-based log only at physical
-    * planning, so its estimate is the whole log's. Otherwise it is the
-    * optimizer's estimate of the slice. */
-  private def sliceBytes(events: DataFrame, ribName: String): BigInt =
-    sliceFiles(events, ribName) match {
-      case Some(files) => files.map(f => BigInt(f._2)).sum
-      case None => ribSlice(events, ribName).queryExecution.optimizedPlan.stats.sizeInBytes
-    }
-
-  /** The files that hold the rib's slice of a log that is one file
-    * relation, as (path, length, mtime): the rib's partition of a log
-    * partitioned by `rib`, every file of an unpartitioned one. None for
-    * any other frame. */
-  private def sliceFiles(events: DataFrame, ribName: String): Option[Seq[(String, Long, Long)]] =
-    events.queryExecution.analyzed match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if fs.partitionSchema.isEmpty || fs.partitionSchema.fieldNames.toSeq == Seq("rib") =>
-        Some(fs.location.listFiles(Nil, Nil)
-          .filter(d => fs.partitionSchema.isEmpty || d.values.getUTF8String(0).toString == ribName)
-          .flatMap(_.files).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
-      case _ => None
-    }
-
-  /** The shuffle size up to which AQE coalesces a shuffle into one task:
-    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` while
-    * `coalescePartitions.parallelismFirst` holds (AQE then targets
-    * max(min(size / parallelism, advisory), minPartitionSize)), else
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. The rib files
-    * are compared with it: the key pass's shuffle measured 0.53–0.70 of
-    * them (SCALE.md), so a slice read in one partition is one AQE would
-    * have shrunk to one task. */
-  private def oneTaskBytes(df: DataFrame): Long = {
-    val conf = df.sparkSession.conf
-    val key =
-      if (conf.get(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST.key).toBoolean)
-        SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key
-      else SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
-    JavaUtils.byteStringAsBytes(conf.get(key))
-  }
-
   /** Shared page machinery: the page keys and the counts come from the
-    * rib's route-key index where [[keyIndex]] allows it, else from one
-    * Spark key pass; then the page's entries are read from the rib's slice
+    * rib's [[RibState]] where it answers the page, else from one Spark key
+    * pass; then the page's entries are read from the rib's slice
     * through an `InSet` of the page keys. Returns (pageEntries, page route
     * ids in item order, found, length) where pageEntries holds ALL history
     * rows of the page's route keys. */
@@ -290,8 +234,9 @@ object RibJson {
     // observed metrics a second time. No page reaches that many keys
     val maxRows = d.sparkSession.conf.get(SQLConf.TOP_K_SORT_FALLBACK_THRESHOLD.key).toInt - 1
     val limit = math.min(p.limit, maxRows)
-    val (order, found, length) = keyIndex(events, ribName, p, Seq(accept, superMatch)) match {
-      case Some(index) => indexPage(index, events, accept, superMatch, p, limit)
+    val (order, found, length) =
+      RibState(events, ribName, Seq(accept, superMatch), () => d) match {
+      case Some(state) => statePage(state, accept, superMatch, p, limit)
       case None => keyPass(events, ribName, f, superMatch, p, limit, maxRows)
     }
     // the page is bounded by `limit` (reference contract, default 1000):
@@ -379,87 +324,24 @@ object RibJson {
     (order, found, length)
   }
 
-  /** The columns of a route key: all that a key-only page's predicates
-    * read, and what the route-key index holds of each key. */
-  private val keyCols = Seq("prefix", "prefix_str", "rd", "labels", "l2", "mvpn", "evpn", "mdt_group")
-
-  /** One rib's route keys at one log version: `table` is their schema and
-    * rows (`route_id`, then [[keyCols]]) in page order. The first page
-    * that needs it builds it; pages that arrive meanwhile wait for it, and
-    * a failed build is retried by the next page. */
-  private final class KeyIndex(val version: Set[(String, Long, Long)], keys: () => DataFrame) {
-    lazy val table: (StructType, Array[InternalRow]) = {
-      val qe = keys().queryExecution
-      (qe.analyzed.schema,
-        SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()))
-    }
-  }
-
-  /** The newest route-key index per rib: one kept per rib. */
-  private val keyIndexes = new ConcurrentHashMap[String, KeyIndex]()
-
-  /** The rib's route-key index, when it answers this page's key pass: the
-    * page's predicates read route-key columns only, and the request has no
-    * response filter (`onlyactive`, `changed_*`) and a maxdepth above 0,
-    * so a key matches exactly when its newest entry does. The log must be
-    * one file relation whose rib files fit Spark's own bound on what it
-    * collects to the driver, `spark.sql.autoBroadcastJoinThreshold` (-1
-    * turns the index off). A new file listing is a new log version, whose
-    * index replaces the rib's old one. */
-  private def keyIndex(events: DataFrame, ribName: String, p: RibParams,
-      preds: Seq[Column]): Option[KeyIndex] = {
-    val keyOnly = !p.onlyActive && p.changedAfterMs.isEmpty && p.changedBeforeMs.isEmpty &&
-      p.maxDepth > 0 && preds.forall(c => GraftBridge.toExpression(c).collect {
-        case a: UnresolvedAttribute => a.nameParts.head
-      }.forall(keyCols.contains))
-    val bound = events.sparkSession.conf.get(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key)
-    if (!keyOnly || bound.startsWith("-")) None
-    else sliceFiles(events, ribName)
-      .filter(_.map(_._2).sum <= JavaUtils.byteStringAsBytes(bound))
-      .map { files =>
-        val version = files.toSet
-        keyIndexes.compute(ribName, (_, old) =>
-          if (old != null && old.version == version) old
-          else new KeyIndex(version, () => routeKeys(events, ribName)))
-      }
-  }
-
-  /** The rib's route keys in page order, one row per key. The slice fits
-    * the driver bound, so it is read in one partition: the aggregate and
-    * the sort run in one stage, with no exchange. */
-  private def routeKeys(events: DataFrame, ribName: String): DataFrame =
-    ribSlice(events, ribName).coalesce(1)
-      .groupBy(col("route_id"))
-      .agg(first(keyCols.head).as(keyCols.head), keyCols.tail.map(c => first(c).as(c)): _*)
-      .orderBy(pageOrder: _*)
-
-  /** The key pass answered from the index on the driver: the page's
-    * predicates, resolved against the index's columns and bound to its
-    * rows, are evaluated per key (request values are [[Param]]s, whose
-    * `eval` is the value; a runtime-replaceable function cannot `eval`,
-    * so its replacement is taken first, as the optimizer does). Returns
-    * (page route ids, found, length) as [[keyPass]] does. */
-  private def indexPage(index: KeyIndex, events: DataFrame, accept: Column,
-      superMatch: Column, p: RibParams, limit: Int): (Seq[Long], Long, Long) = {
-    val (schema, rows) = index.table
-    val plan = ReplaceExpressions(events.sparkSession
-      .createDataFrame(java.util.List.of[Row](), schema)
-      .select(accept, superMatch, RibViews.keyLen).queryExecution.analyzed)
-    val Seq(acc, sup, len) = plan.expressions
-      .map(BindReferences.bindReference(_, AttributeSeq(plan.children.head.output)))
-    def holds(e: Expression)(i: Int): Boolean = e.eval(rows(i)) == true
-    val id = rows.map(_.getLong(0))
-    val matched = rows.indices.filter(holds(acc))
+  /** The key pass answered from the rib's state on the driver: the keys
+    * the page finds, and the supernet fallback's when it finds none, are
+    * picked from the state's keys in page order. Returns (page route ids,
+    * found, length) as [[keyPass]] does. */
+  private def statePage(state: RibState, accept: Column, superMatch: Column,
+      p: RibParams, limit: Int): (Seq[Long], Long, Long) = {
+    val matched = state.matching(accept, p)
     val page =
       if (matched.nonEmpty) p.pageAfterId match {
         // an unknown or unmatched id resumes nowhere: the first page
-        case Some(aid) => matched.drop(matched.indexWhere(id(_) == aid) + 1).take(limit)
+        case Some(aid) => matched.drop(matched.indexWhere(state.routeId(_) == aid) + 1).take(limit)
         case None => matched.drop(p.skip).take(limit)
       }
-      else // supernet fallback: the most-specific `limit` keys, listed in page order
-        rows.indices.filter(holds(sup))
-          .sortBy(i => (-len.eval(rows(i)).asInstanceOf[Int], i)).take(limit).sorted
-    (page.map(id), matched.length.toLong, rows.length.toLong)
+      else { // supernet fallback: the most-specific `limit` keys, listed in page order
+        val len = state.keyInt(RibViews.keyLen)
+        state.holding(superMatch).sortBy(k => (-len(k), k)).take(limit).sorted
+      }
+    (page.map(state.routeId), matched.length.toLong, state.length.toLong)
   }
 
   private def routeIds(keys: DataFrame): Seq[Long] =

@@ -129,18 +129,9 @@ class PlanEvidenceSpec extends AnyFunSuite {
     seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
   }
 
-  /** Runs `body` with AQE's minimum coalesced partition size set to
-    * `size`: the size up to which a shuffle becomes one task, and so the
-    * size up to which a page's key pass reads its slice in one partition. */
-  private def withOneTaskSize[T](size: String)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    spark.conf.set(key, size)
-    try body finally spark.conf.unset(key)
-  }
-
-  /** Runs `body` with the route-key index off (it answers a key-only page
-    * only for a slice within the broadcast bound), so every page runs the
-    * Spark key pass. */
+  /** Runs `body` with the rib state off (it answers a page only for a
+    * slice within the broadcast bound), so every page runs the Spark key
+    * pass. */
   private def onSparkKeyPass[T](body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     spark.conf.set(key, "-1")
@@ -202,21 +193,13 @@ class PlanEvidenceSpec extends AnyFunSuite {
     }.isEmpty, plan.toString)
   }
 
-  test("json page key pass: no exchange below the one-task size, one route_id exchange above") {
-    // a slice no larger than the size AQE coalesces a shuffle into one
-    // task is read in one partition: the depth window, the route_id
-    // aggregate and the page's TakeOrderedAndProject run in one stage,
-    // with no global sort
-    val (small, _) = pageExecutions()
-    val smallPlan = small.executedPlan
-    assert(aqe.collect(smallPlan) { case e: ShuffleExchangeExec => e }.isEmpty, smallPlan.toString)
-    assert(aqe.collect(smallPlan) { case s: SortExec if s.global => s }.isEmpty &&
-      smallPlan.toString.contains("TakeOrderedAndProject"), smallPlan.toString)
-    // a slice above it keeps exactly one exchange, on route_id, shared by
-    // the depth window and the aggregate
-    val (large, _) = withOneTaskSize("16k")(pageExecutions())
-    val plan = large.executedPlan.toString
-    val shuffles = aqe.collect(large.executedPlan) { case e: ShuffleExchangeExec => e }
+  test("json page key pass shares one route_id exchange") {
+    // the slice is hash-partitioned on route_id once: the depth window and
+    // the aggregate share that exchange, and the page's
+    // TakeOrderedAndProject runs above it with no global sort
+    val (keyPass, _) = pageExecutions()
+    val plan = keyPass.executedPlan.toString
+    val shuffles = aqe.collect(keyPass.executedPlan) { case e: ShuffleExchangeExec => e }
     assert(shuffles.length == 1, plan)
     val keys = shuffles.head.outputPartitioning match {
       case h: HashPartitioning => h.expressions.map {
@@ -226,7 +209,7 @@ class PlanEvidenceSpec extends AnyFunSuite {
       case other => Seq(other.toString)
     }
     assert(keys == Seq("route_id"), plan)
-    assert(aqe.collect(large.executedPlan) {
+    assert(aqe.collect(keyPass.executedPlan) {
       case c: CoalesceExec => c
       case s: SortExec if s.global => s
     }.isEmpty && plan.contains("TakeOrderedAndProject"), plan)
@@ -311,11 +294,20 @@ class PlanEvidenceSpec extends AnyFunSuite {
       assert(executionsOf { page = RibJson.jsonPage(re, "ipv4u", pageF, p) }.isEmpty, pageF)
       assert(page._1.isEmpty && page._3 == first._3, pageF)
     }
-    // an attribute term, onlyactive or maxdepth=0 keep the Spark key pass
+    // an attribute term, onlyactive or maxdepth=0: from the rib state's
+    // entry part, built by the first page; a warm page runs the entry
+    // fetch alone
     for ((pageF, p) <- Seq(("10.4.0.0/14 community:10:25", params),
-        (f, params.copy(onlyActive = true)), (f, params.copy(maxDepth = 0))))
-      assert(executionsOf { RibJson.jsonPage(re, "ipv4u", pageF, p) }
-        .exists(_.optimizedPlan.exists(_.isInstanceOf[CollectMetrics])), s"$pageF $p")
+        (f, params.copy(onlyActive = true)), ("10.3.9.50", params.copy(maxDepth = 0)))) {
+      executionsOf { RibJson.jsonPage(re, "ipv4u", pageF, p) } // builds the entry part
+      var page: (Seq[RibJson.PageItem], Long, Long) = null
+      val warm = executionsOf { page = RibJson.jsonPage(re, "ipv4u", pageF, p) }
+      assert(warm.length == 1 && page._1.nonEmpty, s"$pageF $p ${warm.map(_.optimizedPlan)}")
+      assert(!warm.head.optimizedPlan.exists {
+        case _: Aggregate | _: CollectMetrics => true
+        case _ => false
+      }, s"$pageF $p ${warm.head.optimizedPlan}")
+    }
   }
 
   test("an ipv4u page's key-flag plan compiles only the ipv4u key algebra") {

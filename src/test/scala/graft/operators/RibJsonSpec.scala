@@ -301,32 +301,27 @@ class RibJsonSpec extends AnyFunSuite {
     // skip + limit at or past spark.sql.execution.topKSortFallbackThreshold,
     // or a bounded input whose keys fit the page, would plan the page as a
     // global sort, whose range-partition sampling job over an exchanged
-    // key pass runs the observed counts a second time; the key pass takes
-    // the route_id exchange when the one-task size is below the slice.
-    // The route-key index, which would answer these key-only pages, is off
+    // key pass runs the observed counts a second time. The rib state,
+    // which would answer these key-only pages, is off
     val f = "10.4.0.0/14"
     val p = RibJson.RibParams(limit = 5, maxDepth = 5)
     val first = RibJson.jsonPage(re, "ipv4u", f, p)._1
     val (found, length) = counted(re, "ipv4u", f, p)
     assert(found > 5 && first.length == 5)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    for (size <- Seq("1MB", "16k")) onSparkKeyPass {
-      spark.conf.set(key, size)
-      try {
-        for ((q, items) <- Seq("limit=99999999999" -> found, "skip=1&limit=99999999999" -> (found - 1),
-            s"after=${first.head.routeId}&limit=99999999999" -> (found - 1))) {
-          val doc = mapper.readTree(
-            Api.handle(re, s"/api/json/ipv4u?filter=10.4.0.0%2F14&maxdepth=5&$q").get)
-          assert((doc.get("found").asLong, doc.get("length").asLong) == ((found, length)) &&
-            doc.get("items").size == items, s"$size $q")
-        }
-        // a bounded input whose keys fit the page: the optimizer drops the
-        // page's limit and leaves a global sort
-        val bounded = re.limit(re.count().toInt)
-        val (items, bFound, bLength) = RibJson.jsonPage(bounded, "ipv4u", f, p.copy(limit = 1000))
-        assert((bFound, bLength) == ((found, length)) && items.length == found, size)
-      } finally spark.conf.unset(key)
+    onSparkKeyPass {
+      for ((q, items) <- Seq("limit=99999999999" -> found, "skip=1&limit=99999999999" -> (found - 1),
+          s"after=${first.head.routeId}&limit=99999999999" -> (found - 1))) {
+        val doc = mapper.readTree(
+          Api.handle(re, s"/api/json/ipv4u?filter=10.4.0.0%2F14&maxdepth=5&$q").get)
+        assert((doc.get("found").asLong, doc.get("length").asLong) == ((found, length)) &&
+          doc.get("items").size == items, q)
+      }
+      // a bounded input whose keys fit the page: the optimizer drops the
+      // page's limit and leaves a global sort
+      val bounded = re.limit(re.count().toInt)
+      val (items, bFound, bLength) = RibJson.jsonPage(bounded, "ipv4u", f, p.copy(limit = 1000))
+      assert((bFound, bLength) == ((found, length)) && items.length == found)
     }
   }
 
@@ -354,8 +349,8 @@ class RibJsonSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
-  /** Runs `body` with the route-key index off: every page takes the Spark
-    * key pass. */
+  /** Runs `body` with the rib state off: every page takes the Spark key
+    * pass. */
   private def onSparkKeyPass[T](body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     spark.conf.set(key, "-1")
@@ -407,6 +402,64 @@ class RibJsonSpec extends AnyFunSuite {
     assert(n >= 15 * 3 && nonEmpty >= 15, s"$n pages, $nonEmpty non-empty")
   }
 
+  test("property: an attribute or response-filter page answers the same bytes from the entry state as from the key pass") {
+    // per rib, attribute terms drawn from its oldest entry (as-path start
+    // and end, community, next hop, route target, regex), a net beside a
+    // '-' term, the same terms as the supernet fallback's (an address
+    // below the entry's key, or below no key); each runs the base page and
+    // two of the response-filter, maxdepth, skip/limit and after= variants
+    val Seq(lo, hi) = re.agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
+      .collect()(0).toSeq.map(_.asInstanceOf[Long])
+    val third = (hi - lo) / 3
+    val p = RibJson.RibParams(limit = 3, maxDepth = 5)
+    def variants(pageIds: Seq[Long], unmatched: => Long): Seq[RibJson.RibParams] = Seq(
+      p.copy(onlyActive = true), p.copy(changedAfterMs = Some(lo + third)), p.copy(maxDepth = 0),
+      p.copy(skip = 2), p.copy(changedBeforeMs = Some(hi - third), maxDepth = 1), p.copy(limit = 0),
+      p.copy(pageAfterId = pageIds.drop(1).headOption.orElse(Some(42L))),
+      p.copy(onlyActive = true, pageAfterId = Some(42L)), p.copy(pageAfterId = Some(unmatched)),
+      p.copy(onlyActive = true, maxDepth = 1, changedAfterMs = Some(lo), changedBeforeMs = Some(hi)))
+    var n = 0
+    var nonEmpty = 0
+    for (rib <- Model.ribKinds) {
+      val e = re.where(col("rib") === rib).orderBy(col("event_id"))
+        .select(col("prefix_str"), col("prefix.prefix_len"), col("attrs.as_list"), col("attrs.comms"),
+          col("attrs.extcomms"), col("attr_strs")).head()
+      val asns = Option(e.getSeq[Long](2)).getOrElse(Nil)
+      val comm = Option(e.getSeq[org.apache.spark.sql.Row](3)).flatMap(_.headOption)
+        .map(c => s"community:${c.getInt(0)}:${c.getInt(1)}")
+      val rt = Option(e.getSeq[org.apache.spark.sql.Row](4)).flatMap(_.headOption)
+        .map(c => s"rt:${c.getLong(2)}:${c.getLong(3)}")
+      val strs = Option(e.getSeq[String](5)).getOrElse(Nil)
+      val nh = strs.lift(1).filter(_.nonEmpty).map("nh:" + _)
+      val rx = strs.lift(2).filter(_.nonEmpty).map(s => "re:^" + s.takeWhile(_ != ' '))
+      val net = Option(e.getString(0))
+      val below = net.filter(x => e.getInt(1) + 2 <= (if (x.contains(':')) 128 else 32))
+        .map(x => x.takeWhile(_ != '/') + "/" + (e.getInt(1) + 2))
+      val outside = if (net.exists(_.contains(':'))) "3fff::1" else "192.0.2.1"
+      val attrTerms = asns.headOption.map(a => s"as:^$a") ++ asns.lastOption.map(a => s"as:$a$$") ++
+        comm ++ nh ++ rt ++ rx
+      val filters = (Seq("") ++ attrTerms ++ net.zip(comm).map { case (x, c) => s"+$x -$c" } ++
+        below.zip(attrTerms.headOption).map { case (b, t) => s"$b $t" } ++
+        comm.map(c => s"$outside $c")).distinct
+      assert(attrTerms.size >= 4, s"$rib: $attrTerms")
+      for (f <- filters) {
+        val base = RibJson.response(re, rib, f, p)
+        val items = RibJson.jsonPage(re, rib, f, p)._1
+        assert(onSparkKeyPass(RibJson.response(re, rib, f, p)) == base, s"$rib '$f' $p")
+        lazy val unmatched = RibJson.keyFlags(re, rib, FilterParser.parse(f), p)
+          .where(col("__m") === 0).select("route_id").head(1).headOption.map(_.getLong(0)).getOrElse(7L)
+        val vs = variants(items.map(_.routeId), unmatched)
+        for (q <- Seq(vs(n % vs.length), vs((n + 3) % vs.length))) {
+          val body = RibJson.response(re, rib, f, q)
+          assert(onSparkKeyPass(RibJson.response(re, rib, f, q)) == body, s"$rib '$f' $q")
+        }
+        if (items.nonEmpty) nonEmpty += 1
+        n += 1
+      }
+    }
+    assert(n >= 15 * 6 && nonEmpty >= 15 * 3, s"$n pages, $nonEmpty non-empty")
+  }
+
   /** `evs` written as a rib-partitioned Parquet log under `dir`. */
   private def writeLog(evs: Seq[RouteEvent], dir: java.nio.file.Path, mode: String): Unit =
     df(evs).write.mode(mode).partitionBy("rib").parquet(dir.toString)
@@ -431,53 +484,79 @@ class RibJsonSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("eight pages at once on a fresh log version build one index and answer as each alone") {
+  /** Runs `filters`' ipv4u pages at once on a fresh Parquet log of the
+    * ipv4u slice, asserts that each page's body equals the one it gives
+    * alone on the key pass, and returns the number of the runs' SQL
+    * executions with an aggregate (the key part's build is the only one),
+    * and of those named `ribStateEntries` (the entry part's build). */
+  private def onFreshLog(fs: Seq[String], p: RibJson.RibParams): (Int, Int) = {
     val dir = java.nio.file.Files.createTempDirectory("ribjson_fresh")
     try {
       re.where(col("rib") === "ipv4u").write.mode("overwrite").partitionBy("rib").parquet(dir.toString)
       val log = spark.read.parquet(dir.toString)
-      // seven nets of distinct keys, each the page of its own key and the
-      // keys inside it, and a supernet page
-      val nets = log.select("prefix_str").distinct().orderBy("prefix_str").collect()
-        .map(_.getString(0)).grouped(20).map(_.head).take(7).toSeq
-      val filters = nets :+ "10.3.9.50"
-      val p = RibJson.RibParams(limit = 10, maxDepth = 3)
-      val alone = onSparkKeyPass(filters.map(f => RibJson.response(log, "ipv4u", f, p)))
-      assert(alone.distinct.length == filters.length)
-      // the index build is the only aggregate a key-only page runs
-      val builds = new java.util.concurrent.atomic.AtomicInteger()
+      val alone = onSparkKeyPass(fs.map(f => RibJson.response(log, "ipv4u", f, p)))
+      assert(alone.distinct.length == fs.length, fs.zip(alone).groupBy(_._2).values.filter(_.size > 1)
+        .map(_.map(_._1)))
+      val (aggregates, entryBuilds) =
+        (new java.util.concurrent.atomic.AtomicInteger(), new java.util.concurrent.atomic.AtomicInteger())
       val marker = spark.range(1).toDF()
       @volatile var markerSeen = false
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
         def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
           if (qe eq marker.queryExecution) markerSeen = true
-          else if (qe.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))
-            builds.incrementAndGet()
+          else {
+            if (qe.optimizedPlan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))
+              aggregates.incrementAndGet()
+            if (f == "ribStateEntries") entryBuilds.incrementAndGet()
+          }
         def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(filters.length)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.length)
       spark.listenerManager.register(listener)
       try {
         val start = new java.util.concurrent.CountDownLatch(1)
-        val futures = filters.map { f =>
+        val futures = fs.map { f =>
           pool.submit(new java.util.concurrent.Callable[String] {
             def call(): String = { start.await(); RibJson.response(log, "ipv4u", f, p) }
           })
         }
         start.countDown()
         val together = futures.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
-        filters.indices.foreach(i => assert(together(i) == alone(i), filters(i)))
+        fs.indices.foreach(i => assert(together(i) == alone(i), fs(i)))
         // the listener bus delivers in order: once a marker action's event
         // has arrived, every build's has
         marker.collect()
         val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
         while (!markerSeen && System.nanoTime < deadline) Thread.sleep(5)
-        assert(markerSeen && builds.get == 1, s"${builds.get} index builds")
+        assert(markerSeen)
+        (aggregates.get, entryBuilds.get)
       } finally {
         spark.listenerManager.unregister(listener)
         pool.shutdownNow()
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("eight pages at once on a fresh log version build one index and answer as each alone") {
+    // seven nets of distinct keys, each the page of its own key and the
+    // keys inside it, and a supernet page
+    val nets = re.where(col("rib") === "ipv4u").select("prefix_str").distinct().orderBy("prefix_str")
+      .collect().map(_.getString(0)).grouped(20).map(_.head).take(7).toSeq
+    val (aggregates, entryBuilds) =
+      onFreshLog(nets :+ "10.3.9.50", RibJson.RibParams(limit = 10, maxDepth = 3))
+    // the key part's build is the only aggregate a key-only page runs, and
+    // no key-only page builds the entry part
+    assert(aggregates == 1 && entryBuilds == 0, s"$aggregates key builds, $entryBuilds entry builds")
+  }
+
+  test("eight attribute pages at once on a fresh log version build one entry state") {
+    // attribute terms, alone and beside a net, response filters, and an
+    // attribute term whose page is the supernet fallback
+    val filters = Seq("community:10:25", "as:^101", "re:^100.20", "rt:200:301",
+      "10.4.0.0/14 community:10:5", "-community:10:25", "10.3.9.50 as:^101", "")
+    val (aggregates, entryBuilds) = onFreshLog(filters,
+      RibJson.RibParams(limit = 10, maxDepth = 3, onlyActive = true))
+    assert(aggregates == 1 && entryBuilds == 1, s"$aggregates key builds, $entryBuilds entry builds")
   }
 
   test("statistics json shape") {

@@ -16,7 +16,10 @@ interquartile range. `claim_met` is null for a metric with fewer than
 MIN_CLAIM_PAIRS complete pairs: a win count and quartiles from fewer runs
 cannot back a claim. The summary also holds `shape_p50_ms`: per side, the
 median over runs of each URL shape's `p50_ms` from the report's
-`by_shape`, so a change shows which shapes moved. `--append` adds the runs
+`by_shape`, so a change shows which shapes moved, and
+`shape_change_better_pairs`: per shape, the pairs in which the change's
+p50 was lower, so a shape's movement carries paired evidence, not only
+medians. `--append` adds the runs
 to an existing output file and recomputes the summary over all of them.
 """
 import argparse
@@ -111,13 +114,22 @@ def summarize(runs):
             for r in side[s]:
                 for k, v in r.get("shape_p50_ms", {}).items():
                     shapes[s].setdefault(k, []).append(v)
+        shape_pairs = {}
+        for r in rs:
+            for k, v in r.get("shape_p50_ms", {}).items():
+                shape_pairs.setdefault(k, {}).setdefault(r["pair"], {})[r["tree"]] = v
+        shape_better = {}
+        for k, pairs in sorted(shape_pairs.items()):
+            full = [v for v in pairs.values() if len(v) == 2]
+            shape_better[k] = "%d/%d" % (sum(v["change"] < v["parent"] for v in full), len(full))
         out["%s/trace%d" % (workload, trace)] = {
             "runs": {s: len(side[s]) for s in side},
             "failed_runs": sum(1 for r in rs if not r.get("correct")),
             "median": med, "quartiles": quart, "change_vs_parent": rel,
             "change_better_pairs": better, "claim_met": claim,
             "shape_p50_ms": {s: {k: statistics.median(v) for k, v in sorted(shapes[s].items())}
-                             for s in side}}
+                             for s in side},
+            "shape_change_better_pairs": shape_better}
     return out
 
 
